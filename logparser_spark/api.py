@@ -12,6 +12,16 @@ The reference's routing decision (precomputed summary when no filters,
 live aggregation otherwise — StatisticsService.java:23-53) is kept:
 unfiltered calls read the summary tables written by the aggregate
 stage; filtered calls run the same plans with pushed-down predicates.
+
+The summary fast path runs NO Spark job. The aggregate stage publishes
+each bounded summary as one parquet file already in its canonical
+order; a fast-path call reads that file eagerly with pyarrow and hands
+it to Spark as a local relation, so the quarantine filter and the
+top-K ``limit`` fold into it at planning time and ``collect()`` is a
+driver-side copy — no schema-inference job, no re-sort, no shuffle.
+Live and paged calls read the sink with its schema pinned from a
+parquet footer (``read_sink``), so planning them runs no job either;
+only their scans and aggregations do.
 """
 
 from __future__ import annotations
@@ -160,16 +170,37 @@ class LogPipelineAPI:
         aggregation, never to silently-partial results."""
         import json
 
-        p = os.path.join(self.root, "summary", name, "_meta.json")
-        if not os.path.exists(p):
+        try:
+            with open(os.path.join(self.root, "summary", name, "_meta.json")) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
             return None
-        with open(p) as fh:
-            return json.load(fh)
+
+    def _read_summary(self, name: str) -> DataFrame | None:
+        """The committed summary's rows as a local relation: its parquet
+        files read eagerly by pyarrow in name order (the aggregate stage
+        publishes one file in the operator's canonical order) and handed
+        to ``createDataFrame``. Neither this call nor the caller's
+        collect runs a Spark job. None when the files are gone or torn
+        (a republish swapped the dir under this read) -> live fallback."""
+        import glob
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        files = sorted(glob.glob(os.path.join(self.root, "summary", name, "*.parquet")))
+        if not files:
+            return None
+        try:
+            table = pa.concat_tables([pq.read_table(f) for f in files])
+        except (OSError, pa.ArrowException):
+            return None
+        return self.spark.createDataFrame(table)
 
     def _summary(self, name: str) -> DataFrame | None:
         if self._summary_meta(name) is None:
             return None
-        return self.spark.read.parquet(os.path.join(self.root, "summary", name))
+        return self._read_summary(name)
 
     def _summary_rows(self, name: str) -> int:
         """Row count of a summary table WITHOUT a Spark job (from the
@@ -189,27 +220,20 @@ class LogPipelineAPI:
         """The summary table iff its committed marker can serve a
         request for k rows: it holds >= k rows OR it was never truncated
         (fewer distinct keys than its cap — then it IS the complete
-        ranking and remains valid for any k). Reads the marker ONCE, and
-        the try/except turns a dir vanishing under a concurrent
-        republish (rmtree+rename) DURING PLANNING into a live-aggregation
-        fallback instead of a crash on a half-checked fast path.
+        ranking and remains valid for any k). Reads the marker ONCE.
 
-        Remaining race window (documented, not closed): the returned
-        DataFrame is lazy, so a republish that deletes the summary files
-        between this plan-time check and the caller's collect still
-        raises at execution time. Closing it would mean eagerly pinning
-        the data (cache+count, or snapshotting the file list) on every
-        fast-path call — a full materialization tax on the common case
-        to defend a crash-free-but-retryable failure in a rare one.
-        Callers that need the stronger guarantee retry on failure, which
-        is also what the reference's HTTP layer does on a 500."""
+        No race window remains after this returns: the read is eager
+        (pyarrow loads the rows into the driver before the DataFrame
+        exists), so a republish that deletes or replaces the summary
+        files later cannot affect the returned DataFrame — its collect
+        serves the snapshot that was read. A read that itself races a
+        republish (rmtree+rename) fails inside ``_read_summary``'s try
+        and returns None, i.e. falls back to live aggregation instead
+        of crashing or serving a torn table."""
         meta = self._summary_meta(name)
         if meta is None or not (meta["rows"] >= k or meta.get("exhaustive", False)):
             return None
-        try:
-            return self.spark.read.parquet(os.path.join(self.root, "summary", name))
-        except Exception:
-            return None
+        return self._read_summary(name)
 
     # -- GET /api/logs ------------------------------------------------
     def get_logs(
@@ -276,25 +300,26 @@ class LogPipelineAPI:
         the fast path drops the summary's quarantine category to stay
         consistent with any filtered call."""
         if (flt is None or flt.is_empty()) and (s := self._summary("agg_sink_totals")) is not None:
-            return s.filter(F.col("category") != "quarantine").orderBy("category")
+            return s.filter(F.col("category") != "quarantine")
         return agg.sink_totals(self._facts(flt))
 
     # -- GET /api/top-urls / /api/top-users --------------------------
     # fast path only when the precomputed table can actually satisfy k
-    # (summaries hold top-100/top-10; a larger k falls back to live)
+    # (summaries hold top-100/top-10; a larger k falls back to live);
+    # the published rows are already ranked, so the slice is a limit
 
     def get_top_urls(self, flt: LogFilter | None = None, k: int = 100) -> DataFrame:
         if (flt is None or flt.is_empty()) and (
             s := self._summary_for_k("top_urls", k)
         ) is not None:
-            return s.orderBy(F.desc("request_count"), F.asc("url")).limit(k)  # O9 slice
+            return s.limit(k)  # O9 slice
         return agg.top_urls(self._facts(flt), k=k)
 
     def get_top_users(self, flt: LogFilter | None = None, k: int = 10) -> DataFrame:
         if (flt is None or flt.is_empty()) and (
             s := self._summary_for_k("top_users", k)
         ) is not None:
-            return s.orderBy(F.desc("request_count"), F.asc("username")).limit(k)
+            return s.limit(k)
         return agg.top_users(self._facts(flt), k=k)
 
     # -- GET /api/combined-tops ---------------------------------------
@@ -317,12 +342,12 @@ class LogPipelineAPI:
     # live distinct only when the summary is absent
     def get_statuses(self) -> DataFrame:
         if (s := self._summary("dim_statuses")) is not None:
-            return s.orderBy("status_code")
+            return s
         s, _ = agg.distinct_dims(read_sink(self.spark, self.root))
         return s
 
     def get_actions(self) -> DataFrame:
         if (a := self._summary("dim_actions")) is not None:
-            return a.orderBy("action")
+            return a
         _, a = agg.distinct_dims(read_sink(self.spark, self.root))
         return a

@@ -257,19 +257,40 @@ def _run_pipeline_inner(
 
 
 def run_aggregates(spark: SparkSession, out_root: str) -> dict[str, DataFrame]:
-    """The post-load aggregate stage (C2/C3 analog): summary tables
-    computed from the routed sinks and written under <root>/summary/.
+    """The post-load aggregate stage (C2/C3 analog): eight summary
+    tables computed from the routed sinks and published under
+    <root>/summary/<name>/.
 
-    The five summary jobs are submitted CONCURRENTLY from driver
-    threads: each is a small column-pruned scan + aggregate that cannot
-    fill the cluster alone, so interleaving them keeps every core busy
-    and the stage wall-clock is ~max(job) instead of sum(jobs). (An
-    explicit cache of a shared projection was measured SLOWER — it
-    materializes all columns, while per-job parquet column pruning
-    reads only the 2-5 columns each aggregate needs.)
+    Seven of them are BOUNDED — ``agg_sink_totals``, ``agg_status_hist``
+    and ``agg_hourly_hist`` by categories x status classes or hours,
+    ``top_urls``/``top_users`` by their k caps, ``dim_statuses`` and
+    ``dim_actions`` by the status/action vocabulary. Each is collected
+    to the driver with ``toArrow()`` and written by pyarrow as exactly
+    ONE parquet file holding the rows in the operator's canonical order
+    (the ``orderBy`` each operator ends with). That is the contract the
+    API fast path relies on: it reads the file back with pyarrow and
+    serves it as a local relation — no Spark job, no re-sort.
+    ``agg_daily_rollup`` (username x status x day) grows with the data
+    and no endpoint serves it, so it keeps the distributed Spark writer
+    rather than funnelling through the driver.
+
+    The eight jobs are submitted CONCURRENTLY from driver threads: each
+    is a small column-pruned scan + aggregate that cannot fill the
+    cluster alone, so interleaving them keeps every core busy and the
+    stage wall-clock is ~max(job) instead of sum(jobs). (An explicit
+    cache of a shared projection was measured SLOWER — it materializes
+    all columns, while per-job parquet column pruning reads only the
+    2-5 columns each aggregate needs.)
     """
+    import glob as _glob
+    import json
     import os
+    import shutil as _shutil
     from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow.parquet as pq
+
+    from logparser_spark.sources.sinks import footer_row_count
 
     df = read_sink(spark, out_root)
     dim_statuses, dim_actions = agg.distinct_dims(df)
@@ -285,12 +306,6 @@ def run_aggregates(spark: SparkSession, out_root: str) -> dict[str, DataFrame]:
         "dim_statuses": dim_statuses,
         "dim_actions": dim_actions,
     }
-
-    import glob as _glob
-    import json
-    import shutil as _shutil
-
-    from logparser_spark.sources.sinks import footer_row_count
 
     # truncation caps of the top-K summaries (run above with defaults):
     # a result SHORTER than its cap saw every distinct key, so the API
@@ -308,7 +323,13 @@ def run_aggregates(spark: SparkSession, out_root: str) -> dict[str, DataFrame]:
         name, res = item
         tmp = os.path.join(out_root, "summary", f"_tmp_{name}")
         final = os.path.join(out_root, "summary", name)
-        res.write.mode("overwrite").parquet(tmp)
+        if name == "agg_daily_rollup":
+            res.write.mode("overwrite").parquet(tmp)
+        else:
+            table = res.toArrow()  # rows in the operator's order
+            _shutil.rmtree(tmp, ignore_errors=True)  # crashed attempt's leftover
+            os.makedirs(tmp)
+            pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
         rows = footer_row_count(_glob.glob(os.path.join(tmp, "*.parquet")))
         cap = k_caps.get(name)
         meta = {"rows": rows, "exhaustive": cap is None or rows < cap}

@@ -56,7 +56,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import SparkSession
 
 from logparser_spark.plans.checkpoint import Manifest
-from logparser_spark.sources.sinks import footer_row_count
+from logparser_spark.sources.sinks import footer_row_count, footer_schema
 
 _COMPACT_RX = re.compile(r"^(compact-\d{5})-")
 # every live data file carries its generation prefix (the writer's
@@ -183,9 +183,11 @@ def compact_sinks(
         rel = os.path.relpath(pdir, _data_dir(out_root))
         stage = os.path.join(staging, rel)
         # read the leaf files directly (partition cols live in the dir
-        # name, not the rows) and bin-pack to n_out files
+        # name, not the rows) and bin-pack to n_out files; the footer
+        # schema spares one schema-inference job per partition
         (
-            spark.read.parquet(*files)
+            spark.read.schema(footer_schema(files[0]))
+            .parquet(*files)
             .coalesce(n_out)
             .write.mode("overwrite")
             .option("compression", compression)

@@ -40,3 +40,24 @@ def tiny_lines():
     from logparser_spark.fixtures import generate_partitioned_lines
 
     return pd.concat(generate_partitioned_lines(10_000, 8), ignore_index=True)
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn) -> (fn(), n)``: call ``fn`` and count the Spark
+    jobs it ran (outside any job group) via the status tracker. The
+    listener bus is drained before each read so a job that ran is never
+    missed, and only ids above the pre-call maximum count, so the
+    tracker's eviction of old jobs cannot hide new ones."""
+    sc = spark.sparkContext
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return sc.statusTracker().getJobIdsForGroup(None)
+
+    def run(fn):
+        before = max(job_ids(), default=-1)
+        out = fn()
+        return out, sum(1 for j in job_ids() if j > before)
+
+    return run

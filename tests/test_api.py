@@ -196,3 +196,90 @@ def test_summary_fast_path_eligibility(spark, tmp_path):
     for f in d.glob("*.parquet"):
         f.unlink()
     assert api2._summary_for_k("top_urls", 10) is None
+
+
+# the five summary endpoints and the parameters the fast path serves
+SUMMARY_ENDPOINTS = [
+    ("statistics", {}),
+    ("top_urls", {"k": 10}),
+    ("top_users", {"k": 10}),
+    ("statuses", {}),
+    ("actions", {}),
+]
+
+
+def test_summary_endpoints_run_no_spark_job(api, spark_jobs):
+    """A cache miss on any unfiltered summary endpoint is served from
+    the published file alone: zero Spark jobs through collect_cached.
+    A filtered (live) call through the same counter runs jobs, so the
+    zero is not an artifact of the counter."""
+    from functools import partial
+
+    from logparser_spark.cache import TTLResultCache
+
+    fresh = LogPipelineAPI(api.spark, api.root, cache=TTLResultCache())
+    for endpoint, params in SUMMARY_ENDPOINTS:
+        rows, jobs = spark_jobs(partial(fresh.collect_cached, endpoint, **params))
+        assert rows and jobs == 0, (endpoint, jobs)
+    _, jobs = spark_jobs(
+        partial(fresh.collect_cached, "statistics", LogFilter(action="TCP_DENIED"))
+    )
+    assert jobs > 0
+
+
+def test_fast_path_rows_equal_live(api):
+    """Every fast-path answer equals the live aggregation it stands in
+    for, row for row and in order — the published order is the only
+    ordering the fast path has (it no longer re-sorts)."""
+    from logparser_spark.operators import aggregates as agg
+    from logparser_spark.sources.sinks import read_sink
+
+    facts = api._facts(None)
+    statuses, actions = agg.distinct_dims(read_sink(api.spark, api.root))
+    cap = 100  # top_urls' summary cap
+    assert api._summary_for_k("top_urls", cap) is not None  # k=cap is fast too
+    cases = {
+        "statistics": (api.get_statistics(), agg.sink_totals(facts)),
+        "top_urls k=10": (api.get_top_urls(k=10), agg.top_urls(facts, k=10)),
+        "top_urls k=cap": (api.get_top_urls(k=cap), agg.top_urls(facts, k=cap)),
+        "top_users": (api.get_top_users(k=10), agg.top_users(facts, k=10)),
+        "statuses": (api.get_statuses(), statuses),
+        "actions": (api.get_actions(), actions),
+    }
+    for name, (fast, live) in cases.items():
+        got = [tuple(r) for r in fast.collect()]
+        assert got and got == [tuple(r) for r in live.collect()], name
+
+
+def test_fast_path_dataframe_survives_republish(spark, tmp_path, spark_jobs):
+    """The fast path reads eagerly, so no race window is left once it
+    returns: after the summary dir is deleted and republished with
+    other rows, collect() on the earlier DataFrame still serves the
+    snapshot it read (with no Spark job), and a new call sees the
+    republished rows."""
+    import json
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    api2 = LogPipelineAPI(spark, str(tmp_path))
+    d = tmp_path / "summary" / "top_urls"
+
+    def publish(rows):
+        shutil.rmtree(d, ignore_errors=True)
+        d.mkdir(parents=True)
+        urls, counts = zip(*rows)
+        pq.write_table(
+            pa.table({"url": list(urls), "request_count": list(counts)}),
+            str(d / "part-00000.parquet"),
+        )
+        (d / "_meta.json").write_text(json.dumps({"rows": len(rows), "exhaustive": True}))
+
+    publish([("/a", 3), ("/b", 1)])
+    df = api2.get_top_urls(k=10)
+    publish([("/c", 9)])
+    rows, jobs = spark_jobs(df.collect)
+    assert [tuple(r) for r in rows] == [("/a", 3), ("/b", 1)]
+    assert jobs == 0
+    assert [tuple(r) for r in api2.get_top_urls(k=10).collect()] == [("/c", 9)]

@@ -263,12 +263,73 @@ def test_manifest_partition_watermarks(spark, tiny_input, tmp_path_factory):
     assert seen > 0
 
 
+# summaries bounded by categories x classes/hours, k caps or vocabulary
+BOUNDED_SUMMARIES = {
+    "agg_sink_totals": agg.sink_totals,
+    "agg_status_hist": agg.status_hist,
+    "agg_hourly_hist": agg.hourly_hist,
+    "top_urls": agg.top_urls,
+    "top_users": agg.top_users,
+    "dim_statuses": lambda df: agg.distinct_dims(df)[0],
+    "dim_actions": lambda df: agg.distinct_dims(df)[1],
+}
+
+
 def test_summary_tables_written(spark, pipeline_out):
-    import os
+    """The publish contract the API fast path relies on: each bounded
+    summary dir holds exactly one parquet file whose rows are the
+    operator's output in its canonical order (the fast path serves
+    them without re-sorting). The unbounded daily rollup keeps the
+    Spark writer, still behind its commit marker."""
+    import glob
+
+    import pyarrow.parquet as pq
 
     run_aggregates(spark, pipeline_out)
-    for t in ["agg_sink_totals", "agg_status_hist", "agg_hourly_hist", "top_urls", "top_users"]:
-        assert os.path.exists(os.path.join(pipeline_out, "summary", t))
+    df = read_sink(spark, pipeline_out)
+    for name, op in BOUNDED_SUMMARIES.items():
+        files = glob.glob(os.path.join(pipeline_out, "summary", name, "*.parquet"))
+        assert len(files) == 1, (name, files)
+        got = [tuple(r.values()) for r in pq.read_table(files[0]).to_pylist()]
+        assert got and got == [tuple(r) for r in op(df).collect()], name
+    rollup = os.path.join(pipeline_out, "summary", "agg_daily_rollup")
+    assert os.path.exists(os.path.join(rollup, "_meta.json"))
+    assert glob.glob(os.path.join(rollup, "*.parquet"))
+
+
+def test_read_sink_pins_inferred_schema_without_a_job(spark, pipeline_out, spark_jobs):
+    """read_sink's footer-pinned schema is exactly what inference
+    yields — same data columns in the same order, then the discovered
+    ``category`` (string) and ``day`` (date) partition columns — and
+    planning it runs no Spark job, where inference runs at least one."""
+    data = os.path.join(pipeline_out, "data")
+    inferred, infer_jobs = spark_jobs(
+        lambda: spark.read.option("basePath", data).parquet(data)
+    )
+    pinned, jobs = spark_jobs(lambda: read_sink(spark, pipeline_out))
+    assert jobs == 0 and infer_jobs >= 1
+    assert pinned.schema == inferred.schema
+    assert [(f.name, f.dataType.simpleString()) for f in pinned.schema[-2:]] == [
+        ("category", "string"),
+        ("day", "date"),
+    ]
+    _, jobs = spark_jobs(lambda: read_sink(spark, pipeline_out, category="success"))
+    assert jobs == 0
+
+
+def test_read_sink_without_data_raises_as_before(spark, tmp_path):
+    """No data file -> read_sink makes the unpinned call, so a missing
+    data dir and an empty one raise the same errors as plain inference."""
+    from pyspark.errors import AnalysisException
+
+    data = tmp_path / "data"
+    for condition in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+        with pytest.raises(AnalysisException) as plain:
+            spark.read.option("basePath", str(data)).parquet(str(data))
+        with pytest.raises(AnalysisException) as got:
+            read_sink(spark, str(tmp_path))
+        assert got.value.getCondition() == plain.value.getCondition() == condition
+        data.mkdir(exist_ok=True)  # next round: the dir exists, holds no file
 
 
 def test_counts_exact_under_speculation(tiny_input, tmp_path_factory):
