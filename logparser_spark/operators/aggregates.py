@@ -7,6 +7,12 @@ under Zipf traffic, category=success) go through an explicit two-phase
 salted groupBy (see ``salted_topk``) — partials on (key, salt), final
 on key — per the north rule.
 
+The publish path computes the five vocabulary-bounded summaries in one
+GROUPING SETS aggregate (``bounded_summaries`` + ``split_bounded``),
+built from the same declarations as the live operators
+(``totals_aggs``, ``utc_hour_expr``, ``status_class_expr``), so the
+published and live answers cannot drift apart.
+
 Semantics parity (reference):
 - totals:       StatisticsService.calculateRealTimeStats (java:75-165)
 - status hist:  StatisticsService.java:99-123 (CASE buckets)
@@ -19,6 +25,8 @@ Semantics parity (reference):
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -30,6 +38,42 @@ def _round_java(c: Column) -> Column:
     return F.floor(c + F.lit(0.5)).cast("long")
 
 
+def utc_hour_expr() -> Column:
+    """The event's UTC hour of day (0-23) — the ONE hour bucketing of
+    ``hourly_hist`` and of the fused publish (``bounded_summaries``).
+
+    Epoch arithmetic, NOT F.hour(): hour()/date_format() honor
+    spark.sql.session.timeZone, so a consumer with an unpinned session
+    would bucket the same row differently than the UTC contract (and
+    than data written under a pinned session). Floor-division form (div
+    truncates toward zero): a pre-epoch timestamp must bucket to 0..23,
+    not a negative slot the dense explode(0..23) would silently drop.
+    (The pipeline's own parse only admits unsigned epochs, but the
+    operator is generic.)"""
+    return F.expr(
+        "cast(pmod((unix_timestamp(time) - pmod(unix_timestamp(time), 3600))"
+        " div 3600, 24) as int)"
+    )
+
+
+def totals_aggs(approx_distinct: bool = False) -> list[Column]:
+    """The per-group expressions of ``sink_totals`` — declared once,
+    shared by the live operator and the fused publish."""
+    distinct_ips = (
+        F.approx_count_distinct("ip") if approx_distinct else F.countDistinct("ip")
+    )
+    return [
+        F.count(F.lit(1)).alias("row_count"),
+        F.count(F.when(F.col("status_code") >= 400, 1)).alias("error_count"),
+        distinct_ips.alias("unique_ips"),
+        F.coalesce(F.sum("response_size_bytes"), F.lit(0)).alias("bytes_total"),
+        F.coalesce(
+            _round_java(F.avg(F.when(F.col("response_time_ms") > 0, F.col("response_time_ms")))),
+            F.lit(0),
+        ).alias("avg_response_time_ms"),
+    ]
+
+
 def sink_totals(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
     """Per-category: A1 count, A2 errors, A3 distinct ip, A6 avg rt
     (rt>0 only), A7 bytes sum — one pass, one shuffle on category.
@@ -39,23 +83,7 @@ def sink_totals(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
     for 10^12-row scale, where the exact distinct forces a per-category
     ip expansion. Tests pin the exact path; the approx path is asserted
     within tolerance."""
-    distinct_ips = (
-        F.approx_count_distinct("ip") if approx_distinct else F.countDistinct("ip")
-    )
-    return (
-        df.groupBy("category")
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.count(F.when(F.col("status_code") >= 400, 1)).alias("error_count"),
-            distinct_ips.alias("unique_ips"),
-            F.coalesce(F.sum("response_size_bytes"), F.lit(0)).alias("bytes_total"),
-            F.coalesce(
-                _round_java(F.avg(F.when(F.col("response_time_ms") > 0, F.col("response_time_ms")))),
-                F.lit(0),
-            ).alias("avg_response_time_ms"),
-        )
-        .orderBy("category")
-    )
+    return df.groupBy("category").agg(*totals_aggs(approx_distinct)).orderBy("category")
 
 
 def status_hist(df: DataFrame) -> DataFrame:
@@ -77,21 +105,9 @@ def hourly_hist(df: DataFrame) -> DataFrame:
     happens on the (category, hour) aggregate itself: collapse each
     category's sparse counts into a map, then explode hours 0-23 against
     it. The second groupBy shuffles only #categories x 24 rows."""
-    # UTC hour via epoch arithmetic, NOT F.hour(): hour()/date_format()
-    # honor spark.sql.session.timeZone, so a consumer with an unpinned
-    # session would bucket the same row differently than the UTC
-    # contract (and than data written under a pinned session).
-    # Floor-division form (div truncates toward zero): a pre-epoch
-    # timestamp must bucket to 0..23, not a negative slot the dense
-    # explode(0..23) would silently drop. (The pipeline's own parse
-    # only admits unsigned epochs, but the operator is generic.)
-    utc_hour = F.expr(
-        "cast(pmod((unix_timestamp(time) - pmod(unix_timestamp(time), 3600))"
-        " div 3600, 24) as int)"
-    )
     counts = (
         df.filter(F.col("valid") == 1)
-        .groupBy("category", utc_hour.alias("hour"))
+        .groupBy("category", utc_hour_expr().alias("hour"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     dense = counts.groupBy("category").agg(
@@ -239,11 +255,121 @@ def distinct_dims(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return statuses, actions
 
 
+# The summaries whose key sets are bounded by vocabularies — categories,
+# status classes, hours, HTTP status codes, Squid actions — each with
+# its grouping set in ``bounded_summaries``.
+_BOUNDED_KEYS = ("category", "status_class", "hour", "status_code", "action")
+_BOUNDED_SETS = {
+    "agg_sink_totals": ("category",),
+    "agg_status_hist": ("category", "status_class"),
+    "agg_hourly_hist": ("category", "hour"),
+    "dim_statuses": ("status_code",),
+    "dim_actions": ("action",),
+}
+
+
+def _set_id(keys: tuple[str, ...]) -> int:
+    """``grouping_id()`` of the set grouped by ``keys``: bit i, counted
+    from the most significant, is set when _BOUNDED_KEYS[i] is
+    aggregated away."""
+    n = len(_BOUNDED_KEYS)
+    return sum(1 << (n - 1 - i) for i, k in enumerate(_BOUNDED_KEYS) if k not in keys)
+
+
+def bounded_summaries(df: DataFrame) -> DataFrame:
+    """The five ``_BOUNDED_SETS`` summaries from ONE scan and one
+    aggregate: GROUPING SETS over (category), (category, status_class),
+    (category, hour), (status_code) and (action), each row tagged with
+    its set's ``grouping_id()`` in ``_set``. Every set carries
+    ``totals_aggs()`` plus ``valid_count`` (rows with valid = 1), so the
+    histograms, which count valid rows only, need no filtered pass of
+    their own. The result is a few hundred rows at most: collect it with
+    ``toArrow()`` and hand it to ``split_bounded``."""
+    keyed = df.withColumns(
+        {"status_class": status_class_expr(F.col("status_code")), "hour": utc_hour_expr()}
+    )
+    return keyed.groupingSets(
+        [list(keys) for keys in _BOUNDED_SETS.values()], *_BOUNDED_KEYS
+    ).agg(
+        F.grouping_id().alias("_set"),
+        *totals_aggs(),
+        F.count(F.when(F.col("valid") == 1, 1)).alias("valid_count"),
+    )
+
+
+def split_bounded(table: pa.Table) -> dict[str, pa.Table]:
+    """``bounded_summaries`` rows, collected, as the five summary tables
+    keyed by their published names. Each equals its operator's ``toArrow()``
+    — same rows, same Arrow schema, same canonical order (ascending keys,
+    nulls first, as the operator's ``orderBy`` sorts):
+
+    - ``agg_sink_totals`` (``sink_totals``): the (category) rows;
+    - ``agg_status_hist`` (``status_hist``): groups with valid rows,
+      counting those;
+    - ``agg_hourly_hist`` (``hourly_hist``): likewise, densified to hours
+      0-23 for every category with valid rows;
+    - ``dim_statuses`` / ``dim_actions`` (``distinct_dims``): the keys,
+      minus a null or <= 0 status code and a null or '-' action."""
+
+    def rows(name: str, *cols: str, valid_only: bool = False) -> pa.Table:
+        keys = _BOUNDED_SETS[name]
+        keep = pc.equal(table["_set"], _set_id(keys))
+        if valid_only:
+            keep = pc.and_(keep, pc.greater(table["valid_count"], 0))
+        return (
+            table.filter(keep)
+            .sort_by([(k, "ascending") for k in keys], null_placement="at_start")
+            .select([*keys, *cols])
+        )
+
+    totals = [c for c in table.column_names if c not in (*_BOUNDED_KEYS, "_set", "valid_count")]
+    status = rows("agg_status_hist", "valid_count", valid_only=True)
+    status_schema = pa.schema(
+        [
+            status.schema.field("category"),
+            status.schema.field("status_class").with_nullable(False),
+            pa.field("row_count", pa.int64(), nullable=False),
+        ]
+    )
+    hourly = rows("agg_hourly_hist", "valid_count", valid_only=True)
+    hourly_schema = pa.schema(
+        [
+            hourly.schema.field("category"),
+            hourly.schema.field("hour").with_nullable(False),
+            pa.field("row_count", pa.int64(), nullable=False),
+        ]
+    )
+    counts = dict(
+        zip(
+            zip(hourly["category"].to_pylist(), hourly["hour"].to_pylist()),
+            hourly["valid_count"].to_pylist(),
+        )
+    )
+    cats = pc.unique(hourly["category"]).to_pylist()  # sorted: first-seen order
+    hours = range(24)
+    statuses = rows("dim_statuses")
+    actions = rows("dim_actions")
+    return {
+        "agg_sink_totals": rows("agg_sink_totals", *totals),
+        "agg_status_hist": status.rename_columns(status_schema.names).cast(status_schema),
+        "agg_hourly_hist": pa.table(
+            [
+                [c for c in cats for _ in hours],
+                [h for _ in cats for h in hours],
+                [counts.get((c, h), 0) for c in cats for h in hours],
+            ],
+            schema=hourly_schema,
+        ),
+        "dim_statuses": statuses.filter(pc.greater(statuses["status_code"], 0)),
+        "dim_actions": actions.filter(pc.not_equal(actions["action"], "-")),
+    }
+
+
 def daily_rollup(df: DataFrame) -> DataFrame:
     """A12: the declared matview GROUP BY username, status_code, day
     (schema.sql:40-47)."""
     # UTC midnight via epoch arithmetic (date_trunc honors the session
-    # timezone — see hourly_hist); floor-division form so pre-epoch
+    # timezone — see utc_hour_expr); floor-division form so pre-epoch
     # rows round DOWN to their own day, not up toward 1970-01-01
     utc_day = F.timestamp_seconds(
         F.expr("unix_timestamp(time) - pmod(unix_timestamp(time), 86400)")

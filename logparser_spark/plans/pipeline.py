@@ -256,33 +256,32 @@ def _run_pipeline_inner(
     return out
 
 
-def run_aggregates(spark: SparkSession, out_root: str) -> dict[str, DataFrame]:
-    """The post-load aggregate stage (C2/C3 analog): eight summary
+def run_aggregates(spark: SparkSession, out_root: str) -> dict[str, int]:
+    """The post-load aggregate stage (C2/C3 analog): seven summary
     tables computed from the routed sinks and published under
-    <root>/summary/<name>/.
+    <root>/summary/<name>/. Returns each table's published row count.
 
-    Seven of them are BOUNDED — ``agg_sink_totals``, ``agg_status_hist``
-    and ``agg_hourly_hist`` by categories x status classes or hours,
-    ``top_urls``/``top_users`` by their k caps, ``dim_statuses`` and
-    ``dim_actions`` by the status/action vocabulary. Each is collected
-    to the driver with ``toArrow()`` and written by pyarrow as exactly
-    ONE parquet file holding the rows in the operator's canonical order
-    (the ``orderBy`` each operator ends with). That is the contract the
-    API fast path relies on: it reads the file back with pyarrow and
-    serves it as a local relation — no Spark job, no re-sort.
-    ``agg_daily_rollup`` (username x status x day) grows with the data
-    and no endpoint serves it, so it keeps the distributed Spark writer
-    rather than funnelling through the driver.
+    Every table is bounded, and the stage runs three Spark queries over
+    the sink, submitted together from driver threads:
 
-    The eight jobs are submitted CONCURRENTLY from driver threads: each
-    is a small column-pruned scan + aggregate that cannot fill the
-    cluster alone, so interleaving them keeps every core busy and the
-    stage wall-clock is ~max(job) instead of sum(jobs). (An explicit
-    cache of a shared projection was measured SLOWER — it materializes
-    all columns, while per-job parquet column pruning reads only the
-    2-5 columns each aggregate needs.)
+    - ``agg.bounded_summaries``: one GROUPING SETS scan and aggregate for
+      the five tables whose keys are bounded by vocabularies
+      (``agg_sink_totals``, ``agg_status_hist``, ``agg_hourly_hist``,
+      ``dim_statuses``, ``dim_actions``). Its few hundred rows are
+      collected with one ``toArrow()`` and split on the driver by
+      ``agg.split_bounded``, which emits each table in its operator's
+      canonical order and with its operator's Arrow schema;
+    - ``agg.top_urls`` and ``agg.top_users``: their url and username key
+      sets grow with the data, so ranking them stays a distributed salted
+      aggregate ending in TakeOrderedAndProject; only the top k rows (the
+      caps below) reach the driver.
+
+    Each table is written by pyarrow as exactly ONE parquet file holding
+    its rows in that order. That is the contract the API fast path
+    relies on: it reads the file back with pyarrow and serves it as a
+    local relation — no Spark job, no re-sort. The username x status x
+    day ``agg.daily_rollup`` is not published: no endpoint serves it.
     """
-    import glob as _glob
     import json
     import os
     import shutil as _shutil
@@ -290,64 +289,44 @@ def run_aggregates(spark: SparkSession, out_root: str) -> dict[str, DataFrame]:
 
     import pyarrow.parquet as pq
 
-    from logparser_spark.sources.sinks import footer_row_count
-
     df = read_sink(spark, out_root)
-    dim_statuses, dim_actions = agg.distinct_dims(df)
-    results = {
-        "agg_sink_totals": agg.sink_totals(df),
-        "agg_status_hist": agg.status_hist(df),
-        "agg_hourly_hist": agg.hourly_hist(df),
-        "agg_daily_rollup": agg.daily_rollup(df),
+    queries = {
+        "bounded": agg.bounded_summaries(df),
         "top_urls": agg.top_urls(df),
         "top_users": agg.top_users(df),
-        # dim vocabularies, populated at load time like the reference's
-        # dim tables (DatabaseManager.java:460-492)
-        "dim_statuses": dim_statuses,
-        "dim_actions": dim_actions,
     }
+    with ThreadPoolExecutor(max_workers=len(queries)) as pool:
+        tables = dict(zip(queries, pool.map(lambda q: q.toArrow(), queries.values())))
+    tables.update(agg.split_bounded(tables.pop("bounded")))
 
     # truncation caps of the top-K summaries (run above with defaults):
     # a result SHORTER than its cap saw every distinct key, so the API
     # fast path can serve ANY k from it ("exhaustive")
     k_caps = {"top_urls": 100, "top_users": 10}
 
-    def write(item):
+    def publish(name: str, table) -> int:
         """Publish one summary ATOMICALLY: write to a _tmp_ dir, put
         the row-count/commit marker (_meta.json) INSIDE it, then swap
         via rename. A crash mid-write leaves either the old committed
         dir or no dir (API falls back to live aggregation) — never a
         partial dir a fast path would serve silently-wrong results
-        from. (Spark's overwrite mode alone is delete-then-write with
-        no commit point.)"""
-        name, res = item
+        from."""
         tmp = os.path.join(out_root, "summary", f"_tmp_{name}")
         final = os.path.join(out_root, "summary", name)
-        if name == "agg_daily_rollup":
-            res.write.mode("overwrite").parquet(tmp)
-        else:
-            table = res.toArrow()  # rows in the operator's order
-            _shutil.rmtree(tmp, ignore_errors=True)  # crashed attempt's leftover
-            os.makedirs(tmp)
-            pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-        rows = footer_row_count(_glob.glob(os.path.join(tmp, "*.parquet")))
+        _shutil.rmtree(tmp, ignore_errors=True)  # crashed attempt's leftover
+        os.makedirs(tmp)
+        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
         cap = k_caps.get(name)
-        meta = {"rows": rows, "exhaustive": cap is None or rows < cap}
+        meta = {"rows": table.num_rows, "exhaustive": cap is None or table.num_rows < cap}
         with open(os.path.join(tmp, "_meta.json"), "w") as fh:
             json.dump(meta, fh)
         _shutil.rmtree(final, ignore_errors=True)
         os.rename(tmp, final)
-        return name, rows
+        return table.num_rows
 
-    with ThreadPoolExecutor(max_workers=len(results)) as pool:
-        ks = dict(pool.map(write, results.items()))
-
-    # legacy aggregate count file (per-dir _meta.json is the source of
-    # truth; this keeps older readers working)
-    with open(os.path.join(out_root, "summary", "_k.json"), "w") as fh:
-        json.dump(ks, fh)
+    rows = {name: publish(name, table) for name, table in tables.items()}
     # C4: summaries republished — evict live response caches
     from logparser_spark.cache import invalidate_registered
 
     invalidate_registered()
-    return results
+    return rows

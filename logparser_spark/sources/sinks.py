@@ -237,7 +237,7 @@ class MultiSinkWriter:
 def footer_row_count(paths) -> int:
     """Sum parquet footer row counts — exact, metadata-only, no Spark
     job. The one shared implementation behind every footer-count use
-    (chunk counts, summary _k.json, API fast-path fallback)."""
+    (chunk counts, API fast-path fallback)."""
     import pyarrow.parquet as pq
 
     return sum(pq.ParquetFile(f).metadata.num_rows for f in paths)

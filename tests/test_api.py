@@ -119,17 +119,21 @@ def test_combined_tops_matches_individual_endpoints(api):
     ]
 
 
-def test_summary_rows_recorded_no_spark_count(api):
-    """Fast-path eligibility reads summary/_k.json (written by the
-    aggregate stage), not a per-call Spark count()."""
+def test_summary_rows_recorded_no_spark_count(api, spark_jobs):
+    """Fast-path eligibility reads the row count the aggregate stage
+    recorded in the summary's _meta.json, not a per-call Spark count():
+    it equals the published file's footer count, and no job runs."""
+    import glob
     import json
     import os
 
-    kpath = os.path.join(api.root, "summary", "_k.json")
-    assert os.path.exists(kpath)
-    ks = json.load(open(kpath))
-    assert ks["top_urls"] == api._summary("top_urls").count()
-    assert api._summary_rows("top_urls") == ks["top_urls"]
+    from logparser_spark.sources.sinks import footer_row_count
+
+    d = os.path.join(api.root, "summary", "top_urls")
+    rows, jobs = spark_jobs(lambda: api._summary_rows("top_urls"))
+    assert jobs == 0
+    assert rows == json.load(open(os.path.join(d, "_meta.json")))["rows"]
+    assert rows == footer_row_count(glob.glob(os.path.join(d, "*.parquet"))) > 0
 
 
 def test_empty_string_filter_keeps_fast_path(api):

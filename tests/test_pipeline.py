@@ -279,8 +279,8 @@ def test_summary_tables_written(spark, pipeline_out):
     """The publish contract the API fast path relies on: each bounded
     summary dir holds exactly one parquet file whose rows are the
     operator's output in its canonical order (the fast path serves
-    them without re-sorting). The unbounded daily rollup keeps the
-    Spark writer, still behind its commit marker."""
+    them without re-sorting). The unserved daily rollup is no longer
+    published."""
     import glob
 
     import pyarrow.parquet as pq
@@ -292,9 +292,100 @@ def test_summary_tables_written(spark, pipeline_out):
         assert len(files) == 1, (name, files)
         got = [tuple(r.values()) for r in pq.read_table(files[0]).to_pylist()]
         assert got and got == [tuple(r) for r in op(df).collect()], name
-    rollup = os.path.join(pipeline_out, "summary", "agg_daily_rollup")
-    assert os.path.exists(os.path.join(rollup, "_meta.json"))
-    assert glob.glob(os.path.join(rollup, "*.parquet"))
+    assert not os.path.exists(os.path.join(pipeline_out, "summary", "agg_daily_rollup"))
+
+
+def test_publish_runs_nine_spark_jobs(spark, pipeline_out, spark_jobs):
+    """The publish is three queries: the fused bounded summaries and the
+    two salted top-K plans — 9 Spark jobs in all on this fixture."""
+    _, jobs = spark_jobs(lambda: run_aggregates(spark, pipeline_out))
+    assert jobs == 9
+
+
+def _plan_nodes(node):
+    """Every node of an executed physical plan, descending through the
+    adaptive wrapper and its query stages."""
+    yield node
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        kids = [node.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    else:
+        seq = node.children()
+        kids = [seq.apply(i) for i in range(seq.size())]
+    for kid in kids:
+        yield from _plan_nodes(kid)
+
+
+def test_bounded_summaries_scan_the_sink_once(spark, pipeline_out):
+    """The five bounded summaries cost one read of the sink: the fused
+    query's executed plan holds exactly one parquet scan node."""
+    q = agg.bounded_summaries(read_sink(spark, pipeline_out))
+    q.toArrow()  # the adaptive plan is final once executed
+    scans = [
+        n
+        for n in _plan_nodes(q._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+    assert len(scans) == 1
+    assert scans[0].nodeName().startswith("Scan parquet")
+
+
+def test_split_bounded_equals_operators_on_edge_cases(spark):
+    """Each table ``split_bounded`` cuts from the fused query equals its
+    operator's own ``toArrow()`` — rows, order and Arrow schema — on
+    rows built to hit every special case of the split. The columns are
+    those the summaries read, with the sink's types."""
+    from datetime import datetime
+
+    schema = (
+        "category string, valid int, status_code int, action string, ip string,"
+        " response_size_bytes bigint, response_time_ms int, time timestamp"
+    )
+    t = datetime(2024, 3, 5, 10, 15)
+    rows = [
+        # a category with quarantine (invalid) rows only
+        ("quarantine", 0, None, None, None, None, None, None),
+        ("quarantine", 0, 0, "-", "10.0.0.9", 7, -1, t),
+        # a category whose valid rows all fall in one hour
+        ("denied", 1, 403, "TCP_DENIED", "10.0.0.1", 10, 5, t),
+        ("denied", 1, 407, "TCP_DENIED", "10.0.0.2", 20, 7, datetime(2024, 3, 6, 10, 59)),
+        ("denied", 0, 403, "TCP_DENIED", "10.0.0.2", 1, 1, datetime(2024, 3, 6, 3)),
+        # status codes null, 0 and negative; actions null and '-';
+        # response times all <= 0; bytes null throughout
+        ("other", 1, None, None, "10.0.0.3", None, 0, datetime(2024, 3, 5, 23, 30)),
+        ("other", 1, 0, "-", "10.0.0.3", None, -3, datetime(1969, 12, 31, 22, 30)),
+        ("other", 1, -5, "NONE", None, None, -1, t),
+        # an ordinary category: one null byte count among the rest
+        ("success", 1, 200, "TCP_HIT", "10.0.0.4", 100, 30, t),
+        ("success", 1, 304, "TCP_MISS", "10.0.0.5", None, 12, datetime(2024, 3, 5, 0, 1)),
+        ("success", 1, 200, "TCP_MISS", "10.0.0.4", 50, 9, datetime(2024, 3, 5, 13)),
+        ("error", 1, 503, "TCP_MISS", "10.0.0.6", 0, 1000, t),
+        # a null category sorts first, as the operators' orderBy puts it
+        (None, 1, 200, "TCP_HIT", "10.0.0.7", 1, 1, t),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    statuses, actions = agg.distinct_dims(df)
+    ops = {
+        "agg_sink_totals": agg.sink_totals(df),
+        "agg_status_hist": agg.status_hist(df),
+        "agg_hourly_hist": agg.hourly_hist(df),
+        "dim_statuses": statuses,
+        "dim_actions": actions,
+    }
+    got = agg.split_bounded(agg.bounded_summaries(df).toArrow())
+    assert set(got) == set(ops)
+    for name, op in ops.items():
+        want = op.toArrow()
+        assert got[name].schema == want.schema, name
+        assert got[name].to_pylist() == want.to_pylist(), name
+    # the cases above are really present in the tables compared
+    hourly = got["agg_hourly_hist"].to_pylist()
+    assert {r["category"] for r in hourly} == {None, "denied", "error", "other", "success"}
+    assert [r["hour"] for r in hourly if r["category"] == "denied" and r["row_count"]] == [10]
+    assert [r["status_code"] for r in got["dim_statuses"].to_pylist()] == [200, 304, 403, 407, 503]
+    assert "-" not in [r["action"] for r in got["dim_actions"].to_pylist()]
 
 
 def test_read_sink_pins_inferred_schema_without_a_job(spark, pipeline_out, spark_jobs):
