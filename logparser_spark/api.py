@@ -13,27 +13,50 @@ live aggregation otherwise — StatisticsService.java:23-53) is kept:
 unfiltered calls read the summary tables written by the aggregate
 stage; filtered calls run the same plans with pushed-down predicates.
 
-The summary fast path runs NO Spark job. The aggregate stage publishes
+The summary fast path makes NO JVM call. The aggregate stage publishes
 each bounded summary as one parquet file already in its canonical
-order; a fast-path call reads that file eagerly with pyarrow and hands
-it to Spark as a local relation, so the quarantine filter and the
-top-K ``limit`` fold into it at planning time and ``collect()`` is a
-driver-side copy — no schema-inference job, no re-sort, no shuffle.
-Live and paged calls read the sink with its schema pinned from a
-parquet footer (``read_sink``), so planning them runs no job either;
-only their scans and aggregations do.
+order; ``_summary_table`` reads it with pyarrow, drops the quarantine
+category (statistics) or slices to k (top-K) in Arrow, and
+``collect_cached`` builds the response's ``Row``s from that table in
+Python — no Spark job, no py4j round trip. The ``get_*`` methods wrap
+the same table with ``createDataFrame``, so collecting them runs no
+Spark job either. Live and paged calls read the sink with its schema
+pinned from a parquet footer (``read_sink``), so planning them runs no
+job; only their scans and aggregations do.
+
+``collect_cached`` refuses, before any Spark work, a request that could
+return more than ``MAX_ROWS`` rows (the reference's JDBC ``maxRows``).
 """
 
 from __future__ import annotations
 
+import glob
+import inspect
+import json
 import os
-from dataclasses import dataclass
+from dataclasses import astuple, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from logparser_spark.operators import aggregates as agg
-from logparser_spark.sources.sinks import read_sink
+from logparser_spark.sources.sinks import footer_row_count, read_sink
+
+# The reference's JDBC guard (DatabaseConfig.java:29-34, maxRows 50 000):
+# the most rows one cached response may hold.
+MAX_ROWS = 50_000
+
+# endpoint -> the published summary its unfiltered calls are served from
+_SUMMARY_OF = {
+    "statistics": "agg_sink_totals",
+    "top_urls": "top_urls",
+    "top_users": "top_users",
+    "statuses": "dim_statuses",
+    "actions": "dim_actions",
+}
 
 
 @dataclass
@@ -109,6 +132,12 @@ class LogPipelineAPI:
         reference's two-tier TTL (filtered results expire in 5 min,
         unfiltered defaults in 30). The cached object is the ROWS, not
         the plan: a cached DataFrame would re-execute per read.
+
+        A miss on an unfiltered summary endpoint builds its rows in
+        Python from ``_summary_table`` — the same field names, order and
+        values ``collect()`` gives — with no JVM call. A request that
+        could return more than ``MAX_ROWS`` rows (``size`` for logs,
+        ``k`` for the top lists) raises ValueError before any Spark work.
         """
         meth, takes_filter = self._CACHEABLE[endpoint]
         if flt is not None and not takes_filter:
@@ -116,8 +145,17 @@ class LogPipelineAPI:
             # result under a filtered key — the caller believes the
             # rows honor the filter. Refuse instead.
             raise ValueError(f"endpoint {endpoint!r} does not take a filter")
-        from dataclasses import astuple
-
+        fn = getattr(self, meth)
+        args = (flt,) if takes_filter else ()
+        # the endpoint method's signature supplies the defaults (page size,
+        # k) and rejects unknown params before any Spark work
+        call = inspect.signature(fn).bind(*args, **params)
+        call.apply_defaults()
+        limit = call.arguments.get("size", call.arguments.get("k"))
+        if limit is not None and limit > MAX_ROWS:
+            raise ValueError(
+                f"endpoint {endpoint!r} could return {limit} rows; the limit is {MAX_ROWS}"
+            )
         # self.root is part of the key: the cache= seam invites sharing
         # one store across facades, and two facades over different sink
         # roots must never serve each other's rows.
@@ -130,9 +168,14 @@ class LogPipelineAPI:
         hit = self.cache.get(key)
         if hit is not None:
             return list(hit)
-        fn = getattr(self, meth)
-        df = fn(flt, **params) if takes_filter else fn(**params)
-        rows = df.collect()
+        table = None
+        if endpoint in _SUMMARY_OF:
+            table = self._summary_table(endpoint, flt, call.arguments.get("k"))
+        if table is not None:
+            make = Row(*table.column_names)
+            rows = [make(*vals) for vals in zip(*(c.to_pylist() for c in table.columns))]
+        else:
+            rows = fn(*args, **params).collect()
         self.cache.put(
             key,
             tuple(rows),  # immutable: caller mutation can't poison hits
@@ -168,39 +211,11 @@ class LogPipelineAPI:
         None = absent or uncommitted (a partial dir from a crashed
         aggregate stage has no marker) -> callers fall back to live
         aggregation, never to silently-partial results."""
-        import json
-
         try:
             with open(os.path.join(self.root, "summary", name, "_meta.json")) as fh:
                 return json.load(fh)
         except FileNotFoundError:
             return None
-
-    def _read_summary(self, name: str) -> DataFrame | None:
-        """The committed summary's rows as a local relation: its parquet
-        files read eagerly by pyarrow in name order (the aggregate stage
-        publishes one file in the operator's canonical order) and handed
-        to ``createDataFrame``. Neither this call nor the caller's
-        collect runs a Spark job. None when the files are gone or torn
-        (a republish swapped the dir under this read) -> live fallback."""
-        import glob
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        files = sorted(glob.glob(os.path.join(self.root, "summary", name, "*.parquet")))
-        if not files:
-            return None
-        try:
-            table = pa.concat_tables([pq.read_table(f) for f in files])
-        except (OSError, pa.ArrowException):
-            return None
-        return self.spark.createDataFrame(table)
-
-    def _summary(self, name: str) -> DataFrame | None:
-        if self._summary_meta(name) is None:
-            return None
-        return self._read_summary(name)
 
     def _summary_rows(self, name: str) -> int:
         """Row count of a summary table WITHOUT a Spark job (from the
@@ -208,32 +223,66 @@ class LogPipelineAPI:
         meta = self._summary_meta(name)
         if meta is not None:
             return meta["rows"]
-        import glob
-
-        from logparser_spark.sources.sinks import footer_row_count
-
         return footer_row_count(
             glob.glob(os.path.join(self.root, "summary", name, "*.parquet"))
         )
 
-    def _summary_for_k(self, name: str, k: int) -> DataFrame | None:
-        """The summary table iff its committed marker can serve a
-        request for k rows: it holds >= k rows OR it was never truncated
-        (fewer distinct keys than its cap — then it IS the complete
-        ranking and remains valid for any k). Reads the marker ONCE.
+    def _summary_table(
+        self, endpoint: str, flt: LogFilter | None = None, k: int | None = None
+    ) -> pa.Table | None:
+        """The answer to an unfiltered summary request, read from the
+        published files by pyarrow alone, or None to send the call to
+        live aggregation:
 
-        No race window remains after this returns: the read is eager
-        (pyarrow loads the rows into the driver before the DataFrame
-        exists), so a republish that deletes or replaces the summary
-        files later cannot affect the returned DataFrame — its collect
-        serves the snapshot that was read. A read that itself races a
-        republish (rmtree+rename) fails inside ``_read_summary``'s try
-        and returns None, i.e. falls back to live aggregation instead
-        of crashing or serving a torn table."""
-        meta = self._summary_meta(name)
-        if meta is None or not (meta["rows"] >= k or meta.get("exhaustive", False)):
+        - only unfiltered calls qualify;
+        - the commit marker must exist and, for a top-K request, hold
+          >= k rows or be exhaustive (fewer distinct keys than its cap —
+          then it IS the complete ranking, valid for any k). The marker
+          is read once;
+        - the committed files are read once, in name order (the
+          aggregate stage publishes one file in the operator's canonical
+          order), so nothing is re-sorted;
+        - statistics covers valid (routed) rows only, as a filtered call
+          does: quarantine rows never existed in the reference's logs
+          table, so its category is dropped, and a null category too, as
+          Spark's ``!=`` drops it;
+        - a top-K table is sliced to k;
+        - a read that races a republish (rmtree + rename) and finds the
+          files torn or gone returns None instead of crashing.
+
+        The read is eager, so nothing read here can change afterwards: a
+        later republish does not affect the returned rows."""
+        if flt is not None and not flt.is_empty():
             return None
-        return self._read_summary(name)
+        name = _SUMMARY_OF[endpoint]
+        meta = self._summary_meta(name)
+        if meta is None or (k is not None and meta["rows"] < k and not meta.get("exhaustive")):
+            return None
+        files = sorted(glob.glob(os.path.join(self.root, "summary", name, "*.parquet")))
+        if not files:
+            return None
+        try:
+            # ParquetFile.read skips read_table's dataset discovery: a
+            # third of the cost on these few-KB files
+            tables = []
+            for f in files:
+                with pq.ParquetFile(f) as pf:
+                    tables.append(pf.read())
+        except (OSError, pa.ArrowException):
+            return None
+        table = pa.concat_tables(tables)
+        if endpoint == "statistics":
+            # a null comparison drops the row, as Spark's filter does
+            table = table.filter(pc.not_equal(table["category"], "quarantine"))
+        return table if k is None else table.slice(0, k)
+
+    def _served(
+        self, endpoint: str, flt: LogFilter | None = None, k: int | None = None
+    ) -> DataFrame | None:
+        """``_summary_table``'s answer as a local relation (collecting it
+        runs no Spark job), or None for live aggregation."""
+        table = self._summary_table(endpoint, flt, k)
+        return None if table is None else self.spark.createDataFrame(table)
 
     # -- GET /api/logs ------------------------------------------------
     def get_logs(
@@ -291,36 +340,23 @@ class LogPipelineAPI:
         return math.ceil(self._facts(flt).count() / size)
 
     # -- GET /api/statistics -----------------------------------------
+    # unfiltered -> the published summary (C2/C3 fast path, see
+    # _summary_table); filtered -> live aggregation with pushed filters.
+    # Both cover the same universe — valid (routed) rows only.
     def get_statistics(self, flt: LogFilter | None = None) -> DataFrame:
-        """Unfiltered -> precomputed summary table (C2 fast path);
-        filtered -> live aggregation with pushed filters.
-
-        Both paths cover the same universe — valid (routed) rows only:
-        quarantine rows never existed in the reference's logs table, so
-        the fast path drops the summary's quarantine category to stay
-        consistent with any filtered call."""
-        if (flt is None or flt.is_empty()) and (s := self._summary("agg_sink_totals")) is not None:
-            return s.filter(F.col("category") != "quarantine")
-        return agg.sink_totals(self._facts(flt))
+        s = self._served("statistics", flt)
+        return s if s is not None else agg.sink_totals(self._facts(flt))
 
     # -- GET /api/top-urls / /api/top-users --------------------------
-    # fast path only when the precomputed table can actually satisfy k
-    # (summaries hold top-100/top-10; a larger k falls back to live);
-    # the published rows are already ranked, so the slice is a limit
-
+    # fast path only when the published table can satisfy k (summaries
+    # hold top-100/top-10; a larger k on a truncated one goes live)
     def get_top_urls(self, flt: LogFilter | None = None, k: int = 100) -> DataFrame:
-        if (flt is None or flt.is_empty()) and (
-            s := self._summary_for_k("top_urls", k)
-        ) is not None:
-            return s.limit(k)  # O9 slice
-        return agg.top_urls(self._facts(flt), k=k)
+        s = self._served("top_urls", flt, k)
+        return s if s is not None else agg.top_urls(self._facts(flt), k=k)
 
     def get_top_users(self, flt: LogFilter | None = None, k: int = 10) -> DataFrame:
-        if (flt is None or flt.is_empty()) and (
-            s := self._summary_for_k("top_users", k)
-        ) is not None:
-            return s.limit(k)
-        return agg.top_users(self._facts(flt), k=k)
+        s = self._served("top_users", flt, k)
+        return s if s is not None else agg.top_users(self._facts(flt), k=k)
 
     # -- GET /api/combined-tops ---------------------------------------
     def get_combined_tops(
@@ -341,13 +377,9 @@ class LogPipelineAPI:
     # precomputed at load time (reference populates dim tables on load);
     # live distinct only when the summary is absent
     def get_statuses(self) -> DataFrame:
-        if (s := self._summary("dim_statuses")) is not None:
-            return s
-        s, _ = agg.distinct_dims(read_sink(self.spark, self.root))
-        return s
+        s = self._served("statuses")
+        return s if s is not None else agg.distinct_dims(read_sink(self.spark, self.root))[0]
 
     def get_actions(self) -> DataFrame:
-        if (a := self._summary("dim_actions")) is not None:
-            return a
-        _, a = agg.distinct_dims(read_sink(self.spark, self.root))
-        return a
+        s = self._served("actions")
+        return s if s is not None else agg.distinct_dims(read_sink(self.spark, self.root))[1]

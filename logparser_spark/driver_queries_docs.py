@@ -785,18 +785,28 @@ WITH m AS (
 
 DOC_ORACLES: dict[str, str] = {
     # corpus_report: COALESCE(text,'') mirrors the operator's NULL-as-empty
-    # convention; 2*alpha >= n_chars is the division-free quality clause.
+    # convention; whitespace is textstats.WS_CLASS, trimmed from both ends
+    # ('g': DuckDB replaces only the first match without it), and an
+    # all-whitespace text has 0 tokens; 2*alpha >= n_chars is the
+    # division-free quality clause.
     "corpus_report": r"""
-WITH d AS (
+WITH t AS (
+  SELECT source, text,
+         regexp_replace(COALESCE(text, ''),
+                        '^[ \t\n\r\f\x0B]+|[ \t\n\r\f\x0B]+\z', '', 'g') AS trimmed
+  FROM documents
+),
+d AS (
   SELECT source,
          md5(COALESCE(text, '')) AS h,
-         len(string_split_regex(trim(COALESCE(text, '')), '\s+')) AS ws,
+         CASE WHEN trimmed = '' THEN 0
+              ELSE len(string_split_regex(trimmed, '[ \t\n\r\f\x0B]+')) END AS ws,
          CASE WHEN len(string_split(COALESCE(text, ''), ' ')) BETWEEN 10 AND 1000
                    AND 2 * length(regexp_replace(COALESCE(text, ''), '[^A-Za-z]', '', 'g'))
                        >= length(COALESCE(text, ''))
                    AND length(COALESCE(text, '')) > 0
               THEN 1 ELSE 0 END AS hq
-  FROM documents
+  FROM t
 ),
 g AS (
   SELECT source, h, COUNT(*) AS cnt, MIN(ws) AS ws, MIN(hq) AS hq

@@ -279,7 +279,10 @@ def dim_tables() -> dict[str, pd.DataFrame]:
     return {"dim_action": dim_action, "dim_source": dim_source, "dim_ip_class": dim_ip_class}
 
 
-FIXTURE_BASE_DIR = "/root/repo/fixtures_cache"
+# the checkout's gitignored fixtures_cache/, wherever the checkout lives
+FIXTURE_BASE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures_cache"
+)
 
 
 def fixture_marker(scale: str, base_dir: str = FIXTURE_BASE_DIR) -> str:

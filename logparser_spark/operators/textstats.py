@@ -22,6 +22,11 @@ LANG_STOPWORDS = {
 }
 LANG_PRIORITY = ["en", "es", "de", "fr", "zh"]
 
+# corpus_report's whitespace: space, tab, newline, CR, form feed and
+# vertical tab, spelled out so that Java regex, RE2 (the DuckDB oracle)
+# and Python's re all read the same class (their ``\s`` differ on \v)
+WS_CLASS = r"[ \t\n\r\f\x0B]"
+
 
 def _stopword_count(text_col, words: list[str]):
     pat = r"\b(" + "|".join(words) + r")\b"
@@ -313,7 +318,9 @@ def corpus_report(
     ``floor(100*alpha/n_chars) >= 50`` (for n_chars > 0, which the
     clause requires explicitly — empty text is never high-quality).
     NULL text is treated as empty (one content group), matching the
-    COALESCE in the DuckDB oracle.
+    COALESCE in the DuckDB oracle. Whitespace tokens are counted after
+    trimming every ``WS_CLASS`` character from both ends (``F.trim``
+    strips spaces only), and a text that trims to empty has 0 tokens.
     """
     t = F.coalesce(F.col(text_col), F.lit(""))
     n_words = F.size(F.split(t, " "))
@@ -325,7 +332,9 @@ def corpus_report(
         & (alpha * 2 >= n_chars)
         & (n_chars > 0)
     ).cast("long")
-    ws = F.size(F.split(F.trim(t), r"\s+"))
+    # \z, not $: Java's $ also matches before a final line terminator
+    trimmed = F.regexp_replace(t, rf"^{WS_CLASS}+|{WS_CLASS}+\z", "")
+    ws = F.when(trimmed == "", 0).otherwise(F.size(F.split(trimmed, f"{WS_CLASS}+")))
     g = list(group_cols)
     per_text = (
         df.select(*g, F.md5(t).alias("h"), ws.alias("ws"), hq.alias("hq"))

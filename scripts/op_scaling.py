@@ -34,10 +34,11 @@ the driver path (bench.py stays the driver artifact).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def near_dup_corpus(spark, n_docs: int):

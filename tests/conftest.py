@@ -1,9 +1,18 @@
+import gc
+import os
 import shutil
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout holding these tests: its package is the one under test
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
+# Spark's Python workers (and the suite's subprocesses) import it too:
+# without this they would import whatever the working directory holds
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO_ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from logparser_spark.session import build_session  # noqa: E402
 
@@ -61,3 +70,55 @@ def spark_jobs(spark):
         return out, sum(1 for j in job_ids() if j > before)
 
     return run
+
+
+@pytest.fixture
+def jvm_calls(spark):
+    """``jvm_calls(fn) -> (fn(), n)``: call ``fn`` and count the py4j
+    commands it sent to the JVM. Garbage is collected first, and py4j's
+    object-release messages (``m``/``d``) are not counted: a finalizer
+    can send one at any moment, on any thread, for an object some
+    earlier call dropped."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    release = "m\nd\n"
+
+    def run(fn):
+        sent = []
+
+        def counting(command, *args, **kwargs):
+            if not command.startswith(release):
+                sent.append(command)
+            return send(command, *args, **kwargs)
+
+        gc.collect()
+        client.send_command = counting
+        try:
+            out = fn()
+        finally:
+            client.send_command = send
+        return out, len(sent)
+
+    return run
+
+
+@pytest.fixture
+def plan_nodes():
+    """``plan_nodes(plan)``: every node of an executed physical plan (a
+    py4j ``SparkPlan``), descending through the adaptive wrapper and its
+    query stages."""
+
+    def walk(node):
+        yield node
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif name.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        else:
+            seq = node.children()
+            kids = [seq.apply(i) for i in range(seq.size())]
+        for kid in kids:
+            yield from walk(kid)
+
+    return walk

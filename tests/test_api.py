@@ -153,7 +153,7 @@ def test_top_k_fast_path_serves_any_k_when_exhaustive(api):
     assert meta is not None and set(meta) >= {"rows", "exhaustive"}
     if not meta["exhaustive"]:
         pytest.skip("fixture has >= cap distinct urls; exhaustive path not hit")
-    assert api._summary_for_k("top_urls", 10**6) is not None
+    assert api._summary_table("top_urls", k=10**6) is not None
     fast = [tuple(r) for r in api.get_top_urls(k=10**6).collect()]
     from logparser_spark.operators import aggregates as agg
 
@@ -172,7 +172,7 @@ def test_partial_summary_dir_falls_back_to_live(api):
     bak = marker + ".bak"
     shutil.move(marker, bak)
     try:
-        assert api._summary("top_users") is None
+        assert api._summary_table("top_users") is None
         live = [tuple(r) for r in api.get_top_users(k=10).collect()]
     finally:
         shutil.move(bak, marker)
@@ -190,16 +190,16 @@ def test_summary_fast_path_eligibility(spark, tmp_path):
     spark.createDataFrame(
         [("u", 1)], "url string, request_count long"
     ).coalesce(1).write.parquet(str(d))
-    assert api2._summary_for_k("top_urls", 1) is None  # no marker
+    assert api2._summary_table("top_urls", k=1) is None  # no marker
     (d / "_meta.json").write_text('{"rows": 60, "exhaustive": true}')
-    assert api2._summary_for_k("top_urls", 10**6) is not None
+    assert api2._summary_table("top_urls", k=10**6) is not None
     (d / "_meta.json").write_text('{"rows": 100, "exhaustive": false}')
-    assert api2._summary_for_k("top_urls", 100) is not None
-    assert api2._summary_for_k("top_urls", 101) is None
+    assert api2._summary_table("top_urls", k=100) is not None
+    assert api2._summary_table("top_urls", k=101) is None
     # TOCTOU: marker passes but the data files are gone mid-republish
     for f in d.glob("*.parquet"):
         f.unlink()
-    assert api2._summary_for_k("top_urls", 10) is None
+    assert api2._summary_table("top_urls", k=10) is None
 
 
 # the five summary endpoints and the parameters the fast path serves
@@ -212,23 +212,26 @@ SUMMARY_ENDPOINTS = [
 ]
 
 
-def test_summary_endpoints_run_no_spark_job(api, spark_jobs):
+def test_summary_endpoints_run_no_spark_job(api, spark_jobs, jvm_calls):
     """A cache miss on any unfiltered summary endpoint is served from
-    the published file alone: zero Spark jobs through collect_cached.
-    A filtered (live) call through the same counter runs jobs, so the
-    zero is not an artifact of the counter."""
+    the published file alone through collect_cached: zero Spark jobs,
+    and not one py4j command reaches the JVM (the rows are built in
+    Python). A filtered (live) call through the same counters runs jobs
+    and crosses into the JVM, so the zeros are not artifacts of the
+    counters."""
     from functools import partial
 
     from logparser_spark.cache import TTLResultCache
 
     fresh = LogPipelineAPI(api.spark, api.root, cache=TTLResultCache())
-    for endpoint, params in SUMMARY_ENDPOINTS:
-        rows, jobs = spark_jobs(partial(fresh.collect_cached, endpoint, **params))
-        assert rows and jobs == 0, (endpoint, jobs)
-    _, jobs = spark_jobs(
-        partial(fresh.collect_cached, "statistics", LogFilter(action="TCP_DENIED"))
-    )
-    assert jobs > 0
+    for endpoint, params in SUMMARY_ENDPOINTS + [("top_urls", {})]:
+        (rows, calls), jobs = spark_jobs(
+            partial(jvm_calls, partial(fresh.collect_cached, endpoint, **params))
+        )
+        assert rows and jobs == 0 and calls == 0, (endpoint, params, jobs, calls)
+    live = partial(fresh.collect_cached, "statistics", LogFilter(action="TCP_DENIED"))
+    (_, calls), jobs = spark_jobs(partial(jvm_calls, live))
+    assert jobs > 0 and calls > 0
 
 
 def test_fast_path_rows_equal_live(api):
@@ -241,7 +244,7 @@ def test_fast_path_rows_equal_live(api):
     facts = api._facts(None)
     statuses, actions = agg.distinct_dims(read_sink(api.spark, api.root))
     cap = 100  # top_urls' summary cap
-    assert api._summary_for_k("top_urls", cap) is not None  # k=cap is fast too
+    assert api._summary_table("top_urls", k=cap) is not None  # k=cap is fast too
     cases = {
         "statistics": (api.get_statistics(), agg.sink_totals(facts)),
         "top_urls k=10": (api.get_top_urls(k=10), agg.top_urls(facts, k=10)),
@@ -287,3 +290,140 @@ def test_fast_path_dataframe_survives_republish(spark, tmp_path, spark_jobs):
     assert [tuple(r) for r in rows] == [("/a", 3), ("/b", 1)]
     assert jobs == 0
     assert [tuple(r) for r in api2.get_top_urls(k=10).collect()] == [("/c", 9)]
+
+
+def _assert_same_rows(got, want, name):
+    """Rows equal in value, order, field names and Python types."""
+    from pyspark.sql import Row
+
+    assert all(isinstance(r, Row) for r in got), name
+    assert [tuple(r) for r in got] == [tuple(r) for r in want], name
+    assert [list(r.asDict()) for r in got] == [list(r.asDict()) for r in want], name
+    assert [[type(v) for v in r] for r in got] == [[type(v) for v in r] for r in want], name
+
+
+def test_summary_rows_equal_dataframe_collect(api):
+    """collect_cached's Python-built rows are the rows the endpoint's
+    DataFrame collects — value, order, field names and Python type —
+    including k = the top_urls cap and the default k."""
+    from logparser_spark.cache import TTLResultCache
+
+    fresh = LogPipelineAPI(api.spark, api.root, cache=TTLResultCache())
+    cases = SUMMARY_ENDPOINTS + [("top_urls", {"k": 100}), ("top_users", {})]
+    for endpoint, params in cases:
+        meth, _ = LogPipelineAPI._CACHEABLE[endpoint]
+        want = getattr(api, meth)(**params).collect()
+        _assert_same_rows(fresh.collect_cached(endpoint, **params), want, (endpoint, params))
+
+
+def _publish(root, name, table, exhaustive=True):
+    """Publish ``table`` as a committed summary the way the aggregate
+    stage does: one parquet file plus the _meta.json marker."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    d = root / "summary" / name
+    d.mkdir(parents=True)
+    pq.write_table(table, str(d / "part-00000.parquet"))
+    (d / "_meta.json").write_text(json.dumps({"rows": table.num_rows, "exhaustive": exhaustive}))
+
+
+def test_summary_rows_match_spark_semantics_on_edges(spark, tmp_path, jvm_calls):
+    """Over hand-published summaries (no sink exists, so live
+    aggregation would fail): an agg_sink_totals holding a null and a
+    quarantine category serves what Spark's ``category != 'quarantine'``
+    keeps, and a k far above top_urls' cap on an exhaustive summary
+    serves the whole table — both with no JVM call, and equal to the
+    get_* DataFrames' rows."""
+    import pyarrow as pa
+
+    totals = pa.table(
+        {
+            "category": [None, "denied", "quarantine", "web"],
+            "row_count": pa.array([1, 2, 3, 4], pa.int64()),
+            "error_count": pa.array([0, 2, 0, 1], pa.int64()),
+            "unique_ips": pa.array([1, 1, 2, 3], pa.int64()),
+            "bytes_total": pa.array([10, 20, 30, 40], pa.int64()),
+            "avg_response_time_ms": pa.array([5, 6, 7, 8], pa.int64()),
+        }
+    )
+    urls = pa.table(
+        {
+            "url": ["/a", "/b", "/c"],
+            "domain": ["a.example", None, "c.example"],
+            "request_count": pa.array([9, 5, 5], pa.int64()),
+            "avg_response_time": pa.array([1, None, 3], pa.int64()),
+            "total_bytes": pa.array([100, 50, 40], pa.int64()),
+            "last_access_us": pa.array([7, 8, 9], pa.int64()),
+        }
+    )
+    _publish(tmp_path, "agg_sink_totals", totals)
+    _publish(tmp_path, "top_urls", urls)
+    api2 = LogPipelineAPI(spark, str(tmp_path))
+
+    stats, calls = jvm_calls(lambda: api2.collect_cached("statistics"))
+    assert calls == 0
+    spark_kept = spark.createDataFrame(totals).filter(F.col("category") != "quarantine")
+    _assert_same_rows(stats, spark_kept.collect(), "statistics")
+    assert [r.category for r in stats] == ["denied", "web"]
+    _assert_same_rows(stats, api2.get_statistics().collect(), "get_statistics")
+
+    top, calls = jvm_calls(lambda: api2.collect_cached("top_urls", k=500))
+    assert calls == 0
+    _assert_same_rows(top, spark.createDataFrame(urls).collect(), "top_urls k=500")
+    _assert_same_rows(top, api2.get_top_urls(k=500).collect(), "get_top_urls k=500")
+    sliced = api2.collect_cached("top_urls", k=2)
+    _assert_same_rows(sliced, spark.createDataFrame(urls).limit(2).collect(), "top_urls k=2")
+
+
+def test_summary_without_data_files_falls_back_to_live(api, jvm_calls):
+    """A committed marker whose data files were removed (a republish
+    swapping the dir under the read) must not serve an empty or torn
+    answer: the call goes to live aggregation, which crosses into the
+    JVM and returns the same rows the published file holds."""
+    import os
+    import shutil
+
+    from logparser_spark.cache import TTLResultCache
+
+    d = os.path.join(api.root, "summary", "top_users")
+    published = api.collect_cached("top_users", k=10)
+    aside = d + ".files"
+    os.makedirs(aside)
+    files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+    for f in files:
+        shutil.move(os.path.join(d, f), aside)
+    try:
+        assert os.path.exists(os.path.join(d, "_meta.json"))
+        assert api._summary_table("top_users", k=10) is None
+        fresh = LogPipelineAPI(api.spark, api.root, cache=TTLResultCache())
+        live, calls = jvm_calls(lambda: fresh.collect_cached("top_users", k=10))
+    finally:
+        for f in files:
+            shutil.move(os.path.join(aside, f), d)
+        os.rmdir(aside)
+    assert calls > 0
+    assert [tuple(r) for r in live] == [tuple(r) for r in published]
+
+
+def test_collect_cached_bounds_rows(api, jvm_calls):
+    """The reference's JDBC maxRows (50 000): a request that could
+    return more rows — a logs page size or a top-K k above the bound —
+    is refused with ValueError before any JVM call; at the bound it is
+    served."""
+    from logparser_spark.api import MAX_ROWS
+
+    for endpoint, params in [
+        ("logs", {"size": MAX_ROWS + 1}),
+        ("top_urls", {"k": MAX_ROWS + 1}),
+        ("top_users", {"k": MAX_ROWS + 1}),
+    ]:
+        def refused():
+            with pytest.raises(ValueError, match=str(MAX_ROWS)):
+                api.collect_cached(endpoint, **params)
+
+        _, calls = jvm_calls(refused)
+        assert calls == 0, endpoint
+    assert len(api.collect_cached("logs", size=MAX_ROWS)) == api._facts(None).count()
+    assert api.collect_cached("top_users", k=MAX_ROWS)

@@ -3,6 +3,7 @@ pure-python model, including the NULL/empty-text and duplicate-heavy
 edges; plus the zero-payload-shuffle plan shape."""
 
 import math
+import re
 
 from pyspark.sql import functions as F  # noqa: F401
 from pyspark.sql import types as T
@@ -24,12 +25,17 @@ ROWS = [
     ("d7", "books", PUNCT_TEXT),
     ("d8", "books", PUNCT_TEXT),
     ("d9", "books", PUNCT_TEXT),
+    ("d10", "feeds", "\tfoo bar\n"),  # tab/newline padding: 2 tokens, not 4
+    ("d11", "feeds", " \n\t\r "),      # whitespace only: 0 tokens, like ""
+    ("d12", "feeds", "a\x0bb  c\r\n"),  # vertical tab separates tokens: 3
+    ("d13", "feeds", "a \u2028"),       # U+2028 is a token, not whitespace: 2
 ]
 
 
 def _ws_tokens(t: str) -> int:
-    # Spark size(split(trim(t), '\s+')): splitting "" yields [""] -> 1
-    return len(__import__("re").split(r"\s+", t.strip()))
+    # maximal runs of non-whitespace (space, tab, newline, CR, form feed,
+    # vertical tab); an empty or all-whitespace text has none
+    return len(re.findall(r"[^ \t\n\r\f\v]+", t))
 
 
 def _hq(t: str) -> bool:
@@ -106,13 +112,28 @@ def test_corpus_report_dup_edges(spark):
     assert books["n_hq_docs"] == 1  # d6; punct text fails the alpha clause
 
 
-def test_corpus_report_plan_shape(spark):
-    """The text payload must not cross a shuffle: both exchanges key on
-    hash/group columns of the pre-aggregated partials."""
-    plan = textstats.corpus_report(_docs_df(spark))._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") <= 3  # 2 agg exchanges + final range sort
-    # plans print root-first: everything ABOVE the bottom-most Exchange is
-    # post-shuffle, and the text column must only live below it (the
-    # scan-side projection that computes md5/ws/hq partials)
-    assert "Exchange" in plan
-    assert "text#" not in plan[: plan.rfind("Exchange")]
+def test_corpus_report_whitespace_tokens(spark):
+    """Leading/trailing tabs, newlines and CRs are trimmed like spaces,
+    an all-whitespace or empty text counts 0 tokens, and a vertical tab
+    separates tokens: feeds' texts hold 2 + 0 + 3 + 2 tokens."""
+    rep = {r["source"]: r for r in textstats.corpus_report(_docs_df(spark)).collect()}
+    assert rep["feeds"]["total_ws_tokens"] == 7
+    assert rep["web"]["total_ws_tokens"] == 2 * 14 + 4  # d4/d5 (NULL, "") add 0
+
+
+def test_corpus_report_plan_shape(spark, plan_nodes):
+    """The text payload must not cross a shuffle: no exchange of the
+    executed plan carries the text column — they move only the hash/
+    group columns of the pre-aggregated partials."""
+    df = textstats.corpus_report(_docs_df(spark))
+    df.collect()  # the adaptive plan is final once executed
+    exchanges = [
+        n
+        for n in plan_nodes(df._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+    ]
+    assert 1 <= len(exchanges) <= 3  # 2 agg exchanges + final range sort
+    for ex in exchanges:
+        out = ex.output()
+        names = {out.apply(i).name() for i in range(out.size())}
+        assert "text" not in names, names

@@ -17,6 +17,19 @@ from logparser_spark.plans.pipeline import run_aggregates, run_pipeline, build_r
 from logparser_spark.sources.sequences import read_raw_sequences
 from logparser_spark.sources.sinks import read_sink
 
+# the checkout holding these tests (conftest puts it first on sys.path)
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_package_under_test_is_this_checkout():
+    """Another checkout of the repo (a parent-vs-change pair, a CI
+    workspace) must test its own code: the imported package lies under
+    the checkout that holds these tests, not under some fixed path."""
+    import logparser_spark
+
+    pkg = os.path.realpath(logparser_spark.__file__)
+    assert os.path.commonpath([pkg, os.path.realpath(REPO_ROOT)]) == os.path.realpath(REPO_ROOT)
+
 
 @pytest.fixture(scope="module")
 def pipeline_out(spark, tiny_input, tmp_path_factory):
@@ -302,30 +315,14 @@ def test_publish_runs_nine_spark_jobs(spark, pipeline_out, spark_jobs):
     assert jobs == 9
 
 
-def _plan_nodes(node):
-    """Every node of an executed physical plan, descending through the
-    adaptive wrapper and its query stages."""
-    yield node
-    name = node.getClass().getSimpleName()
-    if name == "AdaptiveSparkPlanExec":
-        kids = [node.executedPlan()]
-    elif name.endswith("QueryStageExec"):
-        kids = [node.plan()]
-    else:
-        seq = node.children()
-        kids = [seq.apply(i) for i in range(seq.size())]
-    for kid in kids:
-        yield from _plan_nodes(kid)
-
-
-def test_bounded_summaries_scan_the_sink_once(spark, pipeline_out):
+def test_bounded_summaries_scan_the_sink_once(spark, pipeline_out, plan_nodes):
     """The five bounded summaries cost one read of the sink: the fused
     query's executed plan holds exactly one parquet scan node."""
     q = agg.bounded_summaries(read_sink(spark, pipeline_out))
     q.toArrow()  # the adaptive plan is final once executed
     scans = [
         n
-        for n in _plan_nodes(q._jdf.queryExecution().executedPlan())
+        for n in plan_nodes(q._jdf.queryExecution().executedPlan())
         if n.getClass().getSimpleName() == "FileSourceScanExec"
     ]
     assert len(scans) == 1
@@ -435,7 +432,7 @@ def test_counts_exact_under_speculation(tiny_input, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("spec"))
     code = f"""
 import sys, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {REPO_ROOT!r})
 from logparser_spark.session import build_session
 from logparser_spark.plans.pipeline import run_pipeline
 from logparser_spark.plans.checkpoint import Manifest
