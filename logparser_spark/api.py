@@ -25,7 +25,10 @@ pinned from a parquet footer (``read_sink``), so planning them runs no
 job; only their scans and aggregations do.
 
 ``collect_cached`` refuses, before any Spark work, a request that could
-return more than ``MAX_ROWS`` rows (the reference's JDBC ``maxRows``).
+return more than ``MAX_ROWS`` rows (the reference's JDBC ``maxRows``)
+and one with a negative ``k`` or a ``page``/``size`` below 1. It keys
+its cache on the bound arguments, so spelling out a default hits the
+entry of the call that omitted it.
 """
 
 from __future__ import annotations
@@ -48,6 +51,10 @@ from logparser_spark.sources.sinks import footer_row_count, read_sink
 # The reference's JDBC guard (DatabaseConfig.java:29-34, maxRows 50 000):
 # the most rows one cached response may hold.
 MAX_ROWS = 50_000
+# least legal value of each paging / top-K parameter: a negative k would
+# read as 0 rows on the summary path (pyarrow slice) but reach Spark's
+# limit on the live path, so it is refused before either runs
+_LEAST = {"k": 0, "page": 1, "size": 1}
 
 # endpoint -> the published summary its unfiltered calls are served from
 _SUMMARY_OF = {
@@ -137,7 +144,8 @@ class LogPipelineAPI:
         Python from ``_summary_table`` — the same field names, order and
         values ``collect()`` gives — with no JVM call. A request that
         could return more than ``MAX_ROWS`` rows (``size`` for logs,
-        ``k`` for the top lists) raises ValueError before any Spark work.
+        ``k`` for the top lists), or with ``k < 0``, ``page < 1`` or
+        ``size < 1``, raises ValueError before any Spark work.
         """
         meth, takes_filter = self._CACHEABLE[endpoint]
         if flt is not None and not takes_filter:
@@ -151,19 +159,25 @@ class LogPipelineAPI:
         # k) and rejects unknown params before any Spark work
         call = inspect.signature(fn).bind(*args, **params)
         call.apply_defaults()
-        limit = call.arguments.get("size", call.arguments.get("k"))
+        bound = {name: v for name, v in call.arguments.items() if name != "flt"}
+        for name, least in _LEAST.items():
+            if name in bound and bound[name] < least:
+                raise ValueError(f"{name}={bound[name]} is below {least}")
+        limit = bound.get("size", bound.get("k"))
         if limit is not None and limit > MAX_ROWS:
             raise ValueError(
                 f"endpoint {endpoint!r} could return {limit} rows; the limit is {MAX_ROWS}"
             )
-        # self.root is part of the key: the cache= seam invites sharing
-        # one store across facades, and two facades over different sink
-        # roots must never serve each other's rows.
+        # Keyed on the BOUND arguments, defaults applied, so a call
+        # that spells out a default shares the entry of one that omits
+        # it. self.root is part of the key: the cache= seam invites
+        # sharing one store across facades, and two facades over
+        # different sink roots must never serve each other's rows.
         key = (
             self.root,
             endpoint,
             astuple(flt) if flt is not None else None,
-            tuple(sorted(params.items())),
+            tuple(sorted(bound.items())),
         )
         hit = self.cache.get(key)
         if hit is not None:

@@ -9,10 +9,9 @@ The per-row invariant of the whole pipeline ("token-array equality") is
 that ``tokens`` passes through parse -> enrich -> route byte-identical
 into every sink row; the codec is only ever *read*, never rewritten.
 
-Vectorized implementations: a pandas Series of list[int32] is decoded
-batch-at-a-time (no per-row Python beyond the unavoidable join; the
-numpy fast path concatenates all tokens of the batch into one array and
-decodes a single bytes buffer, then splits by offsets).
+The parse stage's batch decoder works on Arrow ListArrays
+(``functions.parse._decode_list_array_to_arrow``); ``decode_tokens`` is
+its permissive per-row fallback and the reference decoder in tests.
 """
 
 from __future__ import annotations
@@ -44,46 +43,6 @@ def decode_tokens(tokens) -> str:
             return "�"
 
     return "".join(ch(t) for t in tokens)
-
-
-def decode_series(tokens: pd.Series) -> pd.Series:
-    """Vectorized batch decode of a Series of int token arrays.
-
-    One ``np.concatenate`` of the per-row ndarrays (no per-row dtype
-    upcast/copy — that alone was a 10x tax), ONE utf-32 decode of the
-    flat code-point buffer, then string slicing by offsets. Handles any
-    valid code point; invalid ones (surrogates) fall back to the
-    permissive per-row ``chr`` decoder.
-    """
-    if len(tokens) == 0:
-        return pd.Series([], dtype=object)
-    vals = tokens.to_numpy()
-    lengths = np.fromiter(
-        (0 if a is None else len(a) for a in vals), dtype=np.int64, count=len(vals)
-    )
-    if lengths.sum() == 0:
-        return pd.Series([""] * len(tokens), index=tokens.index, dtype=object)
-    flat = np.concatenate([np.asarray(a) for a, n in zip(vals, lengths) if n])
-    offsets = np.zeros(len(vals) + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    try:
-        if flat.dtype.itemsize == 4:
-            u4 = flat.view(np.uint32)
-        else:
-            # astype('<u4') would wrap out-of-range values mod 2^32
-            # (e.g. int64 2^32+65 -> 'A'), silently turning corrupt
-            # tokens into valid text; bounds-check first and let the
-            # permissive per-row fallback map them to U+FFFD instead.
-            if flat.min() < 0 or flat.max() > 0x10FFFF:
-                raise ValueError("token out of Unicode range")
-            u4 = flat.astype("<u4")
-        s = u4.tobytes().decode("utf-32-le")
-        out = [s[offsets[i] : offsets[i + 1]] for i in range(len(vals))]
-    except (UnicodeDecodeError, TypeError, ValueError):
-        out = [
-            decode_tokens(flat[offsets[i] : offsets[i + 1]]) for i in range(len(vals))
-        ]
-    return pd.Series(out, index=tokens.index, dtype=object)
 
 
 def encode_series(texts: pd.Series) -> pd.Series:

@@ -127,9 +127,10 @@ def q_sink_totals(spark, sf_dir):
     the hard per-round signal, not only in tests/test_compact.py.
 
     The load writes the routed rows as two manifest-committed chunks
-    (clustered layout, so each (category, day) dir gets one file per
-    chunk x salt), compaction bin-packs every dir back to one file and
-    commits its rewrite record, and the aggregate reads the compacted
+    (each chunk's write tasks leave a file in every (category, month)
+    dir they hold, so a dir shared by both chunks has two or more),
+    compaction bin-packs every dir back to one file and commits its
+    rewrite record, and the aggregate reads the compacted
     sink — value-equal to aggregating the in-flight frame, which is
     exactly what the DuckDB oracle computes. ``time`` is coarsened to
     month-start for the temp sink's partition key only (sink_totals
@@ -153,7 +154,7 @@ def q_sink_totals(spark, sf_dir):
     routed = routed_events(spark, sf_dir).withColumn(
         "time", F.date_trunc("month", F.col("time"))
     )
-    writer = MultiSinkWriter(out_root, pre_shuffle=True, salt_buckets=2)
+    writer = MultiSinkWriter(out_root)
     manifest = Manifest(out_root)
     for i in (0, 1):
         chunk_id = f"chunk-{i:05d}"

@@ -1,4 +1,4 @@
-from .parse import LOG_PATTERN, DOMAIN_PATTERN, parse_tokens_udf, PARSED_SCHEMA
+from .parse import LOG_PATTERN, DOMAIN_PATTERN, PARSED_SCHEMA
 from .classify import (
     status_class_expr,
     action_family_expr,
@@ -10,7 +10,6 @@ from .classify import (
 __all__ = [
     "LOG_PATTERN",
     "DOMAIN_PATTERN",
-    "parse_tokens_udf",
     "PARSED_SCHEMA",
     "status_class_expr",
     "action_family_expr",

@@ -1,5 +1,5 @@
 """Vectorized parse stage: decode token payloads, apply the Squid log
-regex, derive every fact column — all in Arrow-batched pandas UDFs.
+regex, derive every fact column — all in one scalar Arrow UDF.
 
 Semantics re-expressed from the reference (cited for parity, not copied):
 
@@ -13,10 +13,12 @@ Semantics re-expressed from the reference (cited for parity, not copied):
 - epoch -> timestamp:    LogParserUtils.java:42-57 (we pin UTC instead of
   the host zone — documented deviation)
 
-Everything is batch-vectorized: one compiled regex applied with
-``Series.str.extract`` per Arrow batch; numeric casts via pandas
-``astype``; no per-row Python in the hot loop except the token decode
-join (see ``codec.decode_series`` fast path).
+Everything is batch-vectorized: the tokens arrive as an Arrow ListArray
+and decode to a StringArray with no per-row Python when every code
+point is ASCII (``_decode_list_array_to_arrow``); one compiled RE2
+regex (``pyarrow.compute.extract_regex``) per Arrow batch extracts the
+groups, and every derived column is a pyarrow compute kernel.
+``parse_lines_pandas`` is the Python-``re`` twin, kept as a test oracle.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -35,8 +37,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-from logparser_spark.codec import decode_series
 
 # Reference LOG_PATTERN (LogFileParser.java:51-63), 11 groups. Group 5
 # (status) is optional; groups 7/10/11 are matched but discarded by the
@@ -177,7 +177,6 @@ def _exceeds_arrow(s, bound: str):
 def parse_lines_arrow(arr) -> dict:
     """Parse an Arrow string array of log lines into a dict of Arrow
     arrays keyed by PARSED_SCHEMA field name (exact target types)."""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     st = pc.extract_regex(arr, _RX_NAMED)
@@ -284,10 +283,9 @@ _ARROW_TYPE_MAPPER = None
 
 
 def _parsed_arrow_to_pandas(cols: dict) -> pd.DataFrame:
-    """Arrow parse output -> the pandas frame a pandas_udf returns,
+    """Arrow parse output -> the pandas frame ``parse_lines`` returns,
     with nullable Int32/Int64 (NOT float64 — epoch_us must stay exact)."""
     global _ARROW_TYPE_MAPPER
-    import pyarrow as pa
 
     if _ARROW_TYPE_MAPPER is None:
         m = {pa.int64(): pd.Int64Dtype(), pa.int32(): pd.Int32Dtype()}
@@ -322,7 +320,6 @@ def sanitize_lines(lines: pd.Series) -> pd.Series:
 def parse_lines(lines: pd.Series) -> pd.DataFrame:
     """Batch-parse decoded log lines into the PARSED_SCHEMA columns
     (Arrow engine; see parse_lines_pandas for the reference twin)."""
-    import pyarrow as pa
 
     filled = lines.astype(object).where(lines.notna(), "")
     try:
@@ -444,40 +441,11 @@ def parse_lines_pandas(lines: pd.Series) -> pd.DataFrame:
     return out
 
 
-@pandas_udf(PARSED_SCHEMA)
-def parse_tokens_udf(tokens: pd.Series) -> pd.DataFrame:
-    """tokens:array<int> -> parsed struct. One Arrow batch at a time.
-
-    Legacy path — kept for inputs that aren't plain top-level columns;
-    the hot path is ``_parse_batches_arrow`` below (the Series-of-lists
-    decode here is ~30x slower than zero-copy ListArray access).
-    """
-    lines = decode_series(tokens)
-    return parse_lines(lines)
-
-
-# Marked ONCE at definition (asNondeterministic mutates the UDF object
-# in place — calling it lazily at a use site would silently flip the
-# shared export's planner behavior mid-process). Rationale for the
-# marker itself: see with_parsed.
-parse_tokens_udf = parse_tokens_udf.asNondeterministic()
-
-
-@pandas_udf(PARSED_SCHEMA)
-def parse_text_udf(lines: pd.Series) -> pd.DataFrame:
-    """Same parse over already-decoded text (driver-oracle path)."""
-    return parse_lines(lines.fillna(""))
-
-
-parse_text_udf = parse_text_udf.asNondeterministic()
-
-
 def _decode_list_array(col) -> list[str]:
     """Zero-copy decode of an arrow list<int32> column of code points:
     ONE utf-32 decode of the flattened values buffer + offset slicing —
     no per-row array materialization (measured 37x faster than the
     Series-of-ndarrays path)."""
-    import pyarrow as pa
 
     ch = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
     off = ch.offsets.to_numpy()
@@ -511,7 +479,6 @@ def _decode_list_array_to_arrow(col):
     values buffer reinterpreted as utf-8 bytes + the list offsets ARE
     the string array (utf-8 == code point for < 128). Non-ASCII or
     null-bearing batches take the utf-32 bulk-decode path."""
-    import pyarrow as pa
 
     ch = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
     if ch.null_count == 0 and len(ch.values) > 0:
@@ -529,45 +496,31 @@ def _decode_list_array_to_arrow(col):
     return pa.array(_decode_list_array(ch), type=pa.string())
 
 
-def make_parse_tokens_arrow_udf():
-    """Scalar *arrow* UDF (Spark 4.1+): tokens ride the Arrow socket as
-    a zero-copy ListArray and the parsed struct rides back as a
-    StructArray — no pandas Series-of-ndarrays materialization on
-    either side (the single biggest Python-side cost of the pandas-UDF
-    formulation), while keeping the zip architecture where the fat
-    payload never leaves the JVM."""
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf(PARSED_SCHEMA)
-    def parse_tokens_arrow(tokens: pa.Array) -> pa.Array:
-        lines = _decode_list_array_to_arrow(tokens)
-        cols = parse_lines_arrow(lines)
-        return pa.StructArray.from_arrays(
-            [cols[f.name] for f in PARSED_SCHEMA.fields],
-            names=[f.name for f in PARSED_SCHEMA.fields],
-        )
-
-    return parse_tokens_arrow.asNondeterministic()
+def _parse_tokens_arrow(tokens: pa.Array) -> pa.Array:
+    """tokens:array<int> -> parsed struct, one Arrow batch at a time —
+    the body of the parse UDF (see with_parsed). Tokens arrive as a
+    zero-copy ListArray and the parsed struct leaves as a StructArray:
+    no pandas on either side."""
+    lines = _decode_list_array_to_arrow(tokens)
+    cols = parse_lines_arrow(lines)
+    return pa.StructArray.from_arrays(
+        [cols[f.name] for f in PARSED_SCHEMA.fields],
+        names=[f.name for f in PARSED_SCHEMA.fields],
+    )
 
 
-def _arrow_schema_with_parsed(df):
-    from pyspark.sql.types import StructType
-
-    return StructType(list(df.schema.fields) + list(PARSED_SCHEMA.fields))
-
-
-def with_parsed(df, tokens_col: str = "tokens", from_text: str | None = None):
+def with_parsed(df):
     """Attach parsed columns + a proper TimestampType ``time`` column.
 
+    The parse runs as ONE scalar Arrow UDF over the tokens column.
     Architecture note (measured both ways, BENCH history): the scalar
-    pandas UDF sends ONLY the tokens column to the Python worker and
+    Arrow UDF sends ONLY the tokens column to the Python worker and
     zips the parsed struct back within the stage — the fat payload
     never round-trips through the Arrow socket, which beats a
     ``mapInArrow`` full-batch formulation by ~2x on the write-heavy
-    pipeline (mapInArrow must ship every column out AND back; see
-    ``parse_tokens_map_in_arrow`` for that variant, right when no
-    passthrough columns are needed downstream). The decode inside the
-    UDF is one concatenate + one utf-32 decode (codec.decode_series).
+    pipeline (mapInArrow must ship every column out AND back). The
+    decode inside the UDF reinterprets the tokens buffer as UTF-8 when
+    every code point is ASCII, else one utf-32 decode per batch.
 
     The UDF returns epoch microseconds; the cast to timestamp happens
     JVM-side so Catalyst sees a native TimestampType column (prunable,
@@ -586,41 +539,12 @@ def with_parsed(df, tokens_col: str = "tokens", from_text: str | None = None):
     (source, doc_id) should filter BEFORE with_parsed, which is where
     scan-pushdown-eligible predicates belong anyway.
     """
-    if from_text:
-        udf_col = parse_text_udf(F.col(from_text))
-    else:
-        try:  # Spark 4.1+ scalar arrow UDF — no pandas on either side
-            udf_col = make_parse_tokens_arrow_udf()(F.col(tokens_col))
-        except ImportError:
-            udf_col = parse_tokens_udf(F.col(tokens_col))
-    df = df.withColumn("_p", udf_col)
+    # The UDF is wrapped per call, not once at import: its JVM twin keeps
+    # the Python accumulator of the SparkContext it was first used
+    # under, so after that context stops every parse task of a new one
+    # logs "Failed to update accumulator" against the dead context.
+    parse = arrow_udf(_parse_tokens_arrow, PARSED_SCHEMA).asNondeterministic()
+    df = df.withColumn("_p", parse(F.col("tokens")))
     parsed_cols = [F.col(f"_p.{f.name}").alias(f.name) for f in PARSED_SCHEMA.fields]
     df = df.select("*", *parsed_cols).drop("_p")
-    return df.withColumn("time", F.timestamp_micros(F.col("epoch_us")))
-
-
-def parse_tokens_map_in_arrow(df, tokens_col: str = "tokens"):
-    """mapInArrow variant: zero-copy ListArray decode, full-batch
-    passthrough. Only preferable when the downstream plan does NOT
-    carry the payload (the batch rides out AND back through the Arrow
-    socket — ~2x slower than the pandas-UDF zip when it does)."""
-    import pyarrow as pa
-
-    out_schema = _arrow_schema_with_parsed(df)
-    tok_idx = df.columns.index(tokens_col)
-
-    def gen(batches):
-        for batch in batches:
-            # shared decoder: keeps the all-ASCII zero-copy fast path
-            # (and the surrogate->U+FFFD fallback) in ONE place
-            lines = _decode_list_array_to_arrow(batch.column(tok_idx))
-            parsed = parse_lines_arrow(lines)
-            arrays = list(batch.columns) + [
-                parsed[f.name] for f in PARSED_SCHEMA.fields
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=[f.name for f in out_schema.fields]
-            )
-
-    df = df.mapInArrow(gen, schema=out_schema)
     return df.withColumn("time", F.timestamp_micros(F.col("epoch_us")))

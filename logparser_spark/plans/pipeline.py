@@ -5,8 +5,9 @@ load (§3.1) with one declarative plan per chunk plus a summary job.
 Stage fusion: scan → parse UDF → enrichment joins → routing projection
 all pipeline inside one shuffle-free stage per task (the parse UDF is
 an Arrow exchange inside the stage; broadcast joins add no shuffle).
-The only wide operations are the final clustered write shuffle and the
-aggregate groupBys — minimal shuffle count by construction.
+The write goes straight from those tasks (``partitionBy``, no shuffle),
+so the only wide operations are the aggregate groupBys — minimal
+shuffle count by construction.
 
 Per-row invariant: ``tokens`` (and doc_id/n_tok/source) pass through
 untouched into every sink row — token-array equality, tested.
@@ -14,6 +15,7 @@ untouched into every sink row — token-array equality, tested.
 
 from __future__ import annotations
 
+import contextlib
 import math
 import time as _time
 
@@ -51,8 +53,6 @@ def run_pipeline(
     input_path: str,
     out_root: str,
     n_chunks: int = 1,
-    salt_buckets: int = 8,
-    pre_shuffle: bool = False,
     fail_after_chunk: int | None = None,
     writer=None,
     progress: bool = False,
@@ -88,15 +88,14 @@ def run_pipeline(
     if progress:
         from logparser_spark.plans.progress import ProgressReporter
 
-        with ProgressReporter(spark, out_root, job_group=job_group):
-            return _run_pipeline_inner(
-                spark, input_path, out_root, n_chunks, salt_buckets,
-                pre_shuffle, fail_after_chunk, writer, compact_after,
-            )
-    return _run_pipeline_inner(
-        spark, input_path, out_root, n_chunks, salt_buckets,
-        pre_shuffle, fail_after_chunk, writer, compact_after,
-    )
+        reporting = ProgressReporter(spark, out_root, job_group=job_group)
+    else:
+        reporting = contextlib.nullcontext()
+    with reporting:
+        return _run_pipeline_inner(
+            spark, input_path, out_root, n_chunks, fail_after_chunk, writer,
+            compact_after,
+        )
 
 
 def _run_pipeline_inner(
@@ -104,8 +103,6 @@ def _run_pipeline_inner(
     input_path: str,
     out_root: str,
     n_chunks: int = 1,
-    salt_buckets: int = 8,
-    pre_shuffle: bool = False,
     fail_after_chunk: int | None = None,
     writer=None,
     compact_after: bool = False,
@@ -115,9 +112,7 @@ def _run_pipeline_inner(
 
     manifest = Manifest(out_root)
     if writer is None:
-        writer = MultiSinkWriter(
-            out_root, salt_buckets=salt_buckets, pre_shuffle=pre_shuffle
-        )
+        writer = MultiSinkWriter(out_root)
     done = manifest.completed_chunks()
 
     files = sorted(_glob.glob(_os.path.join(input_path, "*.parquet")))

@@ -62,6 +62,11 @@ _COMPACT_RX = re.compile(r"^(compact-\d{5})-")
 # every live data file carries its generation prefix (the writer's
 # chunk id or a compaction id) — the commit unit of both protocols
 _GEN_RX = re.compile(r"^((?:chunk|compact)-\d{5})-")
+# codec-default zstd level: a rewrite is off the load path, so it
+# trades the writer's level-1 speed for smaller files
+COMPRESSION = "zstd"
+# partition rewrites submitted at once from driver threads
+MAX_CONCURRENT = 8
 
 
 def _data_dir(out_root: str) -> str:
@@ -109,9 +114,6 @@ def compact_sinks(
     spark: SparkSession,
     out_root: str,
     target_file_bytes: int = 128 << 20,
-    min_files: int = 2,
-    compression: str = "zstd",
-    max_concurrent: int = 8,
 ) -> dict:
     """Rewrite every (category, day) partition holding more parquet
     files than its data needs into ceil(bytes / target_file_bytes)
@@ -151,12 +153,12 @@ def compact_sinks(
             for f in glob.glob(os.path.join(pdir, "*.parquet"))
             if (m := _GEN_RX.match(os.path.basename(f))) and m.group(1) in done
         )
-        if len(files) < min_files:
-            continue
         total = sum(os.path.getsize(f) for f in files)
         n_out = max(1, math.ceil(total / target_file_bytes))
         if len(files) <= n_out:
-            continue  # already at or below the target layout
+            # already at or below the target layout (n_out >= 1, so an
+            # empty or single-file partition is never rewritten)
+            continue
         plans.append((pdir, files, n_out))
 
     staging = os.path.join(out_root, "_staging", compact_id)
@@ -190,7 +192,7 @@ def compact_sinks(
             .parquet(*files)
             .coalesce(n_out)
             .write.mode("overwrite")
-            .option("compression", compression)
+            .option("compression", COMPRESSION)
             .parquet(stage)
         )
         staged_files = sorted(glob.glob(os.path.join(stage, "*.parquet")))
@@ -208,7 +210,7 @@ def compact_sinks(
         staged = []
         if plans:
             with ThreadPoolExecutor(
-                max_workers=min(max_concurrent, len(plans))
+                max_workers=min(MAX_CONCURRENT, len(plans))
             ) as pool:
                 # pool.map re-raises the first worker exception -> the
                 # promote phase below never runs on a partial rewrite

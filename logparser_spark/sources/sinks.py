@@ -19,12 +19,12 @@ partition pruning for free. On a real cluster this maps 1:1 to an
 Iceberg table partitioned by (category, days(time)) with snapshot
 commits replacing the rename step.
 
-Write strategy (measured, BENCH.md): by default rows are written
-DIRECTLY from the parse tasks with ``partitionBy`` — no pre-write
-shuffle of the full payload. Each task writes one file per (category,
-day) it holds, so the file count is bounded by tasks x live partition
-dirs (small: ~5 categories x days-per-chunk), and ``maxRecordsPerFile``
-bounds file size. At 100 TB the avoided shuffle is the single biggest
+Write strategy (measured, BENCH.md): rows are written DIRECTLY from
+the parse tasks with ``partitionBy`` — no pre-write shuffle of the
+full payload. Each task writes one file per (category, day) it holds,
+so the file count is bounded by tasks x live partition dirs (small:
+~5 categories x days-per-chunk), and ``maxRecordsPerFile`` bounds file
+size. At 100 TB the avoided shuffle is the single biggest
 cost in the job; this measured ~25% faster at 8 cores and ~60% faster
 at 32 (the shuffle serializes on exchange I/O).
 
@@ -34,12 +34,9 @@ blob compresses worse than the dictionary-encoded int32 leaf (635 MB vs
 493 MB: codepoints dict-encode to ~1 byte/elem) and the repack costs a
 full-payload Python round-trip. The list<int32> layout stays.
 
-``pre_shuffle=True`` restores the clustered layout — rows shuffled by
-(category, day, salt), salt = pmod(xxhash64(doc_id), S), giving
-minimal files per directory with hot categories spread over S tasks —
-the right choice when the sink is read far more often than written
-(fewer, larger files); compaction (Iceberg rewrite_data_files) achieves
-the same after the fact without taxing the load path.
+A sink read far more often than written gets the clustered layout
+(fewer, larger files per directory) from compaction
+(``sources.compact``), after the fact, without taxing the load path.
 """
 
 from __future__ import annotations
@@ -89,34 +86,24 @@ def day_expr(time_col: str = "time"):
     )
 
 
+# zstd measured BOTH faster and smaller than the snappy default on this
+# token-heavy payload (10M rows, local[32]: 15.5s/488MB vs 21.7s/672MB):
+# the extra compute is cheaper than the extra bytes through the page
+# cache — and at 100 TB the 27% smaller footprint also cuts every
+# downstream scan. Level 1 (not the codec-default 3) for the LOAD path:
+# measured interleaved best-of-3 at 10M rows/local[32]: 15.5s/515MB vs
+# 18.6s/493MB — ~17% faster ingest for +4.5% bytes.
+SINK_COMPRESSION = "zstd"
+SINK_ZSTD_LEVEL = 1
+# bounds file size on a hot (category, day) directory
+MAX_RECORDS_PER_FILE = 2_000_000
+
+
 class MultiSinkWriter:
-    def __init__(
-        self,
-        root: str,
-        salt_buckets: int = 8,
-        pre_shuffle: bool = False,
-        max_records_per_file: int = 2_000_000,
-        compression: str = "zstd",
-        zstd_level: int = 1,
-    ):
-        # zstd measured BOTH faster and smaller than the snappy default
-        # on this token-heavy payload (10M rows, local[32]: 15.5s/488MB
-        # vs 21.7s/672MB): the extra compute is cheaper than the extra
-        # bytes through the page cache — and at 100 TB the 27% smaller
-        # footprint also cuts every downstream scan.
-        # Level 1 (not the codec-default 3) for the LOAD path: measured
-        # interleaved best-of-3 at 10M rows/local[32]: 15.5s/515MB vs
-        # 18.6s/493MB — ~17% faster ingest for +4.5% bytes. Cold-storage
-        # rewrites (compaction) can recompress at a higher level; pass
-        # zstd_level=3 for write-once archival sinks.
-        self.compression = compression
-        self.zstd_level = zstd_level
+    def __init__(self, root: str):
         self.root = root
         self.data_dir = os.path.join(root, "data")
         self.staging_root = os.path.join(root, "_staging")
-        self.salt_buckets = salt_buckets
-        self.pre_shuffle = pre_shuffle
-        self.max_records_per_file = max_records_per_file
 
     def write_chunk(self, df: DataFrame, chunk_id: str) -> int:
         """Write one chunk of routed rows; returns the number of FILES
@@ -133,19 +120,15 @@ class MultiSinkWriter:
         if os.path.exists(staged):
             shutil.rmtree(staged)  # leftover from a crashed attempt
 
-        out = df.withColumn("day", day_expr("time"))
-        if self.pre_shuffle:
-            # Clustered layout: minimal files/partition, salt splits hot
-            # categories across tasks. Costs a full-payload shuffle.
-            out = out.withColumn(
-                "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(self.salt_buckets))
-            )
-            out = out.repartition("category", "day", "_salt").drop("_salt")
-        out.write.mode("overwrite").option(
-            "maxRecordsPerFile", self.max_records_per_file
-        ).option("compression", self.compression).option(
-            "parquet.compression.codec.zstd.level", str(self.zstd_level)
-        ).partitionBy(*SINK_PARTITION_COLS).parquet(staged)
+        (
+            df.withColumn("day", day_expr("time"))
+            .write.mode("overwrite")
+            .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
+            .option("compression", SINK_COMPRESSION)
+            .option("parquet.compression.codec.zstd.level", str(SINK_ZSTD_LEVEL))
+            .partitionBy(*SINK_PARTITION_COLS)
+            .parquet(staged)
+        )
 
         moved = self._promote(staged, chunk_id)
         shutil.rmtree(staged, ignore_errors=True)

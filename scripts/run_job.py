@@ -23,8 +23,6 @@ def main() -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--chunks", type=int, default=1)
-    ap.add_argument("--salt-buckets", type=int, default=8)
-    ap.add_argument("--pre-shuffle", action="store_true")
     ap.add_argument("--skip-aggregates", action="store_true")
     args = ap.parse_args()
 
@@ -34,14 +32,7 @@ def main() -> None:
 
     from logparser_spark.plans.pipeline import run_aggregates, run_pipeline
 
-    stats = run_pipeline(
-        spark,
-        args.input,
-        args.out,
-        n_chunks=args.chunks,
-        salt_buckets=args.salt_buckets,
-        pre_shuffle=args.pre_shuffle,
-    )
+    stats = run_pipeline(spark, args.input, args.out, n_chunks=args.chunks)
     if not args.skip_aggregates:
         run_aggregates(spark, args.out)
     print(json.dumps({"status": "ok", **stats}))

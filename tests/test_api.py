@@ -411,19 +411,52 @@ def test_collect_cached_bounds_rows(api, jvm_calls):
     """The reference's JDBC maxRows (50 000): a request that could
     return more rows — a logs page size or a top-K k above the bound —
     is refused with ValueError before any JVM call; at the bound it is
-    served."""
+    served. A negative k, or a logs page or size below 1, is refused
+    the same way: on the unfiltered (summary) path a negative k would
+    otherwise read as 0 rows, on the filtered (live) path it would reach
+    Spark's limit."""
     from logparser_spark.api import MAX_ROWS
 
-    for endpoint, params in [
-        ("logs", {"size": MAX_ROWS + 1}),
-        ("top_urls", {"k": MAX_ROWS + 1}),
-        ("top_users", {"k": MAX_ROWS + 1}),
+    denied = LogFilter(action="TCP_DENIED")
+    for endpoint, params, match in [
+        ("logs", {"size": MAX_ROWS + 1}, str(MAX_ROWS)),
+        ("top_urls", {"k": MAX_ROWS + 1}, str(MAX_ROWS)),
+        ("top_users", {"k": MAX_ROWS + 1}, str(MAX_ROWS)),
+        ("top_urls", {"k": -1}, "below"),
+        ("top_users", {"k": -1}, "below"),
+        ("logs", {"page": 0}, "below"),
+        ("logs", {"size": 0}, "below"),
     ]:
-        def refused():
-            with pytest.raises(ValueError, match=str(MAX_ROWS)):
-                api.collect_cached(endpoint, **params)
+        for flt in (None, denied):
+            def refused():
+                with pytest.raises(ValueError, match=match):
+                    api.collect_cached(endpoint, flt, **params)
 
-        _, calls = jvm_calls(refused)
-        assert calls == 0, endpoint
+            _, calls = jvm_calls(refused)
+            assert calls == 0, (endpoint, params, flt)
     assert len(api.collect_cached("logs", size=MAX_ROWS)) == api._facts(None).count()
     assert api.collect_cached("top_users", k=MAX_ROWS)
+    assert api.collect_cached("top_urls", k=0) == []
+
+
+def test_collect_cached_keys_on_bound_arguments(spark, api, jvm_calls):
+    """A call that spells out an endpoint's defaults is the same request
+    as one that omits them: the second call of each pair is a cache hit
+    that sends nothing to the JVM and adds no entry."""
+    fresh = LogPipelineAPI(spark, api.root)
+    denied = LogFilter(action="TCP_DENIED")
+    for endpoint, flt, first_params, second_params in [
+        ("top_urls", None, {}, {"k": 100}),
+        ("top_users", None, {"k": 10}, {}),
+        ("logs", None, {}, {"page": 1, "size": 50}),
+        ("top_urls", denied, {"k": 100}, {}),
+    ]:
+        first = fresh.collect_cached(endpoint, flt, **first_params)
+        hits, entries = fresh.cache.hits, len(fresh.cache)
+        second, calls = jvm_calls(
+            lambda: fresh.collect_cached(endpoint, flt, **second_params)
+        )
+        assert calls == 0, (endpoint, flt)
+        assert fresh.cache.hits == hits + 1, (endpoint, flt)
+        assert len(fresh.cache) == entries, (endpoint, flt)
+        assert second == first

@@ -420,6 +420,37 @@ def test_read_sink_without_data_raises_as_before(spark, tmp_path):
         data.mkdir(exist_ok=True)  # next round: the dir exists, holds no file
 
 
+def test_parse_clean_across_spark_context_restart():
+    """with_parsed in a second SparkContext of the same process (a
+    long-lived host that restarts Spark) parses without errors: a UDF
+    object shared across contexts keeps the first context's Python
+    accumulator on its JVM side, and every parse task of the next
+    context then logs "Failed to update accumulator"."""
+    import subprocess
+    import sys
+
+    line = "1709251200.123 250 10.0.3.17 TCP_MISS/200 5120 GET http://x/ u_a_b D t"
+    code = f"""
+import sys
+sys.path.insert(0, {REPO_ROOT!r})
+from logparser_spark.functions.parse import with_parsed
+from logparser_spark.session import build_session
+for _ in range(2):
+    spark = build_session(app_name="restart-test", master="local[2]", shuffle_partitions=2)
+    raw = spark.createDataFrame(
+        [("d1", {[ord(c) for c in line]!r})], "doc_id string, tokens array<int>"
+    )
+    print(with_parsed(raw).select("valid").collect()[0].valid)
+    spark.stop()
+"""
+    proc = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.split() == ["1", "1"]
+    assert "Failed to update accumulator" not in proc.stderr, proc.stderr[-3000:]
+
+
 def test_counts_exact_under_speculation(tiny_input, tmp_path_factory):
     """End-to-end run with spark.speculation=true (a fresh JVM — the
     conf is per-SparkContext): speculative duplicate attempts may

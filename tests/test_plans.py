@@ -51,8 +51,10 @@ def test_parse_stage_shuffle_free(spark, tiny_input):
 
     plan = plan_of(with_parsed(read_raw_sequences(spark, tiny_input)))
     assert "Exchange" not in plan
-    # Arrow-vectorized python stage (mapInArrow), never row-at-a-time
-    assert "MapInArrow" in plan or "ArrowEvalPython" in plan
+    # the one parse path: a scalar Arrow UDF zipped into the stage —
+    # never the full-batch mapInArrow formulation, never row-at-a-time
+    assert "ArrowEvalPython" in plan
+    assert "MapInArrow" not in plan
     assert "BatchEvalPython" not in plan
 
 
