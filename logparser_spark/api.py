@@ -170,13 +170,15 @@ class LogPipelineAPI:
             )
         # Keyed on the BOUND arguments, defaults applied, so a call
         # that spells out a default shares the entry of one that omits
-        # it. self.root is part of the key: the cache= seam invites
-        # sharing one store across facades, and two facades over
+        # it, and an empty filter shares the entry of no filter, as both
+        # answer unfiltered. self.root is part of the key: the cache= seam
+        # invites sharing one store across facades, and two facades over
         # different sink roots must never serve each other's rows.
+        filtered = flt is not None and not flt.is_empty()
         key = (
             self.root,
             endpoint,
-            astuple(flt) if flt is not None else None,
+            astuple(flt) if filtered else None,
             tuple(sorted(bound.items())),
         )
         hit = self.cache.get(key)
@@ -193,7 +195,7 @@ class LogPipelineAPI:
         self.cache.put(
             key,
             tuple(rows),  # immutable: caller mutation can't poison hits
-            filtered=flt is not None and not flt.is_empty(),
+            filtered=filtered,
         )
         return rows
 

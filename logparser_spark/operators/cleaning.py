@@ -37,11 +37,6 @@ def c4_kept_lines_from(text: Column, min_words_per_line: int = 5) -> Column:
     )
 
 
-def c4_kept_lines(text_col: str = "text", min_words_per_line: int = 5) -> Column:
-    """array<string> of the lines the C4 line rules keep."""
-    return c4_kept_lines_from(F.col(text_col), min_words_per_line)
-
-
 def c4_clean(
     df: DataFrame,
     text_col: str = "text",

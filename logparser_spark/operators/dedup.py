@@ -422,11 +422,7 @@ def minhash_lsh_pairs(
     return _exact_jaccard_pairs(docs, threshold, cand=cand)
 
 
-from pyspark.sql.types import LongType
-
-
-@pandas_udf(LongType())
-def _simhash_udf(hs: pd.Series) -> pd.Series:
+def _simhash_fold(hs: pd.Series) -> pd.Series:
     """Vectorized SimHash fold: per-bit +-1 majority vote over a row's
     token hashes, packed into one signed long. One numpy bit-unpack +
     segmented sum per Arrow batch (no per-row Python). Null/empty token
@@ -458,6 +454,15 @@ def _simhash_udf(hs: pd.Series) -> pd.Series:
     packed = np.zeros(n, dtype=np.int64)
     packed[nz] = packed_nz
     return pd.Series(packed)
+
+
+def _simhash_udf(hs):
+    """The fold as a pandas UDF over a column of token-hash arrays. It is
+    wrapped per call, not once at import: its JVM twin keeps the Python
+    accumulator of the SparkContext it was first used under, so after
+    that context stops every task of a new one logs "Failed to update
+    accumulator" against the dead context."""
+    return pandas_udf(_simhash_fold, "long")(hs)
 
 
 def simhash_col(text_col: str = "text"):

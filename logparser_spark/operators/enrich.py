@@ -13,7 +13,6 @@ rows absent from each dim.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,19 +49,3 @@ def enrich(df: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
         "action_family", F.coalesce(F.col("action_family"), F.lit("OTHER"))
     ).withColumn("ip_class", F.coalesce(F.col("ip_class"), F.lit("external")))
 
-
-def enrich_pandas_oracle(parsed: pd.DataFrame) -> pd.DataFrame:
-    """Oracle-side enrichment (same dims, pandas merges)."""
-    dims = dim_tables()
-    out = parsed.merge(
-        dims["dim_action"][["action", "action_family"]], on="action", how="left"
-    )
-    out = out.merge(dims["dim_source"], on="source", how="left")
-    pref = out["ip"].str.split(".").str[:2].str.join(".")
-    out["_ip_prefix"] = pref
-    out = out.merge(
-        dims["dim_ip_class"], left_on="_ip_prefix", right_on="ip_prefix", how="left"
-    ).drop(columns=["_ip_prefix", "ip_prefix"])
-    out["action_family"] = out["action_family"].fillna("OTHER")
-    out["ip_class"] = out["ip_class"].fillna("external")
-    return out

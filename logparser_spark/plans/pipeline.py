@@ -19,9 +19,10 @@ import contextlib
 import math
 import time as _time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from logparser_spark.cache import invalidate_registered
 from logparser_spark.functions.classify import category_expr
 from logparser_spark.functions.parse import with_parsed
 from logparser_spark.operators import aggregates as agg
@@ -39,6 +40,75 @@ def build_routed(spark: SparkSession, raw: DataFrame) -> DataFrame:
         "category",
         category_expr(F.col("valid"), F.coalesce(F.col("action"), F.lit("")), F.col("status_code")),
     )
+
+
+def load_chunk(
+    spark: SparkSession,
+    raw: DataFrame,
+    chunk_id: str,
+    writer,
+    manifest: Manifest,
+    lineage: dict,
+) -> int:
+    """Load one chunk of raw sequences and commit it; returns its exact
+    row count. The one commit path of every load: ``run_pipeline``'s
+    file chunks and ``streaming.stream_pipeline``'s micro-batches.
+
+    Any partial output of a crashed earlier attempt under ``chunk_id``
+    is rolled back first, so re-running an id the manifest does not hold
+    is idempotent. ``lineage`` names the input in the manifest record
+    (``input_files`` of a batch chunk, ``batch_id`` of a micro-batch).
+    """
+    writer.remove_chunk(chunk_id)
+    t0 = _time.monotonic()
+    routed = build_routed(spark, raw)
+
+    # Counts: the WRITER's exact source (parquet footers / Iceberg
+    # chunk-tag metadata — no data pages read) is the source of record.
+    # Observation accumulators ride the write job for free but OVERCOUNT
+    # under speculative execution AND ordinary stage reattempts (e.g.
+    # fetch-failure retries — which happen on real clusters without
+    # speculation), so they are only the cross-check: a disagreement is
+    # recorded in the manifest as reattempt-inflation lineage.
+    obs = Observation(chunk_id)
+    writer.write_chunk(routed.observe(obs, F.count(F.lit(1)).alias("_rows")), chunk_id)
+
+    observed_rows = obs.get["_rows"]
+    rows, cat_counts = writer.exact_chunk_counts(chunk_id)
+    dt = _time.monotonic() - t0
+    # lineage: Iceberg-backed writers expose the committed snapshot
+    snapshot_id = (
+        writer.last_snapshot_id(chunk_id)
+        if hasattr(writer, "last_snapshot_id")
+        else None
+    )
+    partitions = (
+        writer.partition_metrics(chunk_id)
+        if hasattr(writer, "partition_metrics")
+        else None
+    )
+    manifest.commit_chunk(
+        {
+            "chunk_id": chunk_id,
+            **lineage,
+            **({"snapshot_id": snapshot_id} if snapshot_id is not None else {}),
+            "rows": rows,
+            "rows_per_category": cat_counts,
+            # cross-check trail: observed != exact means duplicate
+            # successful task attempts inflated the accumulators
+            **({"observed_rows": observed_rows} if observed_rows != rows else {}),
+            "wall_sec": round(dt, 3),
+            "rows_per_sec": round(rows / dt, 1) if dt > 0 else None,
+            # per-partition lineage + throughput: rows/bytes/files per
+            # (category, day) dir this chunk produced, and the chunk
+            # rate attributed per partition by row share
+            **({"partitions": partitions} if partitions else {}),
+        }
+    )
+    # C4 from the loader, like the reference (LogFileParser.java:
+    # 714-719): data changed, so every live response cache is stale
+    invalidate_registered()
+    return rows
 
 
 def _chunk_files(files: list[str], n_chunks: int) -> list[list[str]]:
@@ -73,7 +143,7 @@ def run_pipeline(
     resume continues with the next chunk).
 
     ``writer`` swaps the sink format — anything with the
-    write_chunk/remove_chunk contract, e.g.
+    write_chunk/remove_chunk/exact_chunk_counts contract, e.g.
     ``sources.iceberg.IcebergMultiSinkWriter`` for snapshot commits
     when the Iceberg runtime is on the classpath (the default parquet
     writer's rename-promote protocol is the sandbox stand-in).
@@ -138,80 +208,9 @@ def _run_pipeline_inner(
                     "input set or n_chunks changed — use a fresh out_root"
                 )
             continue
-        # roll back any partial output of a crashed previous attempt
-        writer.remove_chunk(chunk_id)
-
-        t0 = _time.monotonic()
         raw = read_raw_sequences(spark, chunk_files)
-        routed = build_routed(spark, raw)
-
-        # Per-category counts ride on the write job itself as observed
-        # metrics (the routing key has a fixed vocabulary) — zero extra
-        # jobs, no re-read of written data.
-        from pyspark.sql import Observation
-
-        from logparser_spark.functions.classify import CATEGORIES
-
-        # Counts: the WRITER's exact source (parquet footers / Iceberg
-        # chunk-tag metadata — no data pages read) is the source of
-        # record whenever the writer provides one. Observation
-        # accumulators ride the write job for free but OVERCOUNT under
-        # speculative execution AND ordinary stage reattempts (e.g.
-        # fetch-failure retries — which happen on real clusters without
-        # speculation), so they are only the cross-check: a disagreement
-        # is recorded in the manifest as reattempt-inflation lineage.
-        obs = Observation(chunk_id)
-        routed = routed.observe(
-            obs,
-            F.count(F.lit(1)).alias("_rows"),
-            *[
-                F.count(F.when(F.col("category") == c, 1)).alias(c)
-                for c in CATEGORIES
-            ],
-        )
-        writer.write_chunk(routed, chunk_id)
-
-        vals = obs.get
-        observed_rows = vals["_rows"]
-        if hasattr(writer, "exact_chunk_counts"):
-            rows, cat_counts = writer.exact_chunk_counts(chunk_id)
-        else:
-            cat_counts = {c: vals[c] for c in CATEGORIES if vals[c]}
-            rows = observed_rows
-        total_rows += rows
-        dt = _time.monotonic() - t0
-        # lineage: Iceberg-backed writers expose the committed snapshot
-        snapshot_id = (
-            writer.last_snapshot_id(chunk_id)
-            if hasattr(writer, "last_snapshot_id")
-            else None
-        )
-        partitions = (
-            writer.partition_metrics(chunk_id)
-            if hasattr(writer, "partition_metrics")
-            else None
-        )
-        manifest.commit_chunk(
-            {
-                "chunk_id": chunk_id,
-                "input_files": chunk_files,
-                **({"snapshot_id": snapshot_id} if snapshot_id is not None else {}),
-                "rows": rows,
-                "rows_per_category": cat_counts,
-                # cross-check trail: observed != exact means duplicate
-                # successful task attempts inflated the accumulators
-                **(
-                    {"observed_rows": observed_rows}
-                    if observed_rows != rows
-                    else {}
-                ),
-                "wall_sec": round(dt, 3),
-                "rows_per_sec": round(rows / dt, 1) if dt > 0 else None,
-                # per-partition lineage + throughput: rows/bytes/files per
-                # (category, day) dir this chunk produced, and the chunk
-                # rate attributed per partition by row share
-                **({"partitions": partitions} if partitions else {}),
-            }
+        total_rows += load_chunk(
+            spark, raw, chunk_id, writer, manifest, {"input_files": chunk_files}
         )
         if fail_after_chunk is not None and i >= fail_after_chunk:
             raise RuntimeError(f"injected failure after {chunk_id}")
@@ -243,11 +242,6 @@ def _run_pipeline_inner(
                 "compact_after=True but the writer exposes neither "
                 "compact() nor the parquet sink layout (data_dir)"
             )
-    # C4 from the loader, like the reference (LogFileParser.java:
-    # 714-719): data changed, so every live response cache is stale
-    from logparser_spark.cache import invalidate_registered
-
-    invalidate_registered()
     return out
 
 
@@ -321,7 +315,5 @@ def run_aggregates(spark: SparkSession, out_root: str) -> dict[str, int]:
 
     rows = {name: publish(name, table) for name, table in tables.items()}
     # C4: summaries republished — evict live response caches
-    from logparser_spark.cache import invalidate_registered
-
     invalidate_registered()
     return rows

@@ -76,11 +76,3 @@ def build_session(
         b = b.config(k, v)
     return b.getOrCreate()
 
-
-def get_or_create(spark: SparkSession | None = None) -> SparkSession:
-    """Reuse an externally supplied session (the driver passes one in),
-    pinning only the confs that affect correctness."""
-    if spark is None:
-        return build_session()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark

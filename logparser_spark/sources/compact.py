@@ -59,9 +59,11 @@ from logparser_spark.plans.checkpoint import Manifest
 from logparser_spark.sources.sinks import footer_row_count, footer_schema
 
 _COMPACT_RX = re.compile(r"^(compact-\d{5})-")
-# every live data file carries its generation prefix (the writer's
-# chunk id or a compaction id) — the commit unit of both protocols
-_GEN_RX = re.compile(r"^((?:chunk|compact)-\d{5})-")
+# every live data file carries its generation prefix (a batch chunk
+# id, a stream micro-batch id or a compaction id) — the commit unit of
+# both protocols. Five digits or more: a stream's batch ids outgrow
+# the zero padding (a 1 s trigger passes 99,999 in about 28 hours)
+_GEN_RX = re.compile(r"^((?:chunk|compact|stream)-\d{5,})-")
 # codec-default zstd level: a rewrite is off the load path, so it
 # trades the writer's level-1 speed for smaller files
 COMPRESSION = "zstd"

@@ -75,8 +75,7 @@ def day_expr(time_col: str = "time"):
     epoch arithmetic instead of date_format(), which honors
     spark.sql.session.timeZone — an unpinned consumer session must not
     split one UTC day's rows across two partition directories of the
-    same sink. Shared by the batch writer and the streaming sink so
-    their layouts can never diverge."""
+    same sink."""
     # floor division (div truncates toward zero): pre-epoch timestamps
     # must land in their own UTC day, not roll up into 1970-01-01
     return F.expr(
@@ -264,19 +263,6 @@ def _footer_stats(path: str, time_col: str) -> tuple[int, tuple | None]:
             wm = cand
             wm_key = (key, v.isoformat() if hasattr(v, "isoformat") else str(v))
     return md.num_rows, wm_key
-
-
-def chunk_counts_from_footers(root: str, chunk_id: str) -> tuple[int, dict[str, int]]:
-    """Exact (total, per-category) row counts of one promoted chunk from
-    parquet footer metadata — no Spark job, no data pages read.
-
-    This is the count source of record when speculative execution or
-    stage reattempts could make Observation accumulators overcount
-    (duplicate successful task attempts each add their metrics); footer
-    counts reflect only the files actually promoted. Thin wrapper over
-    the writer method so the glob/parse logic lives once.
-    """
-    return MultiSinkWriter(root).exact_chunk_counts(chunk_id)
 
 
 def footer_schema(path: str) -> StructType:

@@ -1,20 +1,20 @@
-"""Structured Streaming variant of the pipeline head.
+"""Structured Streaming load: each micro-batch is one more chunk.
 
 The reference is strictly batch (SURVEY.md §2.8 — its only 'stream' is
-an in-process pipe), so this module is an extension, not parity: the
-same parse -> enrich -> route lineage runs over ``readStream``, giving
-continuous ingestion with exactly-once file-sink semantics and
-checkpoint-based resume — the streaming analog of the batch manifest.
+an in-process pipe), so this module is an extension, not parity. It
+adds no second sink layout: ``foreachBatch`` hands every micro-batch to
+``plans.pipeline.load_chunk``, the commit path batch loads run, so a
+batch lands as ``stream-NNNNN``-prefixed files in the same
+``<root>/data`` tree and one manifest record. Readers, compaction,
+rollback and the published summaries see streamed and batch rows alike.
 
-Composition is unchanged (the point of declaring stages as
-DataFrame -> DataFrame functions): ``with_parsed`` (Arrow-batched UDF),
-``enrich`` (broadcast joins) and ``category_expr`` are applied to a
-streaming frame verbatim. Watermarked windowed counts stand in for the
-post-load aggregate stage.
-
-Scale notes: ``maxFilesPerTrigger`` bounds micro-batch size; the
-partitioned file sink fans out (category, day) exactly like the batch
-writer; state for the windowed aggregate is bounded by the watermark.
+Resume is the batch contract: Spark's checkpoint (``<root>/_checkpoint``)
+replays a batch whose commit it did not log, under the same batch id; an
+id the manifest already holds is skipped, and any other is rolled back
+by ``load_chunk`` and loaded again. A query drains the files present
+at its start (``availableNow``) and stops; ``maxFilesPerTrigger``
+bounds the size of a micro-batch. Publishing the summaries stays the caller's job,
+as after ``run_pipeline``.
 """
 
 from __future__ import annotations
@@ -22,11 +22,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from logparser_spark.plans.pipeline import build_routed
+from logparser_spark.plans.checkpoint import Manifest
+from logparser_spark.plans.pipeline import load_chunk
 from logparser_spark.sources.sequences import RAW_SCHEMA
-from logparser_spark.sources.sinks import day_expr
+from logparser_spark.sources.sinks import MultiSinkWriter
 
 
 def read_sequence_stream(
@@ -45,62 +45,32 @@ def read_sequence_stream(
     return reader.parquet(path)
 
 
-def build_routed_stream(spark: SparkSession, raw: DataFrame) -> DataFrame:
-    """THE batch routing plan applied to a stream — literally the same
-    function (``plans.pipeline.build_routed`` is streaming-safe: pure
-    projections + a broadcast dim join), so batch/stream routing cannot
-    diverge."""
-    return build_routed(spark, raw)
-
-
-def start_routed_sink(
-    routed: DataFrame, out_root: str, trigger_available_now: bool = True
-):
-    """Continuous multi-sink writer: partitioned append file sink with
-    its own checkpoint (exactly-once per file via the sink log)."""
-    writer = (
-        routed.withColumn("day", day_expr("time"))
-        .writeStream.format("parquet")
-        .option("path", os.path.join(out_root, "data"))
-        .option("checkpointLocation", os.path.join(out_root, "_checkpoint"))
-        .partitionBy("category", "day")
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_windowed_counts(
-    routed: DataFrame,
+def start_stream_load(
+    spark: SparkSession,
+    input_path: str,
     out_root: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    trigger_available_now: bool = True,
+    max_files_per_trigger: int | None = None,
 ):
-    """Watermarked tumbling-window per-category counts — the streaming
-    analog of the hourly histogram; late rows beyond the watermark are
-    dropped deterministically and state is bounded."""
-    counts = (
-        routed.withWatermark("time", watermark)
-        .groupBy(F.window("time", window).alias("w"), "category")
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.sum("response_size_bytes").alias("bytes_total"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "category",
-            "row_count",
-            "bytes_total",
-        )
+    """Start draining the raw sequence files under ``input_path`` into
+    the sink at ``out_root`` (an ``availableNow`` trigger), one chunk
+    ``stream-{batch_id:05d}`` per micro-batch. Returns the running
+    ``StreamingQuery``."""
+    writer = MultiSinkWriter(out_root)
+    manifest = Manifest(out_root)
+    # Read once per query run: Spark replays at most one batch, the first
+    # of the run, so only ids committed before the start can recur.
+    committed = set(manifest.completed_chunks())
+
+    def load_batch(raw: DataFrame, batch_id: int) -> None:
+        chunk_id = f"stream-{batch_id:05d}"
+        if chunk_id in committed:
+            return  # a replay of a batch committed before a crash
+        load_chunk(raw.sparkSession, raw, chunk_id, writer, manifest, {"batch_id": batch_id})
+
+    return (
+        read_sequence_stream(spark, input_path, max_files_per_trigger)
+        .writeStream.foreachBatch(load_batch)
+        .option("checkpointLocation", os.path.join(out_root, "_checkpoint"))
+        .trigger(availableNow=True)
+        .start()
     )
-    writer = (
-        counts.writeStream.format("parquet")
-        .option("path", os.path.join(out_root, "counts"))
-        .option("checkpointLocation", os.path.join(out_root, "_counts_checkpoint"))
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -441,22 +441,25 @@ def test_collect_cached_bounds_rows(api, jvm_calls):
 
 def test_collect_cached_keys_on_bound_arguments(spark, api, jvm_calls):
     """A call that spells out an endpoint's defaults is the same request
-    as one that omits them: the second call of each pair is a cache hit
-    that sends nothing to the JVM and adds no entry."""
+    as one that omits them, and an empty filter (an HTTP layer's absent
+    query params) the same as none: the second call of each pair is a
+    cache hit that sends nothing to the JVM and adds no entry."""
     fresh = LogPipelineAPI(spark, api.root)
     denied = LogFilter(action="TCP_DENIED")
-    for endpoint, flt, first_params, second_params in [
-        ("top_urls", None, {}, {"k": 100}),
-        ("top_users", None, {"k": 10}, {}),
-        ("logs", None, {}, {"page": 1, "size": 50}),
-        ("top_urls", denied, {"k": 100}, {}),
+    for endpoint, first_flt, first_params, second_flt, second_params in [
+        ("top_urls", None, {}, None, {"k": 100}),
+        ("top_users", None, {"k": 10}, None, {}),
+        ("logs", None, {}, None, {"page": 1, "size": 50}),
+        ("top_urls", denied, {"k": 100}, denied, {}),
+        ("statistics", None, {}, LogFilter(), {}),
+        ("statistics", None, {}, LogFilter(ip=""), {}),
     ]:
-        first = fresh.collect_cached(endpoint, flt, **first_params)
+        first = fresh.collect_cached(endpoint, first_flt, **first_params)
         hits, entries = fresh.cache.hits, len(fresh.cache)
         second, calls = jvm_calls(
-            lambda: fresh.collect_cached(endpoint, flt, **second_params)
+            lambda: fresh.collect_cached(endpoint, second_flt, **second_params)
         )
-        assert calls == 0, (endpoint, flt)
-        assert fresh.cache.hits == hits + 1, (endpoint, flt)
-        assert len(fresh.cache) == entries, (endpoint, flt)
+        assert calls == 0, (endpoint, second_flt)
+        assert fresh.cache.hits == hits + 1, (endpoint, second_flt)
+        assert len(fresh.cache) == entries, (endpoint, second_flt)
         assert second == first

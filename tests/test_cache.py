@@ -154,7 +154,7 @@ def test_invalidate_registered_reaches_live_caches(clocked):
 
 
 def test_load_path_invokes_registered_eviction(monkeypatch):
-    """The wiring itself: run_pipeline's commit tail and
+    """The wiring itself: load_chunk's commit tail and
     run_aggregates' publish tail both call invalidate_registered (the
     reference evicts from the loader, LogFileParser.java:714-719)."""
     import inspect

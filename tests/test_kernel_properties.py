@@ -83,7 +83,7 @@ def naive_simhash(hs):
 @settings(max_examples=60, deadline=None)
 @given(rows=hash_rows)
 def test_simhash_matches_bit_vote_oracle(rows):
-    got = dedup._simhash_udf.func(pd.Series(rows, dtype=object))
+    got = dedup._simhash_fold(pd.Series(rows, dtype=object))
     assert list(got) == [naive_simhash(r) for r in rows]
 
 

@@ -315,6 +315,22 @@ def test_publish_runs_nine_spark_jobs(spark, pipeline_out, spark_jobs):
     assert jobs == 9
 
 
+def test_one_chunk_load_runs_four_spark_jobs(spark, tiny_input, pipeline_out, tmp_path, spark_jobs):
+    """A one-chunk load through the shared per-chunk commit path runs 4
+    Spark jobs on this fixture (``pipeline_out`` warms the session), and
+    its manifest record carries the batch lineage keys."""
+    from logparser_spark.plans.checkpoint import Manifest
+
+    out = str(tmp_path / "one")
+    _, jobs = spark_jobs(lambda: run_pipeline(spark, tiny_input, out))
+    assert jobs == 4
+    rec = Manifest(out).completed_chunks()["chunk-00000"]
+    assert set(rec) == {
+        "chunk_id", "input_files", "rows", "rows_per_category",
+        "wall_sec", "rows_per_sec", "partitions",
+    }
+
+
 def test_bounded_summaries_scan_the_sink_once(spark, pipeline_out, plan_nodes):
     """The five bounded summaries cost one read of the sink: the fused
     query's executed plan holds exactly one parquet scan node."""
@@ -421,11 +437,11 @@ def test_read_sink_without_data_raises_as_before(spark, tmp_path):
 
 
 def test_parse_clean_across_spark_context_restart():
-    """with_parsed in a second SparkContext of the same process (a
-    long-lived host that restarts Spark) parses without errors: a UDF
-    object shared across contexts keeps the first context's Python
-    accumulator on its JVM side, and every parse task of the next
-    context then logs "Failed to update accumulator"."""
+    """with_parsed and simhash in a second SparkContext of the same
+    process (a long-lived host that restarts Spark) run without errors:
+    a UDF object shared across contexts keeps the first context's Python
+    accumulator on its JVM side, and every task of the next context then
+    logs "Failed to update accumulator"."""
     import subprocess
     import sys
 
@@ -434,6 +450,7 @@ def test_parse_clean_across_spark_context_restart():
 import sys
 sys.path.insert(0, {REPO_ROOT!r})
 from logparser_spark.functions.parse import with_parsed
+from logparser_spark.operators.dedup import simhash
 from logparser_spark.session import build_session
 for _ in range(2):
     spark = build_session(app_name="restart-test", master="local[2]", shuffle_partitions=2)
@@ -441,13 +458,15 @@ for _ in range(2):
         [("d1", {[ord(c) for c in line]!r})], "doc_id string, tokens array<int>"
     )
     print(with_parsed(raw).select("valid").collect()[0].valid)
+    docs = spark.createDataFrame([("d1", "a b c"), ("d2", "a b d")], "doc_id string, text string")
+    print(len(simhash(docs).collect()))
     spark.stop()
 """
     proc = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, timeout=300
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    assert proc.stdout.split() == ["1", "1"]
+    assert proc.stdout.split() == ["1", "2", "1", "2"]
     assert "Failed to update accumulator" not in proc.stderr, proc.stderr[-3000:]
 
 
