@@ -12,8 +12,8 @@ status-less actions (fallback heuristic, LogFileParser.java:1127-1145),
 usernames (LogParserUtils.java:19-28), ~3% malformed lines, rt == 0
 rows (the AVG gate, StatisticsService.java:146-148).
 
-``source`` is Zipf-skewed (proxy-00 holds ~50% of rows) to exercise the
-salted aggregation path at scale.
+``source`` is Zipf-skewed (proxy-00 holds ~50% of rows), so aggregates
+over it meet a hot key at scale.
 """
 
 from __future__ import annotations

@@ -1,11 +1,16 @@
 """Aggregate stage — A1-A13 of SURVEY.md §2.5, computed per sink.
 
 All aggregates are single-pass hash aggregations with map-side partial
-aggregation (Spark does partial/final automatically). The only special
-handling is skew: group keys dominated by hot values (url/username
-under Zipf traffic, category=success) go through an explicit two-phase
-salted groupBy (see ``salted_topk``) — partials on (key, salt), final
-on key — per the north rule.
+aggregation, which Spark always plans. That partial aggregate is the
+skew handling: a hot key (url/username under Zipf traffic,
+category=success) sends at most one partial row per map task to its
+reducer, never its raw rows, so no key needs a salt. A test on a
+90%-hot url and username pins that bound on the top-K exchange.
+
+The operators add no exchange beyond their aggregates' own. The
+bounded results (categories x 24 rows at most) are sorted in one
+partition (``_sorted_small``) instead of range-partitioned; the top-K
+lists end in TakeOrderedAndProject.
 
 The publish path computes the five vocabulary-bounded summaries in one
 GROUPING SETS aggregate (``bounded_summaries`` + ``split_bounded``),
@@ -74,6 +79,17 @@ def totals_aggs(approx_distinct: bool = False) -> list[Column]:
     ]
 
 
+def _sorted_small(df: DataFrame, *keys: str) -> DataFrame:
+    """``df`` — a bounded aggregate result (at most categories x 24
+    rows) — in ``keys`` order, ascending with nulls first, as
+    ``orderBy(*keys)`` sorts it, but without ``orderBy``'s range
+    partitioning: no boundary-sampling job and no sort exchange. The
+    ``coalesce(1)`` sits above the aggregate's exchange, so only that
+    final stage runs as one task; the scan and the partial aggregate
+    keep their parallelism."""
+    return df.coalesce(1).sortWithinPartitions(*keys)
+
+
 def sink_totals(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
     """Per-category: A1 count, A2 errors, A3 distinct ip, A6 avg rt
     (rt>0 only), A7 bytes sum — one pass, one shuffle on category.
@@ -83,17 +99,17 @@ def sink_totals(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
     for 10^12-row scale, where the exact distinct forces a per-category
     ip expansion. Tests pin the exact path; the approx path is asserted
     within tolerance."""
-    return df.groupBy("category").agg(*totals_aggs(approx_distinct)).orderBy("category")
+    return _sorted_small(df.groupBy("category").agg(*totals_aggs(approx_distinct)), "category")
 
 
 def status_hist(df: DataFrame) -> DataFrame:
     """A4: category × status_class counts (valid rows)."""
-    return (
+    counts = (
         df.filter(F.col("valid") == 1)
         .groupBy("category", status_class_expr(F.col("status_code")).alias("status_class"))
         .agg(F.count(F.lit(1)).alias("row_count"))
-        .orderBy("category", "status_class")
     )
+    return _sorted_small(counts, "category", "status_class")
 
 
 def hourly_hist(df: DataFrame) -> DataFrame:
@@ -113,125 +129,62 @@ def hourly_hist(df: DataFrame) -> DataFrame:
     dense = counts.groupBy("category").agg(
         F.map_from_entries(F.collect_list(F.struct("hour", "cnt"))).alias("m")
     )
+    slots = dense.select(
+        "category", "m", F.explode(F.sequence(F.lit(0), F.lit(23))).alias("hour")
+    ).select(
+        "category",
+        F.col("hour").cast("int").alias("hour"),
+        F.coalesce(F.try_element_at("m", F.col("hour")), F.lit(0)).alias("row_count"),
+    )
+    return _sorted_small(slots, "category", "hour")
+
+
+def top_urls(df: DataFrame, k: int = 100) -> DataFrame:
+    """A8 with pinned tie-break (count DESC, url ASC): one aggregate,
+    then TakeOrderedAndProject (no global sort)."""
     return (
-        dense.select(
-            "category", "m", F.explode(F.sequence(F.lit(0), F.lit(23))).alias("hour")
+        df.filter((F.col("valid") == 1) & F.col("url").isNotNull() & (F.col("url") != "-"))
+        .groupBy("url", "domain")
+        .agg(
+            F.count(F.lit(1)).alias("request_count"),
+            _round_java(F.avg("response_time_ms")).alias("avg_response_time"),
+            F.sum("response_size_bytes").alias("total_bytes"),
+            F.max("epoch_us").alias("last_access_us"),
         )
-        .select(
-            "category",
-            F.col("hour").cast("int").alias("hour"),
-            F.coalesce(F.try_element_at("m", F.col("hour")), F.lit(0)).alias(
-                "row_count"
-            ),
-        )
-        .orderBy("category", "hour")
+        .orderBy(F.desc("request_count"), F.asc("url"))
+        .limit(k)
     )
 
 
-def salted_topk(
-    df: DataFrame,
-    keys: list[str],
-    aggs: list[Column],
-    merge_aggs: list[Column],
-    k: int,
-    order_key: str,
-    salt_buckets: int = 16,
-    salt_src: str = "doc_id",
-) -> DataFrame:
-    """Two-phase salted groupBy + TakeOrderedAndProject.
+def top_users(df: DataFrame, k: int = 10) -> DataFrame:
+    """A9 with pinned tie-break (count DESC, username ASC): one
+    aggregate, then TakeOrderedAndProject.
 
-    Phase 1 aggregates on (keys..., salt) — hot keys spread over
-    ``salt_buckets`` reducers; phase 2 merges partials per key (input
-    already tiny: #distinct_keys × salt_buckets). The final
-    orderBy+limit compiles to TakeOrderedAndProject (no global sort).
-    """
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(salt_src), F.lit(salt_buckets)))
-    partial = salted.groupBy(*keys, "_salt").agg(*aggs)
-    merged = partial.groupBy(*keys).agg(*merge_aggs)
-    return merged.orderBy(F.desc("request_count"), F.asc(order_key)).limit(k)
-
-
-def top_urls(df: DataFrame, k: int = 100, salted: bool = True) -> DataFrame:
-    """A8 with pinned tie-break (count DESC, url ASC)."""
-    base = df.filter(
-        (F.col("valid") == 1) & F.col("url").isNotNull() & (F.col("url") != "-")
-    )
-    if not salted:
-        return (
-            base.groupBy("url", "domain")
-            .agg(
-                F.count(F.lit(1)).alias("request_count"),
-                _round_java(F.avg("response_time_ms")).alias("avg_response_time"),
-                F.sum("response_size_bytes").alias("total_bytes"),
-                F.max("epoch_us").alias("last_access_us"),
-            )
-            .orderBy(F.desc("request_count"), F.asc("url"))
-            .limit(k)
+    COUNT(DISTINCT ip) is exact and, like it, ignores nulls:
+    ``size(collect_set(ip))``. Unlike ``countDistinct`` it needs no
+    expand-and-regroup, so the plan keeps one exchange; the partial
+    aggregate sends each map task's IP set per user, not its rows (set
+    sizes are bounded by the ip pool; at true 10^12 scale swap in
+    approx_count_distinct)."""
+    return (
+        df.filter(
+            (F.col("valid") == 1)
+            & F.col("username").isNotNull()
+            & (F.col("username") != "-")
         )
-    aggs = [
-        F.count(F.lit(1)).alias("c"),
-        F.sum("response_time_ms").alias("rt_sum"),
-        F.sum("response_size_bytes").alias("b_sum"),
-        F.max("epoch_us").alias("la"),
-    ]
-    merge = [
-        F.sum("c").alias("request_count"),
-        _round_java(F.sum("rt_sum") / F.sum("c")).alias("avg_response_time"),
-        F.sum("b_sum").alias("total_bytes"),
-        F.max("la").alias("last_access_us"),
-    ]
-    return salted_topk(base, ["url", "domain"], aggs, merge, k, "url")
-
-
-def top_users(df: DataFrame, k: int = 10, salted: bool = True) -> DataFrame:
-    """A9 with pinned tie-break (count DESC, username ASC).
-
-    COUNT(DISTINCT ip) is exact: the salted partial keeps per-salt
-    distinct ip sets collapsed via collect_set, merged and de-dup'd in
-    the final phase (set sizes are bounded by the fixture's ip pool; at
-    true 10^12 scale swap in approx_count_distinct — documented knob).
-    """
-    base = df.filter(
-        (F.col("valid") == 1)
-        & F.col("username").isNotNull()
-        & (F.col("username") != "-")
-    )
-    if not salted:
-        return (
-            base.groupBy("username")
-            .agg(
-                F.min("ip").alias("min_ip"),
-                F.count(F.lit(1)).alias("request_count"),
-                F.countDistinct("ip").alias("unique_ips"),
-                _round_java(F.avg("response_time_ms")).alias("avg_response_time"),
-                F.sum("response_size_bytes").alias("total_bytes"),
-                F.min("epoch_us").alias("first_seen_us"),
-                F.max("epoch_us").alias("last_seen_us"),
-            )
-            .orderBy(F.desc("request_count"), F.asc("username"))
-            .limit(k)
+        .groupBy("username")
+        .agg(
+            F.min("ip").alias("min_ip"),
+            F.count(F.lit(1)).alias("request_count"),
+            F.size(F.collect_set("ip")).cast("long").alias("unique_ips"),
+            _round_java(F.avg("response_time_ms")).alias("avg_response_time"),
+            F.sum("response_size_bytes").alias("total_bytes"),
+            F.min("epoch_us").alias("first_seen_us"),
+            F.max("epoch_us").alias("last_seen_us"),
         )
-    aggs = [
-        F.min("ip").alias("mi"),
-        F.count(F.lit(1)).alias("c"),
-        F.collect_set("ip").alias("ips"),
-        F.sum("response_time_ms").alias("rt_sum"),
-        F.sum("response_size_bytes").alias("b_sum"),
-        F.min("epoch_us").alias("fs"),
-        F.max("epoch_us").alias("ls"),
-    ]
-    merge = [
-        F.min("mi").alias("min_ip"),
-        F.sum("c").alias("request_count"),
-        F.size(F.array_distinct(F.flatten(F.collect_list("ips")))).cast("long").alias(
-            "unique_ips"
-        ),
-        _round_java(F.sum("rt_sum") / F.sum("c")).alias("avg_response_time"),
-        F.sum("b_sum").alias("total_bytes"),
-        F.min("fs").alias("first_seen_us"),
-        F.max("ls").alias("last_seen_us"),
-    ]
-    return salted_topk(base, ["username"], aggs, merge, k, "username")
+        .orderBy(F.desc("request_count"), F.asc("username"))
+        .limit(k)
+    )
 
 
 def distinct_dims(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -244,15 +197,13 @@ def distinct_dims(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         df.filter(F.col("status_code").isNotNull() & (F.col("status_code") > 0))
         .select("status_code")
         .distinct()
-        .orderBy("status_code")
     )
     actions = (
         df.filter(F.col("action").isNotNull() & (F.col("action") != "-"))
         .select("action")
         .distinct()
-        .orderBy("action")
     )
-    return statuses, actions
+    return _sorted_small(statuses, "status_code"), _sorted_small(actions, "action")
 
 
 # The summaries whose key sets are bounded by vocabularies — categories,
@@ -301,7 +252,7 @@ def split_bounded(table: pa.Table) -> dict[str, pa.Table]:
     """``bounded_summaries`` rows, collected, as the five summary tables
     keyed by their published names. Each equals its operator's ``toArrow()``
     — same rows, same Arrow schema, same canonical order (ascending keys,
-    nulls first, as the operator's ``orderBy`` sorts):
+    nulls first, as the operator sorts):
 
     - ``agg_sink_totals`` (``sink_totals``): the (category) rows;
     - ``agg_status_hist`` (``status_hist``): groups with valid rows,

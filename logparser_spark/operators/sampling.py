@@ -153,15 +153,15 @@ def stratified_take(
     (the per-group analog of hash_mix_sample's rate filter, for when
     the spec is an exact row budget rather than a rate).
 
-    Scale plan (skew-safe two-phase, same shape as the salted top-K in
-    aggregates.top_urls): a single window over (group) would funnel
-    each group — and groups are FEW and HUGE in a corpus — through one
-    reducer. Instead phase 1 ranks within (group, salt) where salt =
-    xxhash64(id) mod S, keeping the quota smallest per salt-cell (each
-    reducer sees ~1/S of a group); phase 2 re-ranks the survivors
-    (<= S*quota rows per group — bounded regardless of corpus size) to
-    the exact global quota. The salt is internal only — the final row
-    set depends on nothing but (md5(id), id).
+    Scale plan (skew-safe two-phase): a window has no map-side partial
+    step, unlike the aggregates' groupBy, so a single window over
+    (group) would funnel each group — and groups are FEW and HUGE in a
+    corpus — through one reducer. Instead phase 1 ranks within (group,
+    salt) where salt = xxhash64(id) mod S, keeping the quota smallest
+    per salt-cell (each reducer sees ~1/S of a group); phase 2 re-ranks
+    the survivors (<= S*quota rows per group — bounded regardless of
+    corpus size) to the exact global quota. The salt is internal only —
+    the final row set depends on nothing but (md5(id), id).
     """
     for internal in ("__h", "__salt", "__rn"):
         if internal in df.columns:  # would be silently replaced+dropped

@@ -261,9 +261,9 @@ def run_aggregates(spark: SparkSession, out_root: str) -> dict[str, int]:
       ``agg.split_bounded``, which emits each table in its operator's
       canonical order and with its operator's Arrow schema;
     - ``agg.top_urls`` and ``agg.top_users``: their url and username key
-      sets grow with the data, so ranking them stays a distributed salted
-      aggregate ending in TakeOrderedAndProject; only the top k rows (the
-      caps below) reach the driver.
+      sets grow with the data, so ranking them stays a distributed
+      aggregate (one exchange) ending in TakeOrderedAndProject; only the
+      top k rows (the caps below) reach the driver.
 
     Each table is written by pyarrow as exactly ONE parquet file holding
     its rows in that order. That is the contract the API fast path

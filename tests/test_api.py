@@ -234,6 +234,29 @@ def test_summary_endpoints_run_no_spark_job(api, spark_jobs, jvm_calls):
     assert jobs > 0 and calls > 0
 
 
+def test_live_filtered_calls_job_counts(api, spark_jobs, plan_nodes):
+    """A live filtered call runs its aggregate's stages and no more:
+    statistics 3 Spark jobs (the exact distinct's two exchanges, then
+    the result), top_urls and top_users 2 each (one exchange, then
+    TakeOrderedAndProject). The statistics filter spans several
+    categories, so a range-partitioned sort would show as extra jobs;
+    its executed plan holds no RangePartitioning exchange."""
+    flt = LogFilter(search="d01")
+    want = {"statistics": 3, "top_urls": 2, "top_users": 2}
+    for endpoint, n in want.items():
+        q = getattr(api, f"get_{endpoint}")(flt)
+        rows, jobs = spark_jobs(q.collect)
+        assert rows and jobs == n, (endpoint, jobs)
+        if endpoint == "statistics":
+            assert len(rows) > 1
+            partitionings = [
+                node.outputPartitioning().getClass().getSimpleName()
+                for node in plan_nodes(q._jdf.queryExecution().executedPlan())
+                if node.getClass().getSimpleName() == "ShuffleExchangeExec"
+            ]
+            assert partitionings and "RangePartitioning" not in partitionings
+
+
 def test_fast_path_rows_equal_live(api):
     """Every fast-path answer equals the live aggregation it stands in
     for, row for row and in order — the published order is the only

@@ -127,13 +127,6 @@ def test_top_urls_equality(spark, pipeline_out, oracle_parsed):
         assert list(got[col].astype("int64")) == list(want[col].astype("int64")), col
 
 
-def test_top_urls_salted_equals_unsalted(spark, pipeline_out):
-    df = read_sink(spark, pipeline_out)
-    a = agg.top_urls(df, k=50, salted=True).toPandas()
-    b = agg.top_urls(df, k=50, salted=False).toPandas()
-    pd.testing.assert_frame_equal(a, b)
-
-
 def test_top_users_equality(spark, pipeline_out, oracle_parsed):
     got = agg.top_users(read_sink(spark, pipeline_out), k=10).toPandas()
     want = oracle.top_users(oracle_parsed, k=10)
@@ -308,11 +301,11 @@ def test_summary_tables_written(spark, pipeline_out):
     assert not os.path.exists(os.path.join(pipeline_out, "summary", "agg_daily_rollup"))
 
 
-def test_publish_runs_nine_spark_jobs(spark, pipeline_out, spark_jobs):
+def test_publish_runs_seven_spark_jobs(spark, pipeline_out, spark_jobs):
     """The publish is three queries: the fused bounded summaries and the
-    two salted top-K plans — 9 Spark jobs in all on this fixture."""
+    two one-phase top-K plans — 7 Spark jobs in all on this fixture."""
     _, jobs = spark_jobs(lambda: run_aggregates(spark, pipeline_out))
-    assert jobs == 9
+    assert jobs == 7
 
 
 def test_one_chunk_load_runs_four_spark_jobs(spark, tiny_input, pipeline_out, tmp_path, spark_jobs):

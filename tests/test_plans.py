@@ -4,7 +4,8 @@
 - enrichment joins broadcast (no shuffle of the fact side)
 - category/day filters prune sink partitions at scan time
 - predicate pushdown + column pruning reach the parquet scan
-- top-K compiles to TakeOrderedAndProject (no global sort)
+- top-K compiles to TakeOrderedAndProject (no global sort), and a hot
+  key reaches its reducer as per-task partials, not raw rows
 - the parse stage is shuffle-free scan->project
 """
 
@@ -102,18 +103,60 @@ def test_sink_predicate_pushdown_and_pruning(sink):
 
 
 def test_topk_is_take_ordered(sink):
-    plan = plan_of(agg.top_urls(sink(), k=10, salted=False))
+    plan = plan_of(agg.top_urls(sink(), k=10))
     assert "TakeOrderedAndProject" in plan
-    plan_salted = plan_of(agg.top_urls(sink(), k=10, salted=True))
-    assert "TakeOrderedAndProject" in plan_salted
 
 
-def test_salted_topk_two_phase(sink):
-    """Salted top-K: partial agg on (key, salt) then merge on key —
-    two hash-aggregate pairs, still TakeOrdered at the end."""
-    plan = plan_of(agg.top_users(sink(), k=10, salted=True))
-    assert plan.count("HashAggregate") >= 4  # partial+final x two phases
-    assert "TakeOrderedAndProject" in plan
+def test_hot_keys_stay_bounded(spark, plan_nodes):
+    """One url and one username hold 90% of 20k rows over 4 input
+    partitions. The one-phase top-K plans still send the hot key's
+    reducer at most one partial row per map task: each plan's only
+    shuffle writes at most partitions x distinct keys records, far
+    below the 18k hot rows. The answers equal the oracle's."""
+    import pandas as pd
+
+    from logparser_spark import oracle
+
+    # 300 cold keys: past the 128 keys at which the partial collect_set
+    # aggregate falls back to sorting, so that path is bounded too
+    n, parts, cold = 20_000, 4, 300
+    hot = F.col("id") % 10 != 0
+    key = (F.col("id") / 10).cast("long") % cold
+    df = spark.range(0, n, 1, parts).select(
+        F.lit(1).alias("valid"),
+        F.when(hot, F.lit("http://hot.example.com/"))
+        .otherwise(F.format_string("http://c%d.example.com/", key))
+        .alias("url"),
+        F.when(hot, F.lit("hot.example.com"))
+        .otherwise(F.format_string("c%d.example.com", key))
+        .alias("domain"),
+        F.when(hot, F.lit("hotuser"))
+        .otherwise(F.format_string("u%d", key))
+        .alias("username"),
+        F.format_string("10.0.%d.%d", F.col("id") % 7, F.col("id") % 101).alias("ip"),
+        (F.col("id") % 997).cast("int").alias("response_time_ms"),
+        (F.col("id") * 13 % 5000).alias("response_size_bytes"),
+        (F.lit(1_700_000_000_000_000) + F.col("id") * 1_000_000).alias("epoch_us"),
+    )
+    parsed = df.toPandas().assign(valid=True)
+    for op, want, keys in [
+        (agg.top_urls, oracle.top_urls(parsed, k=10), parsed[["url", "domain"]]),
+        (agg.top_users, oracle.top_users(parsed, k=10), parsed[["username"]]),
+    ]:
+        q = op(df, k=10)
+        got = q.toPandas()
+        pd.testing.assert_frame_equal(
+            got.astype(want.dtypes.to_dict()), want[got.columns], check_names=False
+        )
+        shuffles = [
+            node
+            for node in plan_nodes(q._jdf.queryExecution().executedPlan())
+            if node.getClass().getSimpleName() == "ShuffleExchangeExec"
+        ]
+        assert len(shuffles) == 1, op.__name__
+        written = shuffles[0].metrics().apply("shuffleRecordsWritten").value()
+        bound = parts * len(keys.drop_duplicates())
+        assert 0 < written <= bound < 0.9 * n, (op.__name__, written, bound)
 
 
 def test_hourly_hist_single_scan(sink):
