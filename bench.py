@@ -34,6 +34,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import resource
 import shutil
 import subprocess
 import sys
@@ -394,6 +395,9 @@ def pipeline_run(master: str, input_path: str, out_root: str, repeats: int = 2) 
         "wall_sec": round(wall, 2),
         "seq_per_sec": round(rows / wall, 1),
         "trials_wall_sec": [round(t[0], 2) for t in trials],
+        # the driver process's peak RSS over warmup and trials (the JVM
+        # is a separate process): the summary state is built here
+        "driver_peak_rss_mb": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024,
     }
 
 

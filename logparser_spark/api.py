@@ -11,7 +11,8 @@ Endpoint parity (ParsingController.java):
 The reference's routing decision (precomputed summary when no filters,
 live aggregation otherwise — StatisticsService.java:23-53) is kept:
 unfiltered calls read the summary tables written by the aggregate
-stage; filtered calls run the same plans with pushed-down predicates.
+stage (merged from per-chunk states); filtered calls run the live
+operators with pushed-down predicates. Tests hold the two equal.
 
 The summary fast path makes NO JVM call. The aggregate stage publishes
 each bounded summary as one parquet file already in its canonical

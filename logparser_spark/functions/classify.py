@@ -28,15 +28,19 @@ STATUS_CLASS_LABELS = {
 CATEGORIES = ["quarantine", "denied", "error", "success", "other"]
 
 
+# the status-class ranges as (lo, hi, label key), hi exclusive and None
+# for no upper bound; a status in none of them, or null, is "other".
+# ``status_class_expr`` and ``summary_state`` both classify from it
+STATUS_CLASS_RANGES = [(200, 300, "2xx"), (300, 400, "3xx"), (400, 500, "4xx"), (500, None, "5xx")]
+
+
 def status_class_expr(status: Column) -> Column:
     """CASE bucket per StatisticsService.java:99-110."""
-    return (
-        F.when((status >= 200) & (status < 300), STATUS_CLASS_LABELS["2xx"])
-        .when((status >= 300) & (status < 400), STATUS_CLASS_LABELS["3xx"])
-        .when((status >= 400) & (status < 500), STATUS_CLASS_LABELS["4xx"])
-        .when(status >= 500, STATUS_CLASS_LABELS["5xx"])
-        .otherwise(STATUS_CLASS_LABELS["other"])
-    )
+    expr = F
+    for lo, hi, key in STATUS_CLASS_RANGES:
+        hit = status >= lo if hi is None else (status >= lo) & (status < hi)
+        expr = expr.when(hit, STATUS_CLASS_LABELS[key])
+    return expr.otherwise(STATUS_CLASS_LABELS["other"])
 
 
 def action_family_expr(action: Column) -> Column:

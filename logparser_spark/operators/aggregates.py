@@ -12,11 +12,12 @@ bounded results (categories x 24 rows at most) are sorted in one
 partition (``_sorted_small``) instead of range-partitioned; the top-K
 lists end in TakeOrderedAndProject.
 
-The publish path computes the five vocabulary-bounded summaries in one
-GROUPING SETS aggregate (``bounded_summaries`` + ``split_bounded``),
-built from the same declarations as the live operators
-(``totals_aggs``, ``utc_hour_expr``, ``status_class_expr``), so the
-published and live answers cannot drift apart.
+These operators answer filtered requests, the driver queries and the
+benchmark's traced probes. The published summaries come instead from
+per-chunk states merged with pyarrow (``operators.summary_state``),
+which share only the status-class ranges and ``SECONDS_PER_HOUR`` with
+the operators here: a differential test on edge rows, split across
+chunks and batches, holds the two answers equal.
 
 Semantics parity (reference):
 - totals:       StatisticsService.calculateRealTimeStats (java:75-165)
@@ -30,8 +31,6 @@ Semantics parity (reference):
 
 from __future__ import annotations
 
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -43,9 +42,13 @@ def _round_java(c: Column) -> Column:
     return F.floor(c + F.lit(0.5)).cast("long")
 
 
+# the hour bucket's length; ``summary_state`` buckets by it too
+SECONDS_PER_HOUR = 3600
+
+
 def utc_hour_expr() -> Column:
-    """The event's UTC hour of day (0-23) — the ONE hour bucketing of
-    ``hourly_hist`` and of the fused publish (``bounded_summaries``).
+    """The event's UTC hour of day (0-23) — the hour bucketing of
+    ``hourly_hist`` (``summary_state`` reproduces it for the publish).
 
     Epoch arithmetic, NOT F.hour(): hour()/date_format() honor
     spark.sql.session.timeZone, so a consumer with an unpinned session
@@ -55,28 +58,11 @@ def utc_hour_expr() -> Column:
     not a negative slot the dense explode(0..23) would silently drop.
     (The pipeline's own parse only admits unsigned epochs, but the
     operator is generic.)"""
+    h = SECONDS_PER_HOUR
     return F.expr(
-        "cast(pmod((unix_timestamp(time) - pmod(unix_timestamp(time), 3600))"
-        " div 3600, 24) as int)"
+        f"cast(pmod((unix_timestamp(time) - pmod(unix_timestamp(time), {h}))"
+        f" div {h}, 24) as int)"
     )
-
-
-def totals_aggs(approx_distinct: bool = False) -> list[Column]:
-    """The per-group expressions of ``sink_totals`` — declared once,
-    shared by the live operator and the fused publish."""
-    distinct_ips = (
-        F.approx_count_distinct("ip") if approx_distinct else F.countDistinct("ip")
-    )
-    return [
-        F.count(F.lit(1)).alias("row_count"),
-        F.count(F.when(F.col("status_code") >= 400, 1)).alias("error_count"),
-        distinct_ips.alias("unique_ips"),
-        F.coalesce(F.sum("response_size_bytes"), F.lit(0)).alias("bytes_total"),
-        F.coalesce(
-            _round_java(F.avg(F.when(F.col("response_time_ms") > 0, F.col("response_time_ms")))),
-            F.lit(0),
-        ).alias("avg_response_time_ms"),
-    ]
 
 
 def _sorted_small(df: DataFrame, *keys: str) -> DataFrame:
@@ -94,12 +80,37 @@ def sink_totals(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
     """Per-category: A1 count, A2 errors, A3 distinct ip, A6 avg rt
     (rt>0 only), A7 bytes sum — one pass, one shuffle on category.
 
-    ``approx_distinct`` swaps exact COUNT(DISTINCT ip) for HyperLogLog++
-    (``approx_count_distinct``, default rsd 5%) — the documented knob
-    for 10^12-row scale, where the exact distinct forces a per-category
-    ip expansion. Tests pin the exact path; the approx path is asserted
-    within tolerance."""
-    return _sorted_small(df.groupBy("category").agg(*totals_aggs(approx_distinct)), "category")
+    The exact COUNT(DISTINCT ip) is ``size(collect_set(ip))``, as in
+    ``top_users``: it ignores nulls like COUNT(DISTINCT) but needs no
+    expand-and-regroup, so the plan keeps one exchange (the partial
+    aggregate sends each map task's ip set per category). The cost of
+    that form: the final aggregate holds each category's WHOLE distinct
+    ip set in one task's heap, unspillable, where countDistinct's
+    expand spread the (category, ip) pairs over reducers. At roughly
+    100 B per set entry (string + hash-set slot; an estimate, not a
+    measurement) a 10^6-ip category needs ~100 MB of one task's
+    memory, fine; from ~10^7 distinct ips in one category
+    ``approx_distinct`` becomes necessary. It swaps the count for
+    HyperLogLog++ (``approx_count_distinct``, default rsd 5%), whose
+    state is a fixed few KB per group.
+    Tests pin the exact path; the approx path is asserted within
+    tolerance."""
+    distinct_ips = (
+        F.approx_count_distinct("ip")
+        if approx_distinct
+        else F.size(F.collect_set("ip")).cast("long")
+    )
+    totals = df.groupBy("category").agg(
+        F.count(F.lit(1)).alias("row_count"),
+        F.count(F.when(F.col("status_code") >= 400, 1)).alias("error_count"),
+        distinct_ips.alias("unique_ips"),
+        F.coalesce(F.sum("response_size_bytes"), F.lit(0)).alias("bytes_total"),
+        F.coalesce(
+            _round_java(F.avg(F.when(F.col("response_time_ms") > 0, F.col("response_time_ms")))),
+            F.lit(0),
+        ).alias("avg_response_time_ms"),
+    )
+    return _sorted_small(totals, "category")
 
 
 def status_hist(df: DataFrame) -> DataFrame:
@@ -204,116 +215,6 @@ def distinct_dims(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         .distinct()
     )
     return _sorted_small(statuses, "status_code"), _sorted_small(actions, "action")
-
-
-# The summaries whose key sets are bounded by vocabularies — categories,
-# status classes, hours, HTTP status codes, Squid actions — each with
-# its grouping set in ``bounded_summaries``.
-_BOUNDED_KEYS = ("category", "status_class", "hour", "status_code", "action")
-_BOUNDED_SETS = {
-    "agg_sink_totals": ("category",),
-    "agg_status_hist": ("category", "status_class"),
-    "agg_hourly_hist": ("category", "hour"),
-    "dim_statuses": ("status_code",),
-    "dim_actions": ("action",),
-}
-
-
-def _set_id(keys: tuple[str, ...]) -> int:
-    """``grouping_id()`` of the set grouped by ``keys``: bit i, counted
-    from the most significant, is set when _BOUNDED_KEYS[i] is
-    aggregated away."""
-    n = len(_BOUNDED_KEYS)
-    return sum(1 << (n - 1 - i) for i, k in enumerate(_BOUNDED_KEYS) if k not in keys)
-
-
-def bounded_summaries(df: DataFrame) -> DataFrame:
-    """The five ``_BOUNDED_SETS`` summaries from ONE scan and one
-    aggregate: GROUPING SETS over (category), (category, status_class),
-    (category, hour), (status_code) and (action), each row tagged with
-    its set's ``grouping_id()`` in ``_set``. Every set carries
-    ``totals_aggs()`` plus ``valid_count`` (rows with valid = 1), so the
-    histograms, which count valid rows only, need no filtered pass of
-    their own. The result is a few hundred rows at most: collect it with
-    ``toArrow()`` and hand it to ``split_bounded``."""
-    keyed = df.withColumns(
-        {"status_class": status_class_expr(F.col("status_code")), "hour": utc_hour_expr()}
-    )
-    return keyed.groupingSets(
-        [list(keys) for keys in _BOUNDED_SETS.values()], *_BOUNDED_KEYS
-    ).agg(
-        F.grouping_id().alias("_set"),
-        *totals_aggs(),
-        F.count(F.when(F.col("valid") == 1, 1)).alias("valid_count"),
-    )
-
-
-def split_bounded(table: pa.Table) -> dict[str, pa.Table]:
-    """``bounded_summaries`` rows, collected, as the five summary tables
-    keyed by their published names. Each equals its operator's ``toArrow()``
-    — same rows, same Arrow schema, same canonical order (ascending keys,
-    nulls first, as the operator sorts):
-
-    - ``agg_sink_totals`` (``sink_totals``): the (category) rows;
-    - ``agg_status_hist`` (``status_hist``): groups with valid rows,
-      counting those;
-    - ``agg_hourly_hist`` (``hourly_hist``): likewise, densified to hours
-      0-23 for every category with valid rows;
-    - ``dim_statuses`` / ``dim_actions`` (``distinct_dims``): the keys,
-      minus a null or <= 0 status code and a null or '-' action."""
-
-    def rows(name: str, *cols: str, valid_only: bool = False) -> pa.Table:
-        keys = _BOUNDED_SETS[name]
-        keep = pc.equal(table["_set"], _set_id(keys))
-        if valid_only:
-            keep = pc.and_(keep, pc.greater(table["valid_count"], 0))
-        return (
-            table.filter(keep)
-            .sort_by([(k, "ascending") for k in keys], null_placement="at_start")
-            .select([*keys, *cols])
-        )
-
-    totals = [c for c in table.column_names if c not in (*_BOUNDED_KEYS, "_set", "valid_count")]
-    status = rows("agg_status_hist", "valid_count", valid_only=True)
-    status_schema = pa.schema(
-        [
-            status.schema.field("category"),
-            status.schema.field("status_class").with_nullable(False),
-            pa.field("row_count", pa.int64(), nullable=False),
-        ]
-    )
-    hourly = rows("agg_hourly_hist", "valid_count", valid_only=True)
-    hourly_schema = pa.schema(
-        [
-            hourly.schema.field("category"),
-            hourly.schema.field("hour").with_nullable(False),
-            pa.field("row_count", pa.int64(), nullable=False),
-        ]
-    )
-    counts = dict(
-        zip(
-            zip(hourly["category"].to_pylist(), hourly["hour"].to_pylist()),
-            hourly["valid_count"].to_pylist(),
-        )
-    )
-    cats = pc.unique(hourly["category"]).to_pylist()  # sorted: first-seen order
-    hours = range(24)
-    statuses = rows("dim_statuses")
-    actions = rows("dim_actions")
-    return {
-        "agg_sink_totals": rows("agg_sink_totals", *totals),
-        "agg_status_hist": status.rename_columns(status_schema.names).cast(status_schema),
-        "agg_hourly_hist": pa.table(
-            [
-                [c for c in cats for _ in hours],
-                [h for _ in cats for h in hours],
-                [counts.get((c, h), 0) for c in cats for h in hours],
-            ],
-            schema=hourly_schema,
-        ),
-        "dim_statuses": statuses.filter(pc.greater(statuses["status_code"], 0)),
-        "dim_actions": actions.filter(pc.not_equal(actions["action"], "-")),
-    }
 
 
 def daily_rollup(df: DataFrame) -> DataFrame:

@@ -56,6 +56,7 @@ import os
 
 class Manifest:
     def __init__(self, root: str):
+        self.root = root
         self.path = os.path.join(root, "manifest.jsonl")
         os.makedirs(root, exist_ok=True)
 

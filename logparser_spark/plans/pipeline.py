@@ -1,13 +1,15 @@
 """The end-to-end DAG: read → decode+parse → enrich → route → write →
-aggregate. SURVEY.md §7.1; replaces the reference's 11-stage threaded
-load (§3.1) with one declarative plan per chunk plus a summary job.
+summary state, and a publish that merges the states. SURVEY.md §7.1;
+replaces the reference's 11-stage threaded load (§3.1) with one
+declarative plan per chunk.
 
 Stage fusion: scan → parse UDF → enrichment joins → routing projection
 all pipeline inside one shuffle-free stage per task (the parse UDF is
 an Arrow exchange inside the stage; broadcast joins add no shuffle).
 The write goes straight from those tasks (``partitionBy``, no shuffle),
-so the only wide operations are the aggregate groupBys — minimal
-shuffle count by construction.
+and the summaries are built on the driver with pyarrow from each
+chunk's own files, so a load runs no shuffle at all and the publish no
+Spark job.
 
 Per-row invariant: ``tokens`` (and doc_id/n_tok/source) pass through
 untouched into every sink row — token-array equality, tested.
@@ -16,8 +18,12 @@ untouched into every sink row — token-array equality, tested.
 from __future__ import annotations
 
 import contextlib
+import json
 import math
+import os
 import time as _time
+
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -25,11 +31,11 @@ from pyspark.sql import functions as F
 from logparser_spark.cache import invalidate_registered
 from logparser_spark.functions.classify import category_expr
 from logparser_spark.functions.parse import with_parsed
-from logparser_spark.operators import aggregates as agg
+from logparser_spark.operators import summary_state
 from logparser_spark.operators.enrich import enrich, load_dims
 from logparser_spark.plans.checkpoint import Manifest
 from logparser_spark.sources.sequences import read_raw_sequences
-from logparser_spark.sources.sinks import MultiSinkWriter, read_sink
+from logparser_spark.sources.sinks import MultiSinkWriter, chunk_files, fold_path, state_path
 
 
 def build_routed(spark: SparkSession, raw: DataFrame) -> DataFrame:
@@ -58,7 +64,28 @@ def load_chunk(
     is rolled back first, so re-running an id the manifest does not hold
     is idempotent. ``lineage`` names the input in the manifest record
     (``input_files`` of a batch chunk, ``batch_id`` of a micro-batch).
+
+    Before the manifest commit, the chunk's summary state
+    (``summary_state.chunk_state`` over only this chunk's promoted
+    files, under the manifest's root) is written to
+    ``<root>/state/<chunk_id>.parquet`` by temp file and rename, so
+    every committed chunk has one; ``run_aggregates`` merges them. A
+    crash between the two leaves a state the rollback removes.
+
+    So the writer must put the chunk in the parquet sink layout under
+    the manifest's root. A writer that declares another layout
+    (``parquet_sink_layout = False``, as ``IcebergMultiSinkWriter``
+    does) or has another ``root`` is refused before anything is written;
+    one that still misses the root fails the load before its commit.
     """
+    root = getattr(writer, "root", manifest.root)
+    if not getattr(writer, "parquet_sink_layout", True) or (
+        os.path.abspath(root) != os.path.abspath(manifest.root)
+    ):
+        raise ValueError(
+            f"{type(writer).__name__} does not write the parquet sink layout under "
+            f"{manifest.root}, which each chunk's summary state is built from"
+        )
     writer.remove_chunk(chunk_id)
     t0 = _time.monotonic()
     routed = build_routed(spark, raw)
@@ -87,6 +114,21 @@ def load_chunk(
         if hasattr(writer, "partition_metrics")
         else None
     )
+    t_state = _time.monotonic()
+    state = summary_state.chunk_state(chunk_files(manifest.root, chunk_id))
+    covered = summary_state.rows_covered(state)
+    if covered != rows:
+        # the writer put the chunk somewhere other than the manifest
+        # root's data tree: its summaries would silently miss it
+        raise RuntimeError(
+            f"summary state of {chunk_id} covers {covered} rows of its {rows}: "
+            f"the writer's files are not under {manifest.root}/data"
+        )
+    path = state_path(manifest.root, chunk_id)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(state, path + ".tmp")
+    os.replace(path + ".tmp", path)
+    state_sec = _time.monotonic() - t_state
     manifest.commit_chunk(
         {
             "chunk_id": chunk_id,
@@ -103,6 +145,10 @@ def load_chunk(
             # (category, day) dir this chunk produced, and the chunk
             # rate attributed per partition by row share
             **({"partitions": partitions} if partitions else {}),
+            # the summary state's size (it grows with the chunk's
+            # distinct url and username-ip pairs) and build + write time
+            "state_rows": state.num_rows,
+            "state_sec": round(state_sec, 3),
         }
     )
     # C4 from the loader, like the reference (LogFileParser.java:
@@ -142,11 +188,13 @@ def run_pipeline(
     chunk's sink commit and nothing else (the manifest records it, so
     resume continues with the next chunk).
 
-    ``writer`` swaps the sink format — anything with the
-    write_chunk/remove_chunk/exact_chunk_counts contract, e.g.
-    ``sources.iceberg.IcebergMultiSinkWriter`` for snapshot commits
-    when the Iceberg runtime is on the classpath (the default parquet
-    writer's rename-promote protocol is the sandbox stand-in).
+    ``writer`` wraps or swaps the sink writer — anything with the
+    write_chunk/remove_chunk/exact_chunk_counts contract that writes the
+    parquet sink layout under ``out_root``, which ``load_chunk`` builds
+    each chunk's summary state from. ``sources.iceberg.
+    IcebergMultiSinkWriter`` commits to a catalog table instead, so it
+    is refused before the first write until the state build reads
+    Iceberg data files.
 
     ``progress=True`` samples live per-stage task progress into
     ``<out_root>/progress.jsonl`` and runs every job under a job group
@@ -178,14 +226,13 @@ def _run_pipeline_inner(
     compact_after: bool = False,
 ) -> dict:
     import glob as _glob
-    import os as _os
 
     manifest = Manifest(out_root)
     if writer is None:
         writer = MultiSinkWriter(out_root)
     done = manifest.completed_chunks()
 
-    files = sorted(_glob.glob(_os.path.join(input_path, "*.parquet")))
+    files = sorted(_glob.glob(os.path.join(input_path, "*.parquet")))
     if not files:
         raise FileNotFoundError(f"no parquet files under {input_path}")
     chunks = _chunk_files(files, n_chunks)
@@ -245,53 +292,72 @@ def _run_pipeline_inner(
     return out
 
 
+def _state(out_root: str, chunk_id: str):
+    path = state_path(out_root, chunk_id)
+    if not os.path.exists(path):
+        raise FileNotFoundError(f"committed chunk {chunk_id} has no summary state at {path}")
+    return pq.ParquetFile(path).read(use_threads=False)
+
+
+def _fold(out_root: str, committed: list[str]):
+    """The publish's fold of chunk states and the set of chunk ids it
+    covers; ``(None, set())`` when there is none, or when it covers a
+    chunk ``committed`` lacks (the chunks' own states are merged
+    instead)."""
+    path = fold_path(out_root)
+    if not os.path.exists(path):
+        return None, set()
+    f = pq.ParquetFile(path)
+    covered = set(json.loads(f.schema_arrow.metadata[b"chunks"]))
+    if not covered <= set(committed):
+        return None, set()
+    return f.read(use_threads=False).replace_schema_metadata(None), covered
+
+
 def run_aggregates(spark: SparkSession, out_root: str) -> dict[str, int]:
     """The post-load aggregate stage (C2/C3 analog): seven summary
-    tables computed from the routed sinks and published under
-    <root>/summary/<name>/. Returns each table's published row count.
+    tables published under <root>/summary/<name>/. Returns each table's
+    published row count.
 
-    Every table is bounded, and the stage runs three Spark queries over
-    the sink, submitted together from driver threads:
+    The tables are ``summary_state.merge_states`` of the states that
+    ``load_chunk`` wrote for the committed load chunks, merged with
+    pyarrow on the driver: no Spark job, no read of the sink's data
+    files (``spark`` is unused). Compaction records carry no state, as
+    compaction changes no row. A committed load chunk without a state
+    raises. The live operators (``operators.aggregates``) answer the
+    same questions for filtered requests; tests hold the two equal.
 
-    - ``agg.bounded_summaries``: one GROUPING SETS scan and aggregate for
-      the five tables whose keys are bounded by vocabularies
-      (``agg_sink_totals``, ``agg_status_hist``, ``agg_hourly_hist``,
-      ``dim_statuses``, ``dim_actions``). Its few hundred rows are
-      collected with one ``toArrow()`` and split on the driver by
-      ``agg.split_bounded``, which emits each table in its operator's
-      canonical order and with its operator's Arrow schema;
-    - ``agg.top_urls`` and ``agg.top_users``: their url and username key
-      sets grow with the data, so ranking them stays a distributed
-      aggregate (one exchange) ending in TakeOrderedAndProject; only the
-      top k rows (the caps below) reach the driver.
+    The merge's cost grows with the states it reads, so once
+    ``summary_state.FOLD_EVERY`` chunks are not yet folded, they are
+    folded with the previous fold into ``<root>/state/_folded.parquet``
+    (temp file and rename; the chunk ids it covers are in its schema
+    metadata), and later publishes read that fold plus the chunks after
+    it. The chunks' own states stay, so a fold that names a chunk the
+    manifest does not hold is ignored and their states are merged
+    instead.
 
     Each table is written by pyarrow as exactly ONE parquet file holding
-    its rows in that order. That is the contract the API fast path
-    relies on: it reads the file back with pyarrow and serves it as a
-    local relation — no Spark job, no re-sort. The username x status x
-    day ``agg.daily_rollup`` is not published: no endpoint serves it.
+    its rows in its operator's canonical order. That is the contract the
+    API fast path relies on: it reads the file back with pyarrow and
+    serves it as a local relation — no Spark job, no re-sort. The
+    username x status x day ``aggregates.daily_rollup`` is not published: no
+    endpoint serves it.
     """
-    import json
-    import os
     import shutil as _shutil
-    from concurrent.futures import ThreadPoolExecutor
 
-    import pyarrow.parquet as pq
-
-    df = read_sink(spark, out_root)
-    queries = {
-        "bounded": agg.bounded_summaries(df),
-        "top_urls": agg.top_urls(df),
-        "top_users": agg.top_users(df),
-    }
-    with ThreadPoolExecutor(max_workers=len(queries)) as pool:
-        tables = dict(zip(queries, pool.map(lambda q: q.toArrow(), queries.values())))
-    tables.update(agg.split_bounded(tables.pop("bounded")))
-
-    # truncation caps of the top-K summaries (run above with defaults):
-    # a result SHORTER than its cap saw every distinct key, so the API
-    # fast path can serve ANY k from it ("exhaustive")
-    k_caps = {"top_urls": 100, "top_users": 10}
+    done = Manifest(out_root).completed_chunks()
+    loads = [c for c, rec in done.items() if rec.get("kind") != "compaction"]
+    folded, covered = _fold(out_root, loads)
+    fresh = [c for c in loads if c not in covered]
+    states = ([] if folded is None else [folded]) + [_state(out_root, c) for c in fresh]
+    if len(fresh) >= summary_state.FOLD_EVERY:
+        # the new fold covers every committed load chunk
+        states = [summary_state.fold_states(states)]
+        path = fold_path(out_root)
+        meta = {"chunks": json.dumps(loads)}
+        pq.write_table(states[0].replace_schema_metadata(meta), path + ".tmp")
+        os.replace(path + ".tmp", path)
+    tables = summary_state.merge_states(states)
 
     def publish(name: str, table) -> int:
         """Publish one summary ATOMICALLY: write to a _tmp_ dir, put
@@ -305,7 +371,9 @@ def run_aggregates(spark: SparkSession, out_root: str) -> dict[str, int]:
         _shutil.rmtree(tmp, ignore_errors=True)  # crashed attempt's leftover
         os.makedirs(tmp)
         pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-        cap = k_caps.get(name)
+        # a top list SHORTER than its cap saw every distinct key, so the
+        # API fast path can serve ANY k from it ("exhaustive")
+        cap = summary_state.K_CAPS.get(name)
         meta = {"rows": table.num_rows, "exhaustive": cap is None or table.num_rows < cap}
         with open(os.path.join(tmp, "_meta.json"), "w") as fh:
             json.dump(meta, fh)

@@ -129,9 +129,13 @@ def compact_sinks(
     chunk rollback), so a chunk is never both baked into a compacted
     file AND re-processed.
 
+    Compaction changes no row, so the chunks' summary states
+    (``<root>/state``) stay as they are and the next publish is
+    byte-identical (tested).
+
     Scale posture: one coalesce-write job per oversized partition,
-    submitted concurrently from driver threads (same pattern as
-    run_aggregates) — each job reads only that partition's files. On an
+    submitted concurrently from driver threads — each job reads only
+    that partition's files. On an
     Iceberg deployment replace this module with
     ``CALL rewrite_data_files(strategy => 'binpack')``; the manifest
     record shape is the same lineage either way.

@@ -150,15 +150,21 @@ def merge_into_sql(
 
 
 class IcebergMultiSinkWriter:
-    """Drop-in for ``MultiSinkWriter`` over a real Iceberg table: one
+    """``MultiSinkWriter``'s counterpart over a real Iceberg table: one
     atomic snapshot commit per chunk; readers never see partial data
     and resume rollback is a metadata operation.
 
     Matches MultiSinkWriter's contract (``write_chunk`` /
-    ``remove_chunk``) so ``run_pipeline(writer=...)`` swaps formats
-    without touching the DAG. The manifest's lineage record gains the
-    snapshot id (``last_snapshot_id`` after each write).
+    ``remove_chunk``). The manifest's lineage record gains the snapshot
+    id (``last_snapshot_id`` after each write). ``run_pipeline`` and
+    ``plans.pipeline.load_chunk`` do not take it yet: they build each
+    chunk's summary state from the parquet sink layout under the
+    pipeline's root, where this writer puts no file, so they refuse it
+    before writing (``parquet_sink_layout``).
     """
+
+    # the rows live in the catalog table, not in <root>/data
+    parquet_sink_layout = False
 
     def __init__(self, spark: SparkSession, table: str):
         _check_sql_identifier(table, "table")

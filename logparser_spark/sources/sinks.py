@@ -11,6 +11,11 @@ garbage that the next run overwrites.
 Sink layout (one logical table, five logical sinks):
 
     <root>/data/category=<c>/day=<yyyy-MM-dd>/<chunk>-part-*.parquet
+    <root>/state/<chunk>.parquet      (the chunk's summary state,
+                                       operators.summary_state)
+    <root>/state/_folded.parquet      (the states of many committed
+                                       chunks folded into one, written
+                                       by the publish)
 
 Routing by ``category`` is a *partition column*, so "one sink table per
 category" is realized as partition subtrees: a single write pass fans
@@ -41,6 +46,7 @@ A sink read far more often than written gets the clustered layout
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
 import re
@@ -96,6 +102,24 @@ SINK_COMPRESSION = "zstd"
 SINK_ZSTD_LEVEL = 1
 # bounds file size on a hot (category, day) directory
 MAX_RECORDS_PER_FILE = 2_000_000
+
+
+def chunk_files(root: str, chunk_id: str) -> list[str]:
+    """The promoted data files of chunk ``chunk_id`` under sink ``root``."""
+    _check_chunk_id(chunk_id)
+    return glob.glob(
+        os.path.join(root, "data", "**", f"{chunk_id}-*.parquet"), recursive=True
+    )
+
+
+def state_path(root: str, chunk_id: str) -> str:
+    """Where chunk ``chunk_id``'s summary state lives under sink ``root``."""
+    return os.path.join(root, "state", f"{_check_chunk_id(chunk_id)}.parquet")
+
+
+def fold_path(root: str) -> str:
+    """Where the publish keeps its fold of committed chunks' states."""
+    return os.path.join(root, "state", "_folded.parquet")
 
 
 class MultiSinkWriter:
@@ -176,13 +200,9 @@ class MultiSinkWriter:
         is a routing hot key), and ``watermark`` is the partition's max
         event time (ISO-8601 UTC) from the parquet column statistics —
         the freshness cursor an incremental consumer resumes from."""
-        _check_chunk_id(chunk_id)
         out: dict[str, dict] = {}
         keys: dict[str, tuple] = {}  # partition -> comparison key of its max
-        for f in glob.glob(
-            os.path.join(self.data_dir, "**", f"{chunk_id}-*.parquet"),
-            recursive=True,
-        ):
+        for f in chunk_files(self.root, chunk_id):
             part = os.path.dirname(os.path.relpath(f, self.data_dir))
             rec = out.setdefault(
                 part, {"rows": 0, "bytes": 0, "files": 0, "watermark": None}
@@ -208,12 +228,12 @@ class MultiSinkWriter:
         return out
 
     def remove_chunk(self, chunk_id: str) -> None:
-        """Idempotent undo (re-run of a chunk that crashed mid-promote)."""
-        _check_chunk_id(chunk_id)
-        for f in glob.glob(
-            os.path.join(self.data_dir, "**", f"{chunk_id}-*.parquet"), recursive=True
-        ):
+        """Idempotent undo (re-run of a chunk that crashed mid-promote, or
+        after its summary state was written): its data files and state."""
+        for f in chunk_files(self.root, chunk_id):
             os.remove(f)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(state_path(self.root, chunk_id))
 
 
 def footer_row_count(paths) -> int:
@@ -241,8 +261,15 @@ def _footer_stats(path: str, time_col: str) -> tuple[int, tuple | None]:
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
+    # column paths from the first row group, not ``md.schema``: that
+    # builds a FileMetaData <-> ParquetSchema reference cycle per file,
+    # which only the cyclic GC frees (a pause in some later request)
     idx = next(
-        (i for i in range(md.num_columns) if md.schema.column(i).path == time_col),
+        (
+            i
+            for i in range(md.num_columns if md.num_row_groups else 0)
+            if md.row_group(0).column(i).path_in_schema == time_col
+        ),
         None,
     )
     wm = None
@@ -270,11 +297,13 @@ def footer_schema(path: str) -> StructType:
     no Spark job. Handing it to ``spark.read.schema`` skips the
     schema-inference job Spark otherwise runs on every read (~60-110 ms
     at local scale). The one shared implementation behind every
-    footer-schema use (``read_sink``, compaction rewrites)."""
+    footer-schema use (``read_sink``, compaction rewrites).
+    ``ParquetFile.schema_arrow`` leaves no cyclic garbage behind, unlike
+    ``pq.read_schema``."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    return from_arrow_schema(pq.read_schema(path))
+    return from_arrow_schema(pq.ParquetFile(path).schema_arrow)
 
 
 def read_sink(

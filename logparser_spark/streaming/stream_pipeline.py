@@ -14,7 +14,8 @@ id the manifest already holds is skipped, and any other is rolled back
 by ``load_chunk`` and loaded again. A query drains the files present
 at its start (``availableNow``) and stops; ``maxFilesPerTrigger``
 bounds the size of a micro-batch. Publishing the summaries stays the caller's job,
-as after ``run_pipeline``.
+as after ``run_pipeline``; ``load_chunk`` writes each batch's summary
+state, so a publish is one pyarrow merge of the states.
 """
 
 from __future__ import annotations

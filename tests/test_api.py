@@ -236,13 +236,13 @@ def test_summary_endpoints_run_no_spark_job(api, spark_jobs, jvm_calls):
 
 def test_live_filtered_calls_job_counts(api, spark_jobs, plan_nodes):
     """A live filtered call runs its aggregate's stages and no more:
-    statistics 3 Spark jobs (the exact distinct's two exchanges, then
-    the result), top_urls and top_users 2 each (one exchange, then
-    TakeOrderedAndProject). The statistics filter spans several
-    categories, so a range-partitioned sort would show as extra jobs;
-    its executed plan holds no RangePartitioning exchange."""
+    statistics 2 Spark jobs (one exchange, the exact distinct being a
+    collected ip set, then the result), top_urls and top_users 2 each
+    (one exchange, then TakeOrderedAndProject). The statistics filter
+    spans several categories, so a range-partitioned sort would show as
+    extra jobs; its executed plan holds no RangePartitioning exchange."""
     flt = LogFilter(search="d01")
-    want = {"statistics": 3, "top_urls": 2, "top_users": 2}
+    want = {"statistics": 2, "top_urls": 2, "top_users": 2}
     for endpoint, n in want.items():
         q = getattr(api, f"get_{endpoint}")(flt)
         rows, jobs = spark_jobs(q.collect)

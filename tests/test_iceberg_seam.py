@@ -172,6 +172,20 @@ def test_write_chunk_protocol_pinned(spark, proxy, monkeypatch):
     )
 
 
+def test_run_pipeline_refuses_iceberg_writer_before_writing(spark, proxy, tiny_input, tmp_path):
+    """The pipeline builds each chunk's summary state from the parquet
+    sink layout, which this writer does not produce: it is refused
+    before any catalog call, and nothing is committed."""
+    from logparser_spark.plans.checkpoint import Manifest
+    from logparser_spark.plans.pipeline import run_pipeline
+
+    w = ice.IcebergMultiSinkWriter(proxy, "lake.db.routed")
+    out = str(tmp_path / "sink")
+    with pytest.raises(ValueError, match="parquet sink layout"):
+        run_pipeline(spark, tiny_input, out, writer=w)
+    assert proxy.sql_log == [] and Manifest(out).completed_chunks() == {}
+
+
 def test_remove_chunk_protocol_pinned(proxy):
     w = ice.IcebergMultiSinkWriter(proxy, "lake.db.routed")
     w.remove_chunk("chunk-00003")

@@ -3,19 +3,23 @@
 routed-row set equality per sink, per-sink aggregate equality, top-K
 equality with pinned tie-breaks, and kill/resume idempotence."""
 
+import json
 import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
 
 from logparser_spark import oracle
 from logparser_spark.operators import aggregates as agg
+from logparser_spark.operators import summary_state
 from logparser_spark.plans.pipeline import run_aggregates, run_pipeline, build_routed
 from logparser_spark.sources.sequences import read_raw_sequences
-from logparser_spark.sources.sinks import read_sink
+from logparser_spark.sources.sinks import chunk_files, fold_path, read_sink, state_path
 
 # the checkout holding these tests (conftest puts it first on sys.path)
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -301,17 +305,18 @@ def test_summary_tables_written(spark, pipeline_out):
     assert not os.path.exists(os.path.join(pipeline_out, "summary", "agg_daily_rollup"))
 
 
-def test_publish_runs_seven_spark_jobs(spark, pipeline_out, spark_jobs):
-    """The publish is three queries: the fused bounded summaries and the
-    two one-phase top-K plans — 7 Spark jobs in all on this fixture."""
+def test_publish_runs_zero_spark_jobs(spark, pipeline_out, spark_jobs):
+    """The publish merges the chunks' summary states with pyarrow on the
+    driver: no Spark job."""
     _, jobs = spark_jobs(lambda: run_aggregates(spark, pipeline_out))
-    assert jobs == 7
+    assert jobs == 0
 
 
 def test_one_chunk_load_runs_four_spark_jobs(spark, tiny_input, pipeline_out, tmp_path, spark_jobs):
     """A one-chunk load through the shared per-chunk commit path runs 4
     Spark jobs on this fixture (``pipeline_out`` warms the session), and
-    its manifest record carries the batch lineage keys."""
+    its manifest record carries the batch lineage keys and the size and
+    build time of the chunk's summary state."""
     from logparser_spark.plans.checkpoint import Manifest
 
     out = str(tmp_path / "one")
@@ -320,78 +325,275 @@ def test_one_chunk_load_runs_four_spark_jobs(spark, tiny_input, pipeline_out, tm
     rec = Manifest(out).completed_chunks()["chunk-00000"]
     assert set(rec) == {
         "chunk_id", "input_files", "rows", "rows_per_category",
-        "wall_sec", "rows_per_sec", "partitions",
+        "wall_sec", "rows_per_sec", "partitions", "state_rows", "state_sec",
     }
+    assert rec["state_rows"] == pq.ParquetFile(state_path(out, "chunk-00000")).metadata.num_rows > 0
 
 
-def test_bounded_summaries_scan_the_sink_once(spark, pipeline_out, plan_nodes):
-    """The five bounded summaries cost one read of the sink: the fused
-    query's executed plan holds exactly one parquet scan node."""
-    q = agg.bounded_summaries(read_sink(spark, pipeline_out))
-    q.toArrow()  # the adaptive plan is final once executed
-    scans = [
-        n
-        for n in plan_nodes(q._jdf.queryExecution().executedPlan())
-        if n.getClass().getSimpleName() == "FileSourceScanExec"
-    ]
-    assert len(scans) == 1
-    assert scans[0].nodeName().startswith("Scan parquet")
+def _without_data(src: str, dst: str) -> str:
+    """A copy of sink ``src`` at ``dst`` holding only its manifest and
+    summary states: no data file."""
+    import shutil
+
+    os.makedirs(dst)
+    shutil.copy(os.path.join(src, "manifest.jsonl"), dst)
+    shutil.copytree(os.path.join(src, "state"), os.path.join(dst, "state"))
+    return dst
 
 
-def test_split_bounded_equals_operators_on_edge_cases(spark):
-    """Each table ``split_bounded`` cuts from the fused query equals its
-    operator's own ``toArrow()`` — rows, order and Arrow schema — on
-    rows built to hit every special case of the split. The columns are
-    those the summaries read, with the sink's types."""
+def _published(root: str) -> dict[str, bytes]:
+    """Every published summary file under ``root``, by relative path."""
+    import glob
+
+    out = {}
+    for f in sorted(glob.glob(os.path.join(root, "summary", "*", "*"))):
+        with open(f, "rb") as fh:
+            out[os.path.relpath(f, root)] = fh.read()
+    return out
+
+
+def test_publish_reads_no_data_file(spark, pipeline_out, tmp_path):
+    """The publish reads only the manifest and the states: a copy of the
+    sink without its ``data/`` tree publishes the same files."""
+    run_aggregates(spark, pipeline_out)
+    copy = _without_data(pipeline_out, str(tmp_path / "copy"))
+    run_aggregates(spark, copy)
+    assert _published(copy) == _published(pipeline_out) != {}
+
+
+def test_load_refuses_a_writer_outside_the_manifest_root(spark, tiny_input, tmp_path):
+    """The state is built from the files under the manifest's root: a
+    writer with another root is refused before it writes, and one that
+    hides its root still fails the load before the commit, instead of
+    publishing summaries that miss the chunk."""
+    from logparser_spark.plans.checkpoint import Manifest
+    from logparser_spark.sources.sinks import MultiSinkWriter
+
+    out, elsewhere = str(tmp_path / "sink"), str(tmp_path / "elsewhere")
+    with pytest.raises(ValueError, match="parquet sink layout"):
+        run_pipeline(spark, tiny_input, out, writer=MultiSinkWriter(elsewhere))
+    assert not os.path.exists(elsewhere)
+
+    class Wrapped:
+        """The writer contract only, forwarded to a writer elsewhere."""
+
+        def __init__(self, root):
+            self._inner = MultiSinkWriter(root)
+
+        def write_chunk(self, df, chunk_id):
+            return self._inner.write_chunk(df, chunk_id)
+
+        def remove_chunk(self, chunk_id):
+            self._inner.remove_chunk(chunk_id)
+
+        def exact_chunk_counts(self, chunk_id):
+            return self._inner.exact_chunk_counts(chunk_id)
+
+    with pytest.raises(RuntimeError, match="covers 0 rows"):
+        run_pipeline(spark, tiny_input, out, writer=Wrapped(elsewhere))
+    assert Manifest(out).completed_chunks() == {}
+
+
+def test_publish_raises_on_a_committed_chunk_without_state(spark, pipeline_out, tmp_path):
+    """A committed load chunk with no state is an error naming the chunk,
+    never a silent gap in the summaries."""
+    copy = _without_data(pipeline_out, str(tmp_path / "copy"))
+    os.remove(state_path(copy, "chunk-00001"))
+    with pytest.raises(FileNotFoundError, match="chunk-00001"):
+        run_aggregates(spark, copy)
+
+
+def test_publish_folds_states_and_ignores_a_stale_fold(spark, pipeline_out, tmp_path, monkeypatch):
+    """Once ``FOLD_EVERY`` chunks are unfolded, the publish folds their
+    states into one file naming the chunks, and later publishes read the
+    fold instead of those states; a fold naming a chunk the manifest
+    lacks is ignored. The published files never change."""
+    from logparser_spark.plans.checkpoint import Manifest
+
+    run_aggregates(spark, pipeline_out)
+    want = _published(pipeline_out)
+    copy = _without_data(pipeline_out, str(tmp_path / "copy"))
+    chunks = list(Manifest(copy).completed_chunks())
+    monkeypatch.setattr(summary_state, "FOLD_EVERY", len(chunks))
+    run_aggregates(spark, copy)
+    fold = pq.ParquetFile(fold_path(copy))
+    assert fold.schema_arrow.metadata[b"chunks"] == json.dumps(chunks).encode()
+    assert _published(copy) == want
+    # the fold stands in for the states it covers
+    states = {c: pq.read_table(state_path(copy, c)) for c in chunks}
+    for c in chunks:
+        os.remove(state_path(copy, c))
+    run_aggregates(spark, copy)
+    assert _published(copy) == want
+    # a fold naming an uncommitted chunk is not read
+    stale = fold.read().replace_schema_metadata({"chunks": json.dumps([*chunks, "chunk-09999"])})
+    pq.write_table(stale, fold_path(copy))
+    with pytest.raises(FileNotFoundError, match=chunks[0]):
+        run_aggregates(spark, copy)
+    for c, t in states.items():
+        pq.write_table(t, state_path(copy, c))
+    run_aggregates(spark, copy)
+    assert _published(copy) == want
+
+
+def _assert_published_equal_operators(spark, root):
+    """Each published table equals its live operator over ``read_sink``:
+    same rows, same order, same Arrow schema."""
+    df = read_sink(spark, root)
+    got = {}
+    for name, op in BOUNDED_SUMMARIES.items():
+        got[name] = pq.read_table(os.path.join(root, "summary", name, "part-00000.parquet"))
+        want = op(df).toArrow()
+        assert got[name].schema == want.schema, name
+        assert got[name].to_pylist() == want.to_pylist(), name
+    return got
+
+
+def test_state_merge_equals_operators_on_edge_cases(spark, tmp_path, monkeypatch):
+    """Edge rows, loaded as three chunks through ``load_chunk`` (routing
+    bypassed: the rows are already routed), publish tables that each
+    equal their operator's ``toArrow()`` over the sink — rows, order and
+    Arrow schema. The columns are those the summaries read, with the
+    sink's types."""
     from datetime import datetime
+
+    from logparser_spark.plans import pipeline
+    from logparser_spark.plans.checkpoint import Manifest
+    from logparser_spark.sources.sinks import MultiSinkWriter
 
     schema = (
         "category string, valid int, status_code int, action string, ip string,"
-        " response_size_bytes bigint, response_time_ms int, time timestamp"
+        " response_size_bytes bigint, response_time_ms int, time timestamp,"
+        " epoch_us bigint, url string, domain string, username string"
     )
     t = datetime(2024, 3, 5, 10, 15)
+    web = ("http://a/", "a")
     rows = [
         # a category with quarantine (invalid) rows only
-        ("quarantine", 0, None, None, None, None, None, None),
-        ("quarantine", 0, 0, "-", "10.0.0.9", 7, -1, t),
+        ("quarantine", 0, None, None, None, None, None, None, None, None, None, None),
+        ("quarantine", 0, 0, "-", "10.0.0.9", 7, -1, t, 9, *web, "u_x"),
         # a category whose valid rows all fall in one hour
-        ("denied", 1, 403, "TCP_DENIED", "10.0.0.1", 10, 5, t),
-        ("denied", 1, 407, "TCP_DENIED", "10.0.0.2", 20, 7, datetime(2024, 3, 6, 10, 59)),
-        ("denied", 0, 403, "TCP_DENIED", "10.0.0.2", 1, 1, datetime(2024, 3, 6, 3)),
+        ("denied", 1, 403, "TCP_DENIED", "10.0.0.1", 10, 5, t, 1, *web, "u_a"),
+        ("denied", 1, 407, "TCP_DENIED", "10.0.0.2", 20, 7, datetime(2024, 3, 6, 10, 59),
+         5, "http://b/", None, "u_a"),
+        ("denied", 0, 403, "TCP_DENIED", "10.0.0.2", 1, 1, datetime(2024, 3, 6, 3), 2, *web, "u_a"),
         # status codes null, 0 and negative; actions null and '-';
-        # response times all <= 0; bytes null throughout
-        ("other", 1, None, None, "10.0.0.3", None, 0, datetime(2024, 3, 5, 23, 30)),
-        ("other", 1, 0, "-", "10.0.0.3", None, -3, datetime(1969, 12, 31, 22, 30)),
-        ("other", 1, -5, "NONE", None, None, -1, t),
-        # an ordinary category: one null byte count among the rest
-        ("success", 1, 200, "TCP_HIT", "10.0.0.4", 100, 30, t),
-        ("success", 1, 304, "TCP_MISS", "10.0.0.5", None, 12, datetime(2024, 3, 5, 0, 1)),
-        ("success", 1, 200, "TCP_MISS", "10.0.0.4", 50, 9, datetime(2024, 3, 5, 13)),
-        ("error", 1, 503, "TCP_MISS", "10.0.0.6", 0, 1000, t),
+        # response times all <= 0; bytes null throughout; urls and
+        # usernames null and '-'; a pre-epoch row
+        ("other", 1, None, None, "10.0.0.3", None, 0, datetime(2024, 3, 5, 23, 30),
+         3, None, None, None),
+        ("other", 1, 0, "-", "10.0.0.3", None, -3, datetime(1969, 12, 31, 22, 30),
+         -5_400_000_000, "-", None, "-"),
+        ("other", 1, -5, "NONE", None, None, -1, t, 4, "http://c/", "c", "u_b"),
+        # an ordinary category: one null byte count among the rest, a
+        # user with a null ip, a url with a null response time
+        ("success", 1, 200, "TCP_HIT", "10.0.0.4", 100, 30, t, 6, *web, "u_b"),
+        ("success", 1, 304, "TCP_MISS", "10.0.0.5", None, 12, datetime(2024, 3, 5, 0, 1),
+         7, "http://b/", None, "u_b"),
+        ("success", 1, 200, "TCP_MISS", "10.0.0.4", 50, None, datetime(2024, 3, 5, 13),
+         8, "http://c/", "c", "u_c"),
+        ("success", 1, 200, "TCP_MISS", None, 50, 9, t, 10, "http://d/", "d", "u_c"),
+        ("error", 1, 503, "TCP_MISS", "10.0.0.6", 0, 1000, t, 11, *web, "u_a"),
         # a null category sorts first, as the operators' orderBy puts it
-        (None, 1, 200, "TCP_HIT", "10.0.0.7", 1, 1, t),
+        (None, 1, 200, "TCP_HIT", "10.0.0.7", 1, 1, t, 12, "http://d/", "d", "u_d"),
     ]
-    df = spark.createDataFrame(rows, schema)
-    statuses, actions = agg.distinct_dims(df)
-    ops = {
-        "agg_sink_totals": agg.sink_totals(df),
-        "agg_status_hist": agg.status_hist(df),
-        "agg_hourly_hist": agg.hourly_hist(df),
-        "dim_statuses": statuses,
-        "dim_actions": actions,
-    }
-    got = agg.split_bounded(agg.bounded_summaries(df).toArrow())
-    assert set(got) == set(ops)
-    for name, op in ops.items():
-        want = op.toArrow()
-        assert got[name].schema == want.schema, name
-        assert got[name].to_pylist() == want.to_pylist(), name
+    root = str(tmp_path / "sink")
+    writer, manifest = MultiSinkWriter(root), Manifest(root)
+    monkeypatch.setattr(pipeline, "build_routed", lambda spark, raw: raw)
+    for i in range(3):
+        part = spark.createDataFrame(rows[i::3], schema)
+        pipeline.load_chunk(spark, part, f"chunk-{i:05d}", writer, manifest, {})
+    run_aggregates(spark, root)
+    got = _assert_published_equal_operators(spark, root)
+    # the same files when each state is built from two-row batches with
+    # partials folded in pairs, and the publish folds every two chunks
+    published = _published(root)
+    seen = []
+    rows_state = summary_state._rows_state
+    monkeypatch.setattr(summary_state, "_rows_state", lambda t: seen.append(t.num_rows) or rows_state(t))
+    monkeypatch.setattr(summary_state, "BATCH_ROWS", 2)
+    monkeypatch.setattr(summary_state, "FOLD_EVERY", 2)
+    for i in range(3):
+        state = summary_state.chunk_state(chunk_files(root, f"chunk-{i:05d}"))
+        pq.write_table(state, state_path(root, f"chunk-{i:05d}"))
+    run_aggregates(spark, root)
+    assert os.path.exists(fold_path(root))
+    assert _published(root) == published
+    assert len(seen) >= 6 and max(seen) < 2 * 2
     # the cases above are really present in the tables compared
     hourly = got["agg_hourly_hist"].to_pylist()
     assert {r["category"] for r in hourly} == {None, "denied", "error", "other", "success"}
     assert [r["hour"] for r in hourly if r["category"] == "denied" and r["row_count"]] == [10]
+    assert [r["hour"] for r in hourly if r["category"] == "other" and r["row_count"]] == [10, 22, 23]
     assert [r["status_code"] for r in got["dim_statuses"].to_pylist()] == [200, 304, 403, 407, 503]
     assert "-" not in [r["action"] for r in got["dim_actions"].to_pylist()]
+    users = {r["username"]: r for r in got["top_users"].to_pylist()}
+    assert users["u_c"]["unique_ips"] == 1 and users["u_c"]["min_ip"] == "10.0.0.4"
+    assert users["u_a"]["unique_ips"] == 3 and users["u_a"]["request_count"] == 3
+    urls = {r["url"]: r for r in got["top_urls"].to_pylist()}
+    assert urls["http://a/"]["request_count"] == 3 and "-" not in urls
+
+
+def test_resume_after_crash_between_state_and_commit(spark, tiny_input, tmp_path, monkeypatch):
+    """A crash after a chunk's state is written but before its manifest
+    commit leaves a state the resume replaces: the published summaries
+    then equal the operators over the sink."""
+    from logparser_spark.plans.checkpoint import Manifest
+
+    out = str(tmp_path / "sink")
+    commit = Manifest.commit_chunk
+
+    def crash_on_second(self, record):
+        if record["chunk_id"] == "chunk-00001":
+            raise RuntimeError("injected crash before commit")
+        commit(self, record)
+
+    monkeypatch.setattr(Manifest, "commit_chunk", crash_on_second)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_pipeline(spark, tiny_input, out, n_chunks=2)
+    assert os.path.exists(state_path(out, "chunk-00001"))
+    assert set(Manifest(out).completed_chunks()) == {"chunk-00000"}
+    monkeypatch.setattr(Manifest, "commit_chunk", commit)
+    run_pipeline(spark, tiny_input, out, n_chunks=2)
+    run_aggregates(spark, out)
+    _assert_published_equal_operators(spark, out)
+    assert read_sink(spark, out).count() == 10_000
+
+
+def test_compaction_leaves_published_files_unchanged(spark, tiny_input, tmp_path):
+    """Compaction changes no row, so it changes no state and the files a
+    publish writes after it are byte-identical to those before it."""
+    from logparser_spark.sources.compact import compact_sinks
+
+    out = str(tmp_path / "sink")
+    run_pipeline(spark, tiny_input, out, n_chunks=3)
+    run_aggregates(spark, out)
+    before = _published(out)
+    assert compact_sinks(spark, out)["partitions_rewritten"] > 0
+    run_aggregates(spark, out)
+    assert _published(out) == before
+
+
+def test_footer_reads_leave_no_cyclic_garbage(pipeline_out):
+    """The footer helpers build no reference cycles: with the cyclic
+    collector off, repeated calls leave nothing for it to free (a
+    collection would otherwise land in some later request)."""
+    import gc
+    import glob
+
+    from logparser_spark.sources.sinks import _footer_stats, footer_schema
+
+    files = sorted(glob.glob(os.path.join(pipeline_out, "data", "*", "*", "*.parquet")))[:5]
+    for helper in (lambda f: _footer_stats(f, "time"), footer_schema):
+        helper(files[0])  # first-call imports and caches
+        gc.collect()
+        gc.disable()
+        try:
+            for f in files * 4:
+                helper(f)
+            assert gc.collect() == 0
+        finally:
+            gc.enable()
 
 
 def test_read_sink_pins_inferred_schema_without_a_job(spark, pipeline_out, spark_jobs):
@@ -630,6 +832,20 @@ def test_compact_after_dispatches_to_writer_compact(spark, tiny_input, tmp_path_
             spark, tiny_input, out2, n_chunks=1,
             writer=BareWriter(out2), compact_after=True,
         )
+
+
+def test_status_class_boundaries_match_the_oracle(spark):
+    """The Spark expression and the state build's pyarrow classifier
+    both read ``classify.STATUS_CLASS_RANGES``; every range boundary is
+    checked against the oracle's own ranges, so the shared table cannot
+    drift unseen."""
+    from logparser_spark.functions.classify import STATUS_CLASS_LABELS, status_class_expr
+
+    codes = [None, -1, 0, 199, 200, 299, 300, 399, 400, 499, 500, 599, 999]
+    want = [STATUS_CLASS_LABELS["other"] if c is None else oracle.status_class(c) for c in codes]
+    df = spark.createDataFrame([(c,) for c in codes], "s int")
+    assert [r[0] for r in df.select(status_class_expr(F.col("s"))).collect()] == want
+    assert summary_state._status_class(pa.chunked_array([codes], pa.int32())).to_pylist() == want
 
 
 def test_day_and_hour_buckets_are_session_timezone_proof(spark):
