@@ -18,6 +18,7 @@ untouched into every sink row — token-array equality, tested.
 from __future__ import annotations
 
 import contextlib
+import glob
 import json
 import math
 import os
@@ -35,7 +36,13 @@ from logparser_spark.operators import summary_state
 from logparser_spark.operators.enrich import enrich, load_dims
 from logparser_spark.plans.checkpoint import Manifest
 from logparser_spark.sources.sequences import read_raw_sequences
-from logparser_spark.sources.sinks import MultiSinkWriter, chunk_files, fold_path, state_path
+from logparser_spark.sources.sinks import (
+    MultiSinkWriter,
+    category_counts,
+    chunk_files,
+    fold_path,
+    state_path,
+)
 
 
 def build_routed(spark: SparkSession, raw: DataFrame) -> DataFrame:
@@ -52,13 +59,13 @@ def load_chunk(
     spark: SparkSession,
     raw: DataFrame,
     chunk_id: str,
-    writer,
     manifest: Manifest,
     lineage: dict,
 ) -> int:
-    """Load one chunk of raw sequences and commit it; returns its exact
-    row count. The one commit path of every load: ``run_pipeline``'s
-    file chunks and ``streaming.stream_pipeline``'s micro-batches.
+    """Load one chunk of raw sequences into the sink at the manifest's
+    root and commit it; returns its exact row count. The one commit
+    path of every load: ``run_pipeline``'s file chunks and
+    ``streaming.stream_pipeline``'s micro-batches.
 
     Any partial output of a crashed earlier attempt under ``chunk_id``
     is rolled back first, so re-running an id the manifest does not hold
@@ -67,62 +74,41 @@ def load_chunk(
 
     Before the manifest commit, the chunk's summary state
     (``summary_state.chunk_state`` over only this chunk's promoted
-    files, under the manifest's root) is written to
-    ``<root>/state/<chunk_id>.parquet`` by temp file and rename, so
-    every committed chunk has one; ``run_aggregates`` merges them. A
-    crash between the two leaves a state the rollback removes.
-
-    So the writer must put the chunk in the parquet sink layout under
-    the manifest's root. A writer that declares another layout
-    (``parquet_sink_layout = False``, as ``IcebergMultiSinkWriter``
-    does) or has another ``root`` is refused before anything is written;
-    one that still misses the root fails the load before its commit.
+    files) is written to ``<root>/state/<chunk_id>.parquet`` by temp
+    file and rename, so every committed chunk has one;
+    ``run_aggregates`` merges them. A crash between the two leaves a
+    state the rollback removes.
     """
-    root = getattr(writer, "root", manifest.root)
-    if not getattr(writer, "parquet_sink_layout", True) or (
-        os.path.abspath(root) != os.path.abspath(manifest.root)
-    ):
-        raise ValueError(
-            f"{type(writer).__name__} does not write the parquet sink layout under "
-            f"{manifest.root}, which each chunk's summary state is built from"
-        )
+    writer = MultiSinkWriter(manifest.root)
     writer.remove_chunk(chunk_id)
     t0 = _time.monotonic()
     routed = build_routed(spark, raw)
 
-    # Counts: the WRITER's exact source (parquet footers / Iceberg
-    # chunk-tag metadata — no data pages read) is the source of record.
-    # Observation accumulators ride the write job for free but OVERCOUNT
-    # under speculative execution AND ordinary stage reattempts (e.g.
-    # fetch-failure retries — which happen on real clusters without
-    # speculation), so they are only the cross-check: a disagreement is
-    # recorded in the manifest as reattempt-inflation lineage.
+    # Counts: the parquet footers (no data pages read) are the source of
+    # record. Observation accumulators ride the write job for free but
+    # OVERCOUNT under speculative execution AND ordinary stage
+    # reattempts (e.g. fetch-failure retries — which happen on real
+    # clusters without speculation), so they are only the cross-check: a
+    # disagreement is recorded in the manifest as reattempt-inflation
+    # lineage. One footer walk serves the counts and the per-partition
+    # lineage.
     obs = Observation(chunk_id)
     writer.write_chunk(routed.observe(obs, F.count(F.lit(1)).alias("_rows")), chunk_id)
 
     observed_rows = obs.get["_rows"]
-    rows, cat_counts = writer.exact_chunk_counts(chunk_id)
+    partitions = writer.partition_metrics(chunk_id)
+    rows, cat_counts = category_counts(partitions)
     dt = _time.monotonic() - t0
-    # lineage: Iceberg-backed writers expose the committed snapshot
-    snapshot_id = (
-        writer.last_snapshot_id(chunk_id)
-        if hasattr(writer, "last_snapshot_id")
-        else None
-    )
-    partitions = (
-        writer.partition_metrics(chunk_id)
-        if hasattr(writer, "partition_metrics")
-        else None
-    )
     t_state = _time.monotonic()
     state = summary_state.chunk_state(chunk_files(manifest.root, chunk_id))
     covered = summary_state.rows_covered(state)
     if covered != rows:
-        # the writer put the chunk somewhere other than the manifest
-        # root's data tree: its summaries would silently miss it
+        # the state must cover exactly the rows committed for the
+        # chunk, or the published summaries would silently disagree
+        # with the sink
         raise RuntimeError(
-            f"summary state of {chunk_id} covers {covered} rows of its {rows}: "
-            f"the writer's files are not under {manifest.root}/data"
+            f"summary state of {chunk_id} covers {covered} rows of the "
+            f"{rows} its footers count"
         )
     path = state_path(manifest.root, chunk_id)
     os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -133,7 +119,6 @@ def load_chunk(
         {
             "chunk_id": chunk_id,
             **lineage,
-            **({"snapshot_id": snapshot_id} if snapshot_id is not None else {}),
             "rows": rows,
             "rows_per_category": cat_counts,
             # cross-check trail: observed != exact means duplicate
@@ -170,31 +155,24 @@ def run_pipeline(
     out_root: str,
     n_chunks: int = 1,
     fail_after_chunk: int | None = None,
-    writer=None,
     progress: bool = False,
     job_group: str | None = None,
     compact_after: bool = False,
 ) -> dict:
-    """Chunked, resumable parse→route load. Returns run metrics.
+    """Chunked, resumable parse→route load into the sink at
+    ``out_root``, one ``load_chunk`` per chunk. Returns run metrics.
 
-    ``compact_after=True`` runs the small-file compaction pass once all
-    chunks are committed (reference analog: the automatic index rebuild
-    after every load, LogFileParser.java:727-821) — each oversized
-    (category, day) partition is bin-packed and the rewrite recorded in
-    the same manifest. Off by default: a write-heavy ingest schedule
-    compacts on its own cadence instead of per load.
+    ``compact_after=True`` runs the small-file compaction pass
+    (``compact.compact_sinks``) once all chunks are committed (reference
+    analog: the automatic index rebuild after every load,
+    LogFileParser.java:727-821) — each oversized (category, day)
+    partition is bin-packed and the rewrite recorded in the same
+    manifest. Off by default: a write-heavy ingest schedule compacts on
+    its own cadence instead of per load.
 
     ``fail_after_chunk`` is a test hook simulating a crash between a
     chunk's sink commit and nothing else (the manifest records it, so
     resume continues with the next chunk).
-
-    ``writer`` wraps or swaps the sink writer — anything with the
-    write_chunk/remove_chunk/exact_chunk_counts contract that writes the
-    parquet sink layout under ``out_root``, which ``load_chunk`` builds
-    each chunk's summary state from. ``sources.iceberg.
-    IcebergMultiSinkWriter`` commits to a catalog table instead, so it
-    is refused before the first write until the state build reads
-    Iceberg data files.
 
     ``progress=True`` samples live per-stage task progress into
     ``<out_root>/progress.jsonl`` and runs every job under a job group
@@ -210,73 +188,46 @@ def run_pipeline(
     else:
         reporting = contextlib.nullcontext()
     with reporting:
-        return _run_pipeline_inner(
-            spark, input_path, out_root, n_chunks, fail_after_chunk, writer,
-            compact_after,
-        )
+        manifest = Manifest(out_root)
+        done = manifest.completed_chunks()
 
+        files = sorted(glob.glob(os.path.join(input_path, "*.parquet")))
+        if not files:
+            raise FileNotFoundError(f"no parquet files under {input_path}")
+        chunks = _chunk_files(files, n_chunks)
 
-def _run_pipeline_inner(
-    spark: SparkSession,
-    input_path: str,
-    out_root: str,
-    n_chunks: int = 1,
-    fail_after_chunk: int | None = None,
-    writer=None,
-    compact_after: bool = False,
-) -> dict:
-    import glob as _glob
+        total_rows = 0
+        t_all = _time.monotonic()
+        for i, inputs in enumerate(chunks):
+            chunk_id = f"chunk-{i:05d}"
+            if chunk_id in done:
+                # chunk ids are positional — refuse to resume if the file
+                # set behind a completed chunk changed (a new input file or
+                # different n_chunks shifts the mapping and would silently
+                # skip or double-process data)
+                recorded = done[chunk_id].get("input_files")
+                if recorded is not None and recorded != inputs:
+                    raise RuntimeError(
+                        f"resume mismatch for {chunk_id}: manifest records "
+                        f"{len(recorded)} input files {recorded[:2]}..., this run "
+                        f"chunks to {len(inputs)} files {inputs[:2]}...; "
+                        "input set or n_chunks changed — use a fresh out_root"
+                    )
+                continue
+            raw = read_raw_sequences(spark, inputs)
+            total_rows += load_chunk(
+                spark, raw, chunk_id, manifest, {"input_files": inputs}
+            )
+            if fail_after_chunk is not None and i >= fail_after_chunk:
+                raise RuntimeError(f"injected failure after {chunk_id}")
 
-    manifest = Manifest(out_root)
-    if writer is None:
-        writer = MultiSinkWriter(out_root)
-    done = manifest.completed_chunks()
-
-    files = sorted(_glob.glob(os.path.join(input_path, "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {input_path}")
-    chunks = _chunk_files(files, n_chunks)
-
-    total_rows = 0
-    t_all = _time.monotonic()
-    for i, chunk_files in enumerate(chunks):
-        chunk_id = f"chunk-{i:05d}"
-        if chunk_id in done:
-            # chunk ids are positional — refuse to resume if the file
-            # set behind a completed chunk changed (a new input file or
-            # different n_chunks shifts the mapping and would silently
-            # skip or double-process data)
-            recorded = done[chunk_id].get("input_files")
-            if recorded is not None and recorded != chunk_files:
-                raise RuntimeError(
-                    f"resume mismatch for {chunk_id}: manifest records "
-                    f"{len(recorded)} input files {recorded[:2]}..., this run "
-                    f"chunks to {len(chunk_files)} files {chunk_files[:2]}...; "
-                    "input set or n_chunks changed — use a fresh out_root"
-                )
-            continue
-        raw = read_raw_sequences(spark, chunk_files)
-        total_rows += load_chunk(
-            spark, raw, chunk_id, writer, manifest, {"input_files": chunk_files}
-        )
-        if fail_after_chunk is not None and i >= fail_after_chunk:
-            raise RuntimeError(f"injected failure after {chunk_id}")
-
-    out = {
-        "chunks": len(chunks),
-        "rows_this_run": total_rows,
-        "wall_sec": round(_time.monotonic() - t_all, 3),
-    }
-    if compact_after:
-        # post-load maintenance (reference: automatic index rebuild).
-        # Dispatch on the writer contract — silently skipping would let
-        # small files accumulate while the caller believes it ran.
-        if hasattr(writer, "compact"):
-            # table-format writers own compaction (Iceberg:
-            # one rewrite_data_files snapshot)
-            writer.compact()
-            out["compaction"] = {"kind": "rewrite_data_files"}
-        elif hasattr(writer, "data_dir"):
+        out = {
+            "chunks": len(chunks),
+            "rows_this_run": total_rows,
+            "wall_sec": round(_time.monotonic() - t_all, 3),
+        }
+        if compact_after:
+            # post-load maintenance (reference: automatic index rebuild)
             from logparser_spark.sources.compact import compact_sinks
 
             c = compact_sinks(spark, out_root)
@@ -284,12 +235,7 @@ def _run_pipeline_inner(
                 "chunk_id": c["chunk_id"],
                 "partitions_rewritten": c["partitions_rewritten"],
             }
-        else:
-            raise ValueError(
-                "compact_after=True but the writer exposes neither "
-                "compact() nor the parquet sink layout (data_dir)"
-            )
-    return out
+        return out
 
 
 def _state(out_root: str, chunk_id: str):

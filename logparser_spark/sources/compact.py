@@ -4,8 +4,8 @@ Reference analog: the index rebuild after each load
 (LogFileParser.java:727-821) — the maintenance pass that keeps read
 performance flat as loads accumulate. SURVEY §4 maps it to Iceberg's
 ``rewrite_data_files``; this module is the rename-protocol stand-in for
-the sandbox's raw-parquet sink (the Iceberg writer gets compaction for
-free from the table service).
+the raw-parquet sink (an Iceberg table gets compaction from its table
+service).
 
 Why it matters at 100 TB: every committed chunk adds ~tasks x live-days
 files per (category, day) partition, so a table loaded in daily chunks

@@ -130,10 +130,9 @@ class MultiSinkWriter:
 
     def write_chunk(self, df: DataFrame, chunk_id: str) -> int:
         """Write one chunk of routed rows; returns the number of FILES
-        promoted (row counts come from ``exact_chunk_counts`` — footer
-        metadata — because task-side counters can overcount on stage
-        reattempts; the Iceberg twin returns a snapshot id, so callers
-        must not assign meaning to this return beyond logging).
+        promoted. Row counts come from the footers
+        (``partition_metrics``), because task-side counters can
+        overcount on stage reattempts.
 
         df must carry ``category`` and ``time`` columns; ``day`` is
         derived here so the partition expression lives in one place.
@@ -171,25 +170,11 @@ class MultiSinkWriter:
         return n
 
     def exact_chunk_counts(self, chunk_id: str) -> tuple[int, dict[str, int]]:
-        """Writer-owned exact (total, per-category) counts of a promoted
-        chunk — the count source of record when Observation accumulators
-        can overcount (speculation / stage reattempts). Each sink format
-        implements its own (parquet: footers; Iceberg: a metadata-pruned
-        count over the chunk tag). Derived from partition_metrics so the
-        footer walk happens once."""
-        parts = self.partition_metrics(chunk_id)
-        per_cat: dict[str, int] = {}
-        for name, rec in parts.items():
-            cat = next(
-                (
-                    p.split("=", 1)[1]
-                    for p in name.split(os.sep)
-                    if p.startswith("category=")
-                ),
-                "unknown",
-            )
-            per_cat[cat] = per_cat.get(cat, 0) + rec["rows"]
-        return sum(per_cat.values()), per_cat
+        """Exact (total, per-category) row counts of a promoted chunk,
+        from its parquet footers: the count source of record, as
+        Observation accumulators can overcount (speculation, stage
+        reattempts)."""
+        return category_counts(self.partition_metrics(chunk_id))
 
     def partition_metrics(self, chunk_id: str) -> dict[str, dict]:
         """Per-partition-directory (rows, bytes, files, watermark) for
@@ -234,6 +219,18 @@ class MultiSinkWriter:
             os.remove(f)
         with contextlib.suppress(FileNotFoundError):
             os.remove(state_path(self.root, chunk_id))
+
+
+def category_counts(parts: dict[str, dict]) -> tuple[int, dict[str, int]]:
+    """(total, per-category) rows of a chunk's ``partition_metrics``."""
+    per_cat: dict[str, int] = {}
+    for name, rec in parts.items():
+        cat = next(
+            (p.split("=", 1)[1] for p in name.split(os.sep) if p.startswith("category=")),
+            "unknown",
+        )
+        per_cat[cat] = per_cat.get(cat, 0) + rec["rows"]
+    return sum(per_cat.values()), per_cat
 
 
 def footer_row_count(paths) -> int:

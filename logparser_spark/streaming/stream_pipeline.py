@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from logparser_spark.plans.checkpoint import Manifest
 from logparser_spark.plans.pipeline import load_chunk
 from logparser_spark.sources.sequences import RAW_SCHEMA
-from logparser_spark.sources.sinks import MultiSinkWriter
 
 
 def read_sequence_stream(
@@ -56,7 +55,6 @@ def start_stream_load(
     the sink at ``out_root`` (an ``availableNow`` trigger), one chunk
     ``stream-{batch_id:05d}`` per micro-batch. Returns the running
     ``StreamingQuery``."""
-    writer = MultiSinkWriter(out_root)
     manifest = Manifest(out_root)
     # Read once per query run: Spark replays at most one batch, the first
     # of the run, so only ids committed before the start can recur.
@@ -66,7 +64,7 @@ def start_stream_load(
         chunk_id = f"stream-{batch_id:05d}"
         if chunk_id in committed:
             return  # a replay of a batch committed before a crash
-        load_chunk(raw.sparkSession, raw, chunk_id, writer, manifest, {"batch_id": batch_id})
+        load_chunk(raw.sparkSession, raw, chunk_id, manifest, {"batch_id": batch_id})
 
     return (
         read_sequence_stream(spark, input_path, max_files_per_trigger)

@@ -145,20 +145,26 @@ def test_empty_string_filter_keeps_fast_path(api):
     assert LogFilter(status_code=0).is_empty() is False  # explicit 0 filters
 
 
-def test_top_k_fast_path_serves_any_k_when_exhaustive(api):
+def test_top_k_fast_path_serves_any_k_when_exhaustive(spark, tiny_input, tmp_path, monkeypatch):
     """A top-K summary holding FEWER rows than its cap saw every
     distinct key — it is the complete ranking and stays valid for any
-    requested k (no permanent live-scan penalty on small vocabularies)."""
+    requested k (no permanent live-scan penalty on small vocabularies).
+    The cap is raised above the fixture's url count so the published
+    ``top_urls`` is exhaustive."""
+    from logparser_spark.operators import aggregates as agg
+    from logparser_spark.operators import summary_state
+
+    monkeypatch.setitem(summary_state.K_CAPS, "top_urls", 1000)
+    out = str(tmp_path / "sink")
+    run_pipeline(spark, tiny_input, out, n_chunks=1)
+    run_aggregates(spark, out)
+    api = LogPipelineAPI(spark, out)
     meta = api._summary_meta("top_urls")
-    assert meta is not None and set(meta) >= {"rows", "exhaustive"}
-    if not meta["exhaustive"]:
-        pytest.skip("fixture has >= cap distinct urls; exhaustive path not hit")
+    assert meta is not None and meta["exhaustive"] is True
     assert api._summary_table("top_urls", k=10**6) is not None
     fast = [tuple(r) for r in api.get_top_urls(k=10**6).collect()]
-    from logparser_spark.operators import aggregates as agg
-
     live = [tuple(r) for r in agg.top_urls(api._facts(None), k=10**6).collect()]
-    assert fast == live
+    assert fast == live and len(fast) == meta["rows"]
 
 
 def test_partial_summary_dir_falls_back_to_live(api):

@@ -361,37 +361,53 @@ def test_publish_reads_no_data_file(spark, pipeline_out, tmp_path):
     assert _published(copy) == _published(pipeline_out) != {}
 
 
-def test_load_refuses_a_writer_outside_the_manifest_root(spark, tiny_input, tmp_path):
-    """The state is built from the files under the manifest's root: a
-    writer with another root is refused before it writes, and one that
-    hides its root still fails the load before the commit, instead of
-    publishing summaries that miss the chunk."""
+def test_load_fails_before_commit_when_the_state_misses_a_file(
+    spark, tiny_input, pipeline_out, tmp_path, monkeypatch
+):
+    """A chunk's state must cover exactly the rows committed for it: a
+    state build that sees one file fewer fails the load, naming the
+    chunk, before its manifest commit. A rerun rolls the chunk back and
+    commits the counts a clean load does."""
+    from logparser_spark.plans import pipeline
     from logparser_spark.plans.checkpoint import Manifest
-    from logparser_spark.sources.sinks import MultiSinkWriter
 
-    out, elsewhere = str(tmp_path / "sink"), str(tmp_path / "elsewhere")
-    with pytest.raises(ValueError, match="parquet sink layout"):
-        run_pipeline(spark, tiny_input, out, writer=MultiSinkWriter(elsewhere))
-    assert not os.path.exists(elsewhere)
-
-    class Wrapped:
-        """The writer contract only, forwarded to a writer elsewhere."""
-
-        def __init__(self, root):
-            self._inner = MultiSinkWriter(root)
-
-        def write_chunk(self, df, chunk_id):
-            return self._inner.write_chunk(df, chunk_id)
-
-        def remove_chunk(self, chunk_id):
-            self._inner.remove_chunk(chunk_id)
-
-        def exact_chunk_counts(self, chunk_id):
-            return self._inner.exact_chunk_counts(chunk_id)
-
-    with pytest.raises(RuntimeError, match="covers 0 rows"):
-        run_pipeline(spark, tiny_input, out, writer=Wrapped(elsewhere))
+    out = str(tmp_path / "sink")
+    monkeypatch.setattr(pipeline, "chunk_files", lambda root, c: chunk_files(root, c)[1:])
+    with pytest.raises(RuntimeError, match="chunk-00000"):
+        run_pipeline(spark, tiny_input, out, n_chunks=2)
     assert Manifest(out).completed_chunks() == {}
+    assert chunk_files(out, "chunk-00000")  # promoted, not committed
+
+    monkeypatch.undo()
+    run_pipeline(spark, tiny_input, out, n_chunks=2)
+    got, want = Manifest(out).completed_chunks(), Manifest(pipeline_out).completed_chunks()
+    assert got.keys() == want.keys()
+    for c in want:
+        for key in ("rows", "rows_per_category", "state_rows"):
+            assert got[c][key] == want[c][key], (c, key)
+    assert read_sink(spark, out).count() == sum(r["rows"] for r in got.values())
+
+
+def test_load_walks_each_footer_once(spark, tiny_input, tmp_path, monkeypatch):
+    """One footer walk per load serves both the counts and the
+    per-partition lineage: one footer read per promoted file."""
+    import glob
+
+    from logparser_spark.plans import pipeline
+    from logparser_spark.plans.checkpoint import Manifest
+    from logparser_spark.sources import sinks
+
+    root = str(tmp_path / "sink")
+    seen = []
+    footer_stats = sinks._footer_stats
+    monkeypatch.setattr(
+        sinks, "_footer_stats", lambda path, col: seen.append(path) or footer_stats(path, col)
+    )
+    raw = read_raw_sequences(spark, sorted(glob.glob(os.path.join(tiny_input, "*.parquet"))))
+    rows = pipeline.load_chunk(spark, raw, "chunk-00000", Manifest(root), {})
+    files = chunk_files(root, "chunk-00000")
+    assert rows == 10_000 and files
+    assert sorted(seen) == sorted(files)
 
 
 def test_publish_raises_on_a_committed_chunk_without_state(spark, pipeline_out, tmp_path):
@@ -459,7 +475,6 @@ def test_state_merge_equals_operators_on_edge_cases(spark, tmp_path, monkeypatch
 
     from logparser_spark.plans import pipeline
     from logparser_spark.plans.checkpoint import Manifest
-    from logparser_spark.sources.sinks import MultiSinkWriter
 
     schema = (
         "category string, valid int, status_code int, action string, ip string,"
@@ -498,11 +513,11 @@ def test_state_merge_equals_operators_on_edge_cases(spark, tmp_path, monkeypatch
         (None, 1, 200, "TCP_HIT", "10.0.0.7", 1, 1, t, 12, "http://d/", "d", "u_d"),
     ]
     root = str(tmp_path / "sink")
-    writer, manifest = MultiSinkWriter(root), Manifest(root)
+    manifest = Manifest(root)
     monkeypatch.setattr(pipeline, "build_routed", lambda spark, raw: raw)
     for i in range(3):
         part = spark.createDataFrame(rows[i::3], schema)
-        pipeline.load_chunk(spark, part, f"chunk-{i:05d}", writer, manifest, {})
+        pipeline.load_chunk(spark, part, f"chunk-{i:05d}", manifest, {})
     run_aggregates(spark, root)
     got = _assert_published_equal_operators(spark, root)
     # the same files when each state is built from two-row batches with
@@ -767,71 +782,6 @@ def test_manifest_corrupted_committed_record_refuses_resume(tmp_path):
         fh.write(b"garbage" + raw[7:])
     with pytest.raises(ValueError, match="corrupted"):
         m2.completed_chunks()
-
-
-def test_compact_after_dispatches_to_writer_compact(spark, tiny_input, tmp_path_factory):
-    """A table-format writer (compact() method, no data_dir) must get
-    its own compaction called — not silently skipped, not routed to the
-    parquet-layout pass."""
-    from logparser_spark.sources.sinks import MultiSinkWriter
-
-    out = str(tmp_path_factory.mktemp("compact_dispatch"))
-
-    class TableFormatWriter:
-        """Minimal writer contract + compact(), deliberately WITHOUT
-        data_dir (forwards storage to a real parquet writer)."""
-
-        def __init__(self, root):
-            self._inner = MultiSinkWriter(root)
-            self.compacted = False
-
-        def write_chunk(self, df, chunk_id):
-            return self._inner.write_chunk(df, chunk_id)
-
-        def remove_chunk(self, chunk_id):
-            self._inner.remove_chunk(chunk_id)
-
-        def exact_chunk_counts(self, chunk_id):
-            return self._inner.exact_chunk_counts(chunk_id)
-
-        def partition_metrics(self, chunk_id):
-            return self._inner.partition_metrics(chunk_id)
-
-        def compact(self):
-            self.compacted = True
-
-    w = TableFormatWriter(out)
-    res = run_pipeline(
-        spark, tiny_input, out, n_chunks=1, writer=w, compact_after=True
-    )
-    assert w.compacted
-    assert res["compaction"] == {"kind": "rewrite_data_files"}
-
-    class BareWriter:
-        """Writer contract WITHOUT compact() or data_dir: asking for
-        compact_after must fail loudly, never silently skip."""
-
-        def __init__(self, root):
-            self._inner = MultiSinkWriter(root)
-
-        def write_chunk(self, df, chunk_id):
-            return self._inner.write_chunk(df, chunk_id)
-
-        def remove_chunk(self, chunk_id):
-            self._inner.remove_chunk(chunk_id)
-
-        def exact_chunk_counts(self, chunk_id):
-            return self._inner.exact_chunk_counts(chunk_id)
-
-        def partition_metrics(self, chunk_id):
-            return self._inner.partition_metrics(chunk_id)
-
-    out2 = str(tmp_path_factory.mktemp("compact_dispatch2"))
-    with pytest.raises(ValueError, match="compact_after"):
-        run_pipeline(
-            spark, tiny_input, out2, n_chunks=1,
-            writer=BareWriter(out2), compact_after=True,
-        )
 
 
 def test_status_class_boundaries_match_the_oracle(spark):
