@@ -15,8 +15,11 @@ stage (merged from per-chunk states); filtered calls run the live
 operators with pushed-down predicates. Tests hold the two equal.
 
 The summary fast path makes NO JVM call. The aggregate stage publishes
-each bounded summary as one parquet file already in its canonical
-order; ``_summary_table`` reads it with pyarrow, drops the quarantine
+each bounded summary as one parquet file, ``summary/<name>.parquet``,
+already in its canonical order, by renaming a whole new file over the
+old one; its row count is the footer's and its ``exhaustive`` flag is
+in the footer's key-value metadata. ``_summary_table`` opens that file
+once with pyarrow, checks eligibility, reads it, drops the quarantine
 category (statistics) or slices to k (top-K) in Arrow, and
 ``collect_cached`` builds the response's ``Row``s from that table in
 Python — no Spark job, no py4j round trip. The ``get_*`` methods wrap
@@ -34,10 +37,7 @@ entry of the call that omitted it.
 
 from __future__ import annotations
 
-import glob
 import inspect
-import json
-import os
 from dataclasses import astuple, dataclass
 
 import pyarrow as pa
@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from logparser_spark.operators import aggregates as agg
-from logparser_spark.sources.sinks import footer_row_count, read_sink
+from logparser_spark.sources.sinks import read_sink, summary_path
 
 # The reference's JDBC guard (DatabaseConfig.java:29-34, maxRows 50 000):
 # the most rows one cached response may hold.
@@ -222,72 +222,46 @@ class LogPipelineAPI:
         df = read_sink(self.spark, self.root).filter(F.col("valid") == 1)
         return flt.apply(df) if flt else df
 
-    def _summary_meta(self, name: str) -> dict | None:
-        """The summary's commit marker (written inside the dir before
-        the atomic rename publish): {"rows": n, "exhaustive": bool}.
-        None = absent or uncommitted (a partial dir from a crashed
-        aggregate stage has no marker) -> callers fall back to live
-        aggregation, never to silently-partial results."""
-        try:
-            with open(os.path.join(self.root, "summary", name, "_meta.json")) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
-
-    def _summary_rows(self, name: str) -> int:
-        """Row count of a summary table WITHOUT a Spark job (from the
-        commit marker; parquet footers as a defensive fallback)."""
-        meta = self._summary_meta(name)
-        if meta is not None:
-            return meta["rows"]
-        return footer_row_count(
-            glob.glob(os.path.join(self.root, "summary", name, "*.parquet"))
-        )
-
     def _summary_table(
         self, endpoint: str, flt: LogFilter | None = None, k: int | None = None
     ) -> pa.Table | None:
         """The answer to an unfiltered summary request, read from the
-        published files by pyarrow alone, or None to send the call to
+        published file by pyarrow alone, or None to send the call to
         live aggregation:
 
         - only unfiltered calls qualify;
-        - the commit marker must exist and, for a top-K request, hold
-          >= k rows or be exhaustive (fewer distinct keys than its cap —
-          then it IS the complete ranking, valid for any k). The marker
-          is read once;
-        - the committed files are read once, in name order (the
-          aggregate stage publishes one file in the operator's canonical
-          order), so nothing is re-sorted;
+        - the summary's one file (``summary/<name>.parquet``) is opened
+          once: a top-K request needs its footer to hold >= k rows or
+          its schema metadata to mark it ``exhaustive`` (every distinct
+          key, so it IS the complete ranking, valid for any k); then the
+          same open file is read. The publish renames a whole new file
+          over the old one, so the open file is one version throughout;
+        - a missing or torn file (no publish yet, a truncated copy)
+          returns None instead of crashing;
+        - the aggregate stage publishes the rows in the operator's
+          canonical order, so nothing is re-sorted;
         - statistics covers valid (routed) rows only, as a filtered call
           does: quarantine rows never existed in the reference's logs
           table, so its category is dropped, and a null category too, as
           Spark's ``!=`` drops it;
-        - a top-K table is sliced to k;
-        - a read that races a republish (rmtree + rename) and finds the
-          files torn or gone returns None instead of crashing.
+        - a top-K table is sliced to k.
 
         The read is eager, so nothing read here can change afterwards: a
         later republish does not affect the returned rows."""
         if flt is not None and not flt.is_empty():
             return None
-        name = _SUMMARY_OF[endpoint]
-        meta = self._summary_meta(name)
-        if meta is None or (k is not None and meta["rows"] < k and not meta.get("exhaustive")):
-            return None
-        files = sorted(glob.glob(os.path.join(self.root, "summary", name, "*.parquet")))
-        if not files:
-            return None
+        path = summary_path(self.root, _SUMMARY_OF[endpoint])
         try:
             # ParquetFile.read skips read_table's dataset discovery: a
             # third of the cost on these few-KB files
-            tables = []
-            for f in files:
-                with pq.ParquetFile(f) as pf:
-                    tables.append(pf.read())
+            with pq.ParquetFile(path) as pf:
+                if k is not None and pf.metadata.num_rows < k:
+                    facts = pf.schema_arrow.metadata or {}
+                    if facts.get(b"exhaustive") != b"true":
+                        return None
+                table = pf.read().replace_schema_metadata(None)
         except (OSError, pa.ArrowException):
             return None
-        table = pa.concat_tables(tables)
         if endpoint == "statistics":
             # a null comparison drops the row, as Spark's filter does
             table = table.filter(pc.not_equal(table["category"], "quarantine"))

@@ -76,7 +76,7 @@ def _sorted_small(df: DataFrame, *keys: str) -> DataFrame:
     return df.coalesce(1).sortWithinPartitions(*keys)
 
 
-def sink_totals(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
+def sink_totals(df: DataFrame) -> DataFrame:
     """Per-category: A1 count, A2 errors, A3 distinct ip, A6 avg rt
     (rt>0 only), A7 bytes sum — one pass, one shuffle on category.
 
@@ -89,21 +89,13 @@ def sink_totals(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
     expand spread the (category, ip) pairs over reducers. At roughly
     100 B per set entry (string + hash-set slot; an estimate, not a
     measurement) a 10^6-ip category needs ~100 MB of one task's
-    memory, fine; from ~10^7 distinct ips in one category
-    ``approx_distinct`` becomes necessary. It swaps the count for
-    HyperLogLog++ (``approx_count_distinct``, default rsd 5%), whose
-    state is a fixed few KB per group.
-    Tests pin the exact path; the approx path is asserted within
-    tolerance."""
-    distinct_ips = (
-        F.approx_count_distinct("ip")
-        if approx_distinct
-        else F.size(F.collect_set("ip")).cast("long")
-    )
+    memory, fine; from ~10^7 distinct ips in one category the count
+    should be swapped for HyperLogLog++ (``F.approx_count_distinct``,
+    default rsd 5%), whose state is a fixed few KB per group."""
     totals = df.groupBy("category").agg(
         F.count(F.lit(1)).alias("row_count"),
         F.count(F.when(F.col("status_code") >= 400, 1)).alias("error_count"),
-        distinct_ips.alias("unique_ips"),
+        F.size(F.collect_set("ip")).cast("long").alias("unique_ips"),
         F.coalesce(F.sum("response_size_bytes"), F.lit(0)).alias("bytes_total"),
         F.coalesce(
             _round_java(F.avg(F.when(F.col("response_time_ms") > 0, F.col("response_time_ms")))),

@@ -39,9 +39,10 @@ from logparser_spark.sources.sequences import read_raw_sequences
 from logparser_spark.sources.sinks import (
     MultiSinkWriter,
     category_counts,
-    chunk_files,
     fold_path,
+    replace_parquet,
     state_path,
+    summary_path,
 )
 
 
@@ -78,6 +79,10 @@ def load_chunk(
     file and rename, so every committed chunk has one;
     ``run_aggregates`` merges them. A crash between the two leaves a
     state the rollback removes.
+
+    The data tree is globbed once, by the rollback (only a glob finds a
+    crashed attempt's files); the footer walk and the state build take
+    the file list the write returns.
     """
     writer = MultiSinkWriter(manifest.root)
     writer.remove_chunk(chunk_id)
@@ -93,14 +98,14 @@ def load_chunk(
     # lineage. One footer walk serves the counts and the per-partition
     # lineage.
     obs = Observation(chunk_id)
-    writer.write_chunk(routed.observe(obs, F.count(F.lit(1)).alias("_rows")), chunk_id)
+    files = writer.write_chunk(routed.observe(obs, F.count(F.lit(1)).alias("_rows")), chunk_id)
 
     observed_rows = obs.get["_rows"]
-    partitions = writer.partition_metrics(chunk_id)
+    partitions = writer.footer_metrics(files)
     rows, cat_counts = category_counts(partitions)
     dt = _time.monotonic() - t0
     t_state = _time.monotonic()
-    state = summary_state.chunk_state(chunk_files(manifest.root, chunk_id))
+    state = summary_state.chunk_state(files)
     covered = summary_state.rows_covered(state)
     if covered != rows:
         # the state must cover exactly the rows committed for the
@@ -110,10 +115,7 @@ def load_chunk(
             f"summary state of {chunk_id} covers {covered} rows of the "
             f"{rows} its footers count"
         )
-    path = state_path(manifest.root, chunk_id)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    pq.write_table(state, path + ".tmp")
-    os.replace(path + ".tmp", path)
+    replace_parquet(state_path(manifest.root, chunk_id), state)
     state_sec = _time.monotonic() - t_state
     manifest.commit_chunk(
         {
@@ -154,7 +156,6 @@ def run_pipeline(
     input_path: str,
     out_root: str,
     n_chunks: int = 1,
-    fail_after_chunk: int | None = None,
     progress: bool = False,
     job_group: str | None = None,
     compact_after: bool = False,
@@ -169,10 +170,6 @@ def run_pipeline(
     partition is bin-packed and the rewrite recorded in the same
     manifest. Off by default: a write-heavy ingest schedule compacts on
     its own cadence instead of per load.
-
-    ``fail_after_chunk`` is a test hook simulating a crash between a
-    chunk's sink commit and nothing else (the manifest records it, so
-    resume continues with the next chunk).
 
     ``progress=True`` samples live per-stage task progress into
     ``<out_root>/progress.jsonl`` and runs every job under a job group
@@ -218,8 +215,6 @@ def run_pipeline(
             total_rows += load_chunk(
                 spark, raw, chunk_id, manifest, {"input_files": inputs}
             )
-            if fail_after_chunk is not None and i >= fail_after_chunk:
-                raise RuntimeError(f"injected failure after {chunk_id}")
 
         out = {
             "chunks": len(chunks),
@@ -262,8 +257,8 @@ def _fold(out_root: str, committed: list[str]):
 
 def run_aggregates(spark: SparkSession, out_root: str) -> dict[str, int]:
     """The post-load aggregate stage (C2/C3 analog): seven summary
-    tables published under <root>/summary/<name>/. Returns each table's
-    published row count.
+    tables published as ``<root>/summary/<name>.parquet``. Returns each
+    table's published row count.
 
     The tables are ``summary_state.merge_states`` of the states that
     ``load_chunk`` wrote for the committed load chunks, merged with
@@ -276,21 +271,23 @@ def run_aggregates(spark: SparkSession, out_root: str) -> dict[str, int]:
     The merge's cost grows with the states it reads, so once
     ``summary_state.FOLD_EVERY`` chunks are not yet folded, they are
     folded with the previous fold into ``<root>/state/_folded.parquet``
-    (temp file and rename; the chunk ids it covers are in its schema
-    metadata), and later publishes read that fold plus the chunks after
-    it. The chunks' own states stay, so a fold that names a chunk the
-    manifest does not hold is ignored and their states are merged
-    instead.
+    (the chunk ids it covers are in its schema metadata), and later
+    publishes read that fold plus the chunks after it. The chunks' own
+    states stay, so a fold that names a chunk the manifest does not hold
+    is ignored and their states are merged instead.
 
     Each table is written by pyarrow as exactly ONE parquet file holding
-    its rows in its operator's canonical order. That is the contract the
-    API fast path relies on: it reads the file back with pyarrow and
+    its rows in its operator's canonical order, whole to a ``.tmp`` file
+    and renamed over the previous one (``sinks.replace_parquet``), so a
+    reader finds the old table or the new one, never none. Its row count
+    is the footer's ``num_rows``; its schema metadata holds
+    ``exhaustive`` (true when the table holds every distinct key: not a
+    top list, or a top list shorter than its cap). That is the contract
+    the API fast path relies on: it reads the file back with pyarrow and
     serves it as a local relation — no Spark job, no re-sort. The
     username x status x day ``aggregates.daily_rollup`` is not published: no
     endpoint serves it.
     """
-    import shutil as _shutil
-
     done = Manifest(out_root).completed_chunks()
     loads = [c for c, rec in done.items() if rec.get("kind") != "compaction"]
     folded, covered = _fold(out_root, loads)
@@ -299,35 +296,14 @@ def run_aggregates(spark: SparkSession, out_root: str) -> dict[str, int]:
     if len(fresh) >= summary_state.FOLD_EVERY:
         # the new fold covers every committed load chunk
         states = [summary_state.fold_states(states)]
-        path = fold_path(out_root)
-        meta = {"chunks": json.dumps(loads)}
-        pq.write_table(states[0].replace_schema_metadata(meta), path + ".tmp")
-        os.replace(path + ".tmp", path)
+        replace_parquet(fold_path(out_root), states[0], chunks=loads)
     tables = summary_state.merge_states(states)
-
-    def publish(name: str, table) -> int:
-        """Publish one summary ATOMICALLY: write to a _tmp_ dir, put
-        the row-count/commit marker (_meta.json) INSIDE it, then swap
-        via rename. A crash mid-write leaves either the old committed
-        dir or no dir (API falls back to live aggregation) — never a
-        partial dir a fast path would serve silently-wrong results
-        from."""
-        tmp = os.path.join(out_root, "summary", f"_tmp_{name}")
-        final = os.path.join(out_root, "summary", name)
-        _shutil.rmtree(tmp, ignore_errors=True)  # crashed attempt's leftover
-        os.makedirs(tmp)
-        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+    for name, table in tables.items():
         # a top list SHORTER than its cap saw every distinct key, so the
-        # API fast path can serve ANY k from it ("exhaustive")
+        # API fast path can serve ANY k from it
         cap = summary_state.K_CAPS.get(name)
-        meta = {"rows": table.num_rows, "exhaustive": cap is None or table.num_rows < cap}
-        with open(os.path.join(tmp, "_meta.json"), "w") as fh:
-            json.dump(meta, fh)
-        _shutil.rmtree(final, ignore_errors=True)
-        os.rename(tmp, final)
-        return table.num_rows
-
-    rows = {name: publish(name, table) for name, table in tables.items()}
+        exhaustive = cap is None or table.num_rows < cap
+        replace_parquet(summary_path(out_root, name), table, exhaustive=exhaustive)
     # C4: summaries republished — evict live response caches
     invalidate_registered()
-    return rows
+    return {name: table.num_rows for name, table in tables.items()}

@@ -16,6 +16,14 @@ Sink layout (one logical table, five logical sinks):
     <root>/state/_folded.parquet      (the states of many committed
                                        chunks folded into one, written
                                        by the publish)
+    <root>/summary/<name>.parquet     (one published summary table,
+                                       plans.pipeline.run_aggregates)
+
+Every file under ``state/`` and ``summary/`` is written whole to
+``<path>.tmp`` and renamed over ``<path>`` (``replace_parquet``): a
+reader opens the old file or the new one, never a partial one and never
+none, and the facts a reader needs about it (the fold's chunk ids, a
+summary's ``exhaustive`` flag) ride in its footer's key-value metadata.
 
 Routing by ``category`` is a *partition column*, so "one sink table per
 category" is realized as partition subtrees: a single write pass fans
@@ -48,10 +56,13 @@ from __future__ import annotations
 
 import contextlib
 import glob
+import json
 import os
 import re
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -122,17 +133,37 @@ def fold_path(root: str) -> str:
     return os.path.join(root, "state", "_folded.parquet")
 
 
+def summary_path(root: str, name: str) -> str:
+    """Where the publish puts summary table ``name`` under sink ``root``."""
+    return os.path.join(root, "summary", f"{name}.parquet")
+
+
+def replace_parquet(path: str, table: pa.Table, **facts) -> None:
+    """Write ``table`` as the one parquet file at ``path``: whole to
+    ``<path>.tmp``, then renamed over ``path``, so a reader opens the
+    old file or the new one, never a partial one. Each of ``facts`` is
+    stored JSON-encoded in the file's schema key-value metadata (read it
+    back with ``json.loads(schema_arrow.metadata[key])``). A crash
+    before the rename leaves at most the ``.tmp`` file, which the next
+    write overwrites."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    table = table.replace_schema_metadata({k: json.dumps(v) for k, v in facts.items()})
+    pq.write_table(table, path + ".tmp")
+    os.replace(path + ".tmp", path)
+
+
 class MultiSinkWriter:
     def __init__(self, root: str):
         self.root = root
         self.data_dir = os.path.join(root, "data")
         self.staging_root = os.path.join(root, "_staging")
 
-    def write_chunk(self, df: DataFrame, chunk_id: str) -> int:
-        """Write one chunk of routed rows; returns the number of FILES
-        promoted. Row counts come from the footers
-        (``partition_metrics``), because task-side counters can
-        overcount on stage reattempts.
+    def write_chunk(self, df: DataFrame, chunk_id: str) -> list[str]:
+        """Write one chunk of routed rows; returns the paths of the files
+        promoted, so the caller's footer walk and state build need no
+        glob of the data tree. Row counts come from the footers
+        (``footer_metrics``), because task-side counters can overcount
+        on stage reattempts.
 
         df must carry ``category`` and ``time`` columns; ``day`` is
         derived here so the partition expression lives in one place.
@@ -156,9 +187,10 @@ class MultiSinkWriter:
         shutil.rmtree(staged, ignore_errors=True)
         return moved
 
-    def _promote(self, staged: str, chunk_id: str) -> int:
-        """Atomically rename staged files into the final tree."""
-        n = 0
+    def _promote(self, staged: str, chunk_id: str) -> list[str]:
+        """Atomically rename staged files into the final tree; returns
+        their final paths."""
+        moved = []
         for src in glob.glob(os.path.join(staged, "**", "*.parquet"), recursive=True):
             rel = os.path.relpath(src, staged)
             part_dir = os.path.dirname(rel)
@@ -166,8 +198,8 @@ class MultiSinkWriter:
             os.makedirs(dst_dir, exist_ok=True)
             dst = os.path.join(dst_dir, f"{chunk_id}-{os.path.basename(src)}")
             os.replace(src, dst)
-            n += 1
-        return n
+            moved.append(dst)
+        return moved
 
     def exact_chunk_counts(self, chunk_id: str) -> tuple[int, dict[str, int]]:
         """Exact (total, per-category) row counts of a promoted chunk,
@@ -177,8 +209,14 @@ class MultiSinkWriter:
         return category_counts(self.partition_metrics(chunk_id))
 
     def partition_metrics(self, chunk_id: str) -> dict[str, dict]:
-        """Per-partition-directory (rows, bytes, files, watermark) for
-        one chunk — footer/stat metadata only, no data pages read.
+        """``footer_metrics`` of the promoted files of ``chunk_id``,
+        found by a glob of the data tree."""
+        return self.footer_metrics(chunk_files(self.root, chunk_id))
+
+    def footer_metrics(self, files: list[str]) -> dict[str, dict]:
+        """Per-partition-directory (rows, bytes, files, watermark) of
+        one chunk's data ``files`` — footer/stat metadata only, no data
+        pages read.
         Recorded into the chunk's manifest entry as the per-partition
         lineage the north star asks for: the row/byte counts feed skew
         diagnostics (a partition dir with 100x the rows of its siblings
@@ -187,7 +225,7 @@ class MultiSinkWriter:
         the freshness cursor an incremental consumer resumes from."""
         out: dict[str, dict] = {}
         keys: dict[str, tuple] = {}  # partition -> comparison key of its max
-        for f in chunk_files(self.root, chunk_id):
+        for f in files:
             part = os.path.dirname(os.path.relpath(f, self.data_dir))
             rec = out.setdefault(
                 part, {"rows": 0, "bytes": 0, "files": 0, "watermark": None}
@@ -222,7 +260,7 @@ class MultiSinkWriter:
 
 
 def category_counts(parts: dict[str, dict]) -> tuple[int, dict[str, int]]:
-    """(total, per-category) rows of a chunk's ``partition_metrics``."""
+    """(total, per-category) rows of a chunk's ``footer_metrics``."""
     per_cat: dict[str, int] = {}
     for name, rec in parts.items():
         cat = next(
@@ -236,9 +274,7 @@ def category_counts(parts: dict[str, dict]) -> tuple[int, dict[str, int]]:
 def footer_row_count(paths) -> int:
     """Sum parquet footer row counts — exact, metadata-only, no Spark
     job. The one shared implementation behind every footer-count use
-    (chunk counts, API fast-path fallback)."""
-    import pyarrow.parquet as pq
-
+    (compaction's row check)."""
     return sum(pq.ParquetFile(f).metadata.num_rows for f in paths)
 
 
@@ -254,8 +290,6 @@ def _footer_stats(path: str, time_col: str) -> tuple[int, tuple | None]:
     foreign writer may omit them — a missing watermark must degrade to
     "unknown", never to a wrong time)."""
     import datetime as _dt
-
-    import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
     # column paths from the first row group, not ``md.schema``: that
@@ -297,7 +331,6 @@ def footer_schema(path: str) -> StructType:
     footer-schema use (``read_sink``, compaction rewrites).
     ``ParquetFile.schema_arrow`` leaves no cyclic garbage behind, unlike
     ``pq.read_schema``."""
-    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
     return from_arrow_schema(pq.ParquetFile(path).schema_arrow)

@@ -122,3 +122,17 @@ def plan_nodes():
             yield from walk(kid)
 
     return walk
+
+
+@pytest.fixture
+def publish_summary():
+    """``publish_summary(root, name, table, exhaustive=True)``: publish a
+    hand-made ``table`` as summary ``name`` under sink ``root`` through
+    the library's own write, the one ``run_aggregates`` uses, so a test
+    cannot drift from the published layout."""
+    from logparser_spark.sources.sinks import replace_parquet, summary_path
+
+    def publish(root, name, table, exhaustive=True):
+        replace_parquet(summary_path(str(root), name), table, exhaustive=exhaustive)
+
+    return publish

@@ -121,19 +121,19 @@ def test_combined_tops_matches_individual_endpoints(api):
 
 def test_summary_rows_recorded_no_spark_count(api, spark_jobs):
     """Fast-path eligibility reads the row count the aggregate stage
-    recorded in the summary's _meta.json, not a per-call Spark count():
-    it equals the published file's footer count, and no job runs."""
-    import glob
-    import json
-    import os
+    recorded in the summary file's footer, not a per-call Spark count():
+    a k up to the footer's count is served, one above it (on this
+    truncated top list) is not, and no job runs."""
+    from logparser_spark.sources.sinks import footer_row_count, summary_path
 
-    from logparser_spark.sources.sinks import footer_row_count
-
-    d = os.path.join(api.root, "summary", "top_urls")
-    rows, jobs = spark_jobs(lambda: api._summary_rows("top_urls"))
+    rows = footer_row_count([summary_path(api.root, "top_urls")])
+    assert rows > 0
+    served, jobs = spark_jobs(lambda: api._summary_table("top_urls", k=rows))
     assert jobs == 0
-    assert rows == json.load(open(os.path.join(d, "_meta.json")))["rows"]
-    assert rows == footer_row_count(glob.glob(os.path.join(d, "*.parquet"))) > 0
+    assert served.num_rows == rows
+    beyond, jobs = spark_jobs(lambda: api._summary_table("top_urls", k=rows + 1))
+    assert jobs == 0
+    assert beyond is None
 
 
 def test_empty_string_filter_keeps_fast_path(api):
@@ -151,61 +151,138 @@ def test_top_k_fast_path_serves_any_k_when_exhaustive(spark, tiny_input, tmp_pat
     requested k (no permanent live-scan penalty on small vocabularies).
     The cap is raised above the fixture's url count so the published
     ``top_urls`` is exhaustive."""
+    import pyarrow.parquet as pq
+
     from logparser_spark.operators import aggregates as agg
     from logparser_spark.operators import summary_state
+    from logparser_spark.sources.sinks import summary_path
 
     monkeypatch.setitem(summary_state.K_CAPS, "top_urls", 1000)
     out = str(tmp_path / "sink")
     run_pipeline(spark, tiny_input, out, n_chunks=1)
     run_aggregates(spark, out)
     api = LogPipelineAPI(spark, out)
-    meta = api._summary_meta("top_urls")
-    assert meta is not None and meta["exhaustive"] is True
+    published = pq.ParquetFile(summary_path(out, "top_urls"))
+    assert published.schema_arrow.metadata[b"exhaustive"] == b"true"
     assert api._summary_table("top_urls", k=10**6) is not None
     fast = [tuple(r) for r in api.get_top_urls(k=10**6).collect()]
     live = [tuple(r) for r in agg.top_urls(api._facts(None), k=10**6).collect()]
-    assert fast == live and len(fast) == meta["rows"]
+    assert fast == live and len(fast) == published.metadata.num_rows
 
 
 def test_partial_summary_dir_falls_back_to_live(api):
-    """A summary dir without its commit marker (a crashed aggregate
-    stage's partial overwrite) must be treated as absent — the call
-    falls back to live aggregation, never serves a partial table."""
+    """A crashed publish leaves at most a partial ``.tmp`` file beside
+    the summary's path: with no committed file at the path, the
+    summary is absent and the call falls back to live aggregation, never
+    serves the partial table."""
     import os
     import shutil
 
-    marker = os.path.join(api.root, "summary", "top_users", "_meta.json")
-    bak = marker + ".bak"
-    shutil.move(marker, bak)
+    from logparser_spark.sources.sinks import summary_path
+
+    path = summary_path(api.root, "top_users")
+    with open(path, "rb") as fh:
+        data = fh.read()
+    bak = path + ".bak"
+    shutil.move(path, bak)
     try:
+        with open(path + ".tmp", "wb") as fh:
+            fh.write(data[: len(data) // 2])
         assert api._summary_table("top_users") is None
         live = [tuple(r) for r in api.get_top_users(k=10).collect()]
     finally:
-        shutil.move(bak, marker)
+        os.remove(path + ".tmp")
+        shutil.move(bak, path)
     fast = [tuple(r) for r in api.get_top_users(k=10).collect()]
     assert live == fast
 
 
-def test_summary_fast_path_eligibility(spark, tmp_path):
-    """Deterministic pin of fast-path eligibility: rows >= k OR the
-    summary is exhaustive (never truncated); no marker -> ineligible;
-    the marker is read ONCE and a dir vanishing under a concurrent
-    republish yields live-fallback (None), never a crash."""
+def test_summary_fast_path_eligibility(spark, tmp_path, publish_summary):
+    """Deterministic pin of fast-path eligibility: rows (the footer's
+    count) >= k OR the summary is exhaustive (never truncated); no
+    published file -> ineligible; a file vanishing under the read
+    yields live-fallback (None), never a crash."""
+    import os
+
+    import pyarrow as pa
+
+    from logparser_spark.sources.sinks import summary_path
+
     api2 = LogPipelineAPI(spark, str(tmp_path))
-    d = tmp_path / "summary" / "top_urls"
-    spark.createDataFrame(
-        [("u", 1)], "url string, request_count long"
-    ).coalesce(1).write.parquet(str(d))
-    assert api2._summary_table("top_urls", k=1) is None  # no marker
-    (d / "_meta.json").write_text('{"rows": 60, "exhaustive": true}')
+    table = pa.table({"url": ["u", "v", "w"], "request_count": pa.array([3, 2, 1], pa.int64())})
+    assert api2._summary_table("top_urls", k=1) is None  # nothing published
+    publish_summary(tmp_path, "top_urls", table, exhaustive=True)
     assert api2._summary_table("top_urls", k=10**6) is not None
-    (d / "_meta.json").write_text('{"rows": 100, "exhaustive": false}')
-    assert api2._summary_table("top_urls", k=100) is not None
-    assert api2._summary_table("top_urls", k=101) is None
-    # TOCTOU: marker passes but the data files are gone mid-republish
-    for f in d.glob("*.parquet"):
-        f.unlink()
-    assert api2._summary_table("top_urls", k=10) is None
+    publish_summary(tmp_path, "top_urls", table, exhaustive=False)
+    assert api2._summary_table("top_urls", k=3) is not None
+    assert api2._summary_table("top_urls", k=4) is None
+    # the file is gone between publishes
+    os.remove(summary_path(str(tmp_path), "top_urls"))
+    assert api2._summary_table("top_urls", k=1) is None
+
+
+def test_reader_during_publish_sees_old_or_new_table(api, tmp_path, monkeypatch):
+    """A reader that looks up a summary while a publish is under way
+    gets the table published before or the one being published, never
+    None: at every rename of the publish (the point between a file's
+    write and its commit) a read of ``top_urls`` is served. The two
+    publishes differ by ``top_urls``' cap, so both versions show."""
+    import os
+    import shutil
+
+    from logparser_spark.operators import summary_state
+
+    root = str(tmp_path / "sink")
+    shutil.copytree(api.root, root)
+    reader = LogPipelineAPI(api.spark, root)
+    monkeypatch.setitem(summary_state.K_CAPS, "top_urls", 5)
+    run_aggregates(api.spark, root)
+    old = reader._summary_table("top_urls")
+    seen = []
+    renames = {name: getattr(os, name) for name in ("replace", "rename")}
+
+    def reading(name):
+        def rename(src, dst, *args, **kwargs):
+            seen.append(reader._summary_table("top_urls"))
+            return renames[name](src, dst, *args, **kwargs)
+
+        return rename
+
+    for name in renames:
+        monkeypatch.setattr(os, name, reading(name))
+    monkeypatch.setitem(summary_state.K_CAPS, "top_urls", 10)
+    run_aggregates(api.spark, root)
+    monkeypatch.undo()
+    new = reader._summary_table("top_urls")
+    assert old.num_rows == 5 and new.num_rows == 10
+    assert len(seen) >= 7
+    assert all(t is not None for t in seen)
+    assert all(t.equals(old) or t.equals(new) for t in seen)
+    assert any(t.equals(old) for t in seen)
+
+
+def test_truncated_summary_falls_back_to_live(api, jvm_calls):
+    """A summary file cut short (a torn copy, a full disk) is not
+    served: the read returns None and the call goes to live
+    aggregation, which returns the rows the whole file holds."""
+    from logparser_spark.cache import TTLResultCache
+    from logparser_spark.sources.sinks import summary_path
+
+    path = summary_path(api.root, "top_urls")
+    published = api.collect_cached("top_urls", k=10)
+    with open(path, "rb") as fh:
+        data = fh.read()
+    try:
+        with open(path, "wb") as fh:
+            fh.write(data[: len(data) - 16])
+        assert api._summary_table("top_urls", k=10) is None
+        fresh = LogPipelineAPI(api.spark, api.root, cache=TTLResultCache())
+        live, calls = jvm_calls(lambda: fresh.collect_cached("top_urls", k=10))
+    finally:
+        with open(path, "wb") as fh:
+            fh.write(data)
+    assert calls > 0
+    assert [tuple(r) for r in live] == [tuple(r) for r in published]
 
 
 # the five summary endpoints and the parameters the fast path serves
@@ -287,30 +364,19 @@ def test_fast_path_rows_equal_live(api):
         assert got and got == [tuple(r) for r in live.collect()], name
 
 
-def test_fast_path_dataframe_survives_republish(spark, tmp_path, spark_jobs):
+def test_fast_path_dataframe_survives_republish(spark, tmp_path, spark_jobs, publish_summary):
     """The fast path reads eagerly, so no race window is left once it
-    returns: after the summary dir is deleted and republished with
-    other rows, collect() on the earlier DataFrame still serves the
-    snapshot it read (with no Spark job), and a new call sees the
-    republished rows."""
-    import json
-    import shutil
-
+    returns: after the summary is republished with other rows,
+    collect() on the earlier DataFrame still serves the snapshot it read
+    (with no Spark job), and a new call sees the republished rows."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     api2 = LogPipelineAPI(spark, str(tmp_path))
-    d = tmp_path / "summary" / "top_urls"
 
     def publish(rows):
-        shutil.rmtree(d, ignore_errors=True)
-        d.mkdir(parents=True)
         urls, counts = zip(*rows)
-        pq.write_table(
-            pa.table({"url": list(urls), "request_count": list(counts)}),
-            str(d / "part-00000.parquet"),
-        )
-        (d / "_meta.json").write_text(json.dumps({"rows": len(rows), "exhaustive": True}))
+        table = pa.table({"url": list(urls), "request_count": list(counts)})
+        publish_summary(tmp_path, "top_urls", table)
 
     publish([("/a", 3), ("/b", 1)])
     df = api2.get_top_urls(k=10)
@@ -345,20 +411,7 @@ def test_summary_rows_equal_dataframe_collect(api):
         _assert_same_rows(fresh.collect_cached(endpoint, **params), want, (endpoint, params))
 
 
-def _publish(root, name, table, exhaustive=True):
-    """Publish ``table`` as a committed summary the way the aggregate
-    stage does: one parquet file plus the _meta.json marker."""
-    import json
-
-    import pyarrow.parquet as pq
-
-    d = root / "summary" / name
-    d.mkdir(parents=True)
-    pq.write_table(table, str(d / "part-00000.parquet"))
-    (d / "_meta.json").write_text(json.dumps({"rows": table.num_rows, "exhaustive": exhaustive}))
-
-
-def test_summary_rows_match_spark_semantics_on_edges(spark, tmp_path, jvm_calls):
+def test_summary_rows_match_spark_semantics_on_edges(spark, tmp_path, jvm_calls, publish_summary):
     """Over hand-published summaries (no sink exists, so live
     aggregation would fail): an agg_sink_totals holding a null and a
     quarantine category serves what Spark's ``category != 'quarantine'``
@@ -387,8 +440,8 @@ def test_summary_rows_match_spark_semantics_on_edges(spark, tmp_path, jvm_calls)
             "last_access_us": pa.array([7, 8, 9], pa.int64()),
         }
     )
-    _publish(tmp_path, "agg_sink_totals", totals)
-    _publish(tmp_path, "top_urls", urls)
+    publish_summary(tmp_path, "agg_sink_totals", totals)
+    publish_summary(tmp_path, "top_urls", urls)
     api2 = LogPipelineAPI(spark, str(tmp_path))
 
     stats, calls = jvm_calls(lambda: api2.collect_cached("statistics"))
@@ -407,31 +460,25 @@ def test_summary_rows_match_spark_semantics_on_edges(spark, tmp_path, jvm_calls)
 
 
 def test_summary_without_data_files_falls_back_to_live(api, jvm_calls):
-    """A committed marker whose data files were removed (a republish
-    swapping the dir under the read) must not serve an empty or torn
-    answer: the call goes to live aggregation, which crosses into the
-    JVM and returns the same rows the published file holds."""
-    import os
+    """A summary whose file was removed (a sink cleared under the read)
+    must not serve an empty or torn answer: the call goes to live
+    aggregation, which crosses into the JVM and returns the same rows
+    the published file holds."""
     import shutil
 
     from logparser_spark.cache import TTLResultCache
+    from logparser_spark.sources.sinks import summary_path
 
-    d = os.path.join(api.root, "summary", "top_users")
+    path = summary_path(api.root, "top_users")
     published = api.collect_cached("top_users", k=10)
-    aside = d + ".files"
-    os.makedirs(aside)
-    files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-    for f in files:
-        shutil.move(os.path.join(d, f), aside)
+    aside = path + ".aside"
+    shutil.move(path, aside)
     try:
-        assert os.path.exists(os.path.join(d, "_meta.json"))
         assert api._summary_table("top_users", k=10) is None
         fresh = LogPipelineAPI(api.spark, api.root, cache=TTLResultCache())
         live, calls = jvm_calls(lambda: fresh.collect_cached("top_users", k=10))
     finally:
-        for f in files:
-            shutil.move(os.path.join(aside, f), d)
-        os.rmdir(aside)
+        shutil.move(aside, path)
     assert calls > 0
     assert [tuple(r) for r in live] == [tuple(r) for r in published]
 

@@ -18,7 +18,9 @@ from logparser_spark.sources.sinks import (
     chunk_files,
     fold_path,
     footer_row_count,
+    replace_parquet,
     state_path,
+    summary_path,
 )
 
 ROWS = [
@@ -56,9 +58,10 @@ def written(spark, tmp_path_factory):
 
 def test_write_chunk_promotes_every_file_under_its_chunk_prefix(written):
     w, moved = written
-    for c, n in moved.items():
+    for c, promoted in moved.items():
         files = chunk_files(w.root, c)
-        assert n == len(files) > 0
+        assert len(promoted) == len(files) > 0
+        assert sorted(promoted) == sorted(files)
         for f in files:
             assert os.path.basename(f).startswith(f"{c}-part-")
             rel = os.path.relpath(f, w.data_dir).split(os.sep)
@@ -78,9 +81,9 @@ def test_write_chunk_discards_a_crashed_attempts_staging(spark, tmp_path):
     os.makedirs(stale)
     pq.write_table(pa.table({"doc_id": ["stale"]}), os.path.join(stale, "part-stale.parquet"))
 
-    n = w.write_chunk(_frame(spark), "chunk-00000")
+    promoted = w.write_chunk(_frame(spark), "chunk-00000")
     files = chunk_files(w.root, "chunk-00000")
-    assert n == len(files)
+    assert len(promoted) == len(files)
     assert not any("stale" in f for f in files)
     assert footer_row_count(files) == len(ROWS)
 
@@ -283,3 +286,20 @@ def test_footer_row_count_sums_files(tmp_path):
     ]
     assert footer_row_count(paths) == 10
     assert footer_row_count([]) == 0
+
+
+def test_replace_parquet_commits_one_file_with_its_facts(tmp_path):
+    """The temp-file-and-rename write leaves exactly the one file at its
+    path, replaced whole on a rewrite, with each fact JSON-encoded in its
+    schema metadata; a crashed write's ``.tmp`` leftover is overwritten."""
+    path = summary_path(str(tmp_path), "top_urls")
+    assert path == os.path.join(str(tmp_path), "summary", "top_urls.parquet")
+    os.makedirs(os.path.dirname(path))
+    with open(path + ".tmp", "wb") as fh:
+        fh.write(b"torn")
+    replace_parquet(path, pa.table({"x": [1, 2]}), exhaustive=True)
+    replace_parquet(path, pa.table({"x": [3]}), exhaustive=False, chunks=["c-1"])
+    assert os.listdir(os.path.dirname(path)) == ["top_urls.parquet"]
+    f = pq.ParquetFile(path)
+    assert f.read().column("x").to_pylist() == [3]
+    assert f.schema_arrow.metadata == {b"exhaustive": b"false", b"chunks": b'["c-1"]'}

@@ -17,7 +17,7 @@ from logparser_spark.plans.checkpoint import Manifest
 from logparser_spark.plans.pipeline import build_routed, run_aggregates, run_pipeline
 from logparser_spark.sources.compact import compact_sinks
 from logparser_spark.sources.sequences import read_raw_sequences
-from logparser_spark.sources.sinks import footer_row_count, read_sink
+from logparser_spark.sources.sinks import footer_row_count, read_sink, summary_path
 from logparser_spark.streaming.stream_pipeline import (
     read_sequence_stream,
     start_stream_load,
@@ -76,7 +76,7 @@ def test_stream_publishes_batch_summaries(spark, tiny_input, stream_out, tmp_pat
     run_aggregates(spark, stream_out)
     for name in ("agg_hourly_hist", "agg_sink_totals"):
         got, want = (
-            pq.read_table(os.path.join(root, "summary", name, "part-00000.parquet"))
+            pq.read_table(summary_path(root, name))
             for root in (stream_out, batch_out)
         )
         assert got.num_rows > 0, name
